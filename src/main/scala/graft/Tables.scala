@@ -498,9 +498,9 @@ object Policy {
   // DECIMAL(18,4) × DECIMAL(18,4) product runs through
   // java.math.BigDecimal (result precision 38 is past the compact-long
   // ceiling) and each double→decimal cast allocates — measured 1.27 s
-  // vs 0.48 s on q09's 600k-row aggregate job (R21Probe, 5-rep mins),
-  // and that allocation traffic is what a bandwidth-contended 32-thread
-  // box amplifies (the PERF_r20 q09/q101/q102/q103 anti-scaling
+  // vs 0.48 s on q09's 600k-row aggregate job (5-rep mins, recorded
+  // in OPTIMIZATION_r21.md), and that allocation traffic is what a
+  // bandwidth-contended 32-thread box amplifies (the PERF_r20 q09/q101/q102/q103 anti-scaling
   // cluster). Fixture money columns are 2-DECIMAL by generator
   // contract — MoneyUnitsSpec verifies EVERY money column at EVERY
   // shipped SF — so value·10⁴ lies within ~1e-6 of an integer:
@@ -510,9 +510,9 @@ object Policy {
   // integer.) Sums run over DECIMAL(38,0) integers — exact and
   // partition-order-free exactly like the decimal sums they replace,
   // compact-long-backed until 10¹⁸ — and ONE per-GROUP decimal
-  // division ((30,0)/(9,0) → (38,8), exact; R21Probe pins the typing)
-  // rescales before the SAME Dec4 HALF_UP cast and double conversion
-  // the old forms ended in. Equality with the decimal forms is pinned
+  // division ((30,0)/(9,0) → (38,8), exact; the typing is recorded in
+  // OPTIMIZATION_r21.md) rescales before the SAME Dec4 HALF_UP cast
+  // and double conversion the old forms ended in. Equality with the decimal forms is pinned
   // by MoneyUnitsSpec (per-value u4 ≡ dec unscaled on the real
   // fixtures; boundary-sum differentials for the rescale), and the
   // oracle/golden gates verify every declared query end to end.

@@ -3,8 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 
 /** `dotq(a, b)` — exact int64 dot product of two float arrays under
   * fixed-point quantization at 10⁻⁶:

@@ -3,8 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 
 /** `l2q(a, b)` — exact int64 SQUARED EUCLIDEAN distance of two float
   * arrays under the same fixed-point quantization as `dotq`:

@@ -6,6 +6,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.lsm.Lsm._
+import graft.streaming.StreamingJobs
 
 /** Q22 + the LLM-training-data text operators over `documents`
   * (doc_id, text, lang, source, n_chars — FIXTURES.md §1).
@@ -3007,7 +3009,7 @@ object DocQueries {
     * (overwrite — idempotent). ONE definition for q110c's append,
     * q110e's pre-compaction delta and q110d's per-micro-batch segment,
     * so the append payload cannot drift between the three (the
-    * batchFunnel rationale applied to the write path; review finding).
+    * twoStepCycle rationale applied to the write path; review finding).
     * Returns the localCheckpointed near set (the funnel's input).
     * `prebuiltSh` lets a caller that already materialized the batch's
     * (doc_id, shingle) relation (q122's one-shingling capstone) pass
@@ -3057,40 +3059,44 @@ object DocQueries {
   private val q110c = QueryDef(
     "q110c_index_append_cycle",
     (s, dir) => {
-      import s.implicits._
-      val (iBands, iSets) = Tables.minhashIndexBase(s, dir)
-      val d = docs(s, dir)
-      val b1 = d.filter(q110Mod === 0)
-      val b2 = d.filter(q110Mod === 1)
-      // ---- ingest batch 1 vs the base index; kept batch-1 docs'
-      // bands/sets become the delta segment
+      // ---- batch 2 vs the UPDATED index (base ∪ delta) as it stands
       val (dBandsLoc, dSetsLoc) = q110cDeltaLocs(s, dir)
-      val near1 = ingestAndAppend(b1, iBands, iSets, dBandsLoc, dSetsLoc)
-      // ---- ingest batch 2 vs the UPDATED index (base ∪ delta) —
-      // fused batch-2 signature (round 21): one aggregation for bands
-      // + verify sets, the q110b rationale
-      val shB2 = shingleTable(b2, Nil)
-      val sig2 = fusedSigTable(shB2)
-      val near2 = indexDedupStep(shB2, sigBandRows(sig2),
-        Some(sig2.select(col("doc_id"), col("ss"), col("n"))),
-        iBands.select("doc_id", "band_idx", "band_val")
-          .union(s.read.parquet(dBandsLoc)
-            .select("doc_id", "band_idx", "band_val")),
-        iSets.select("doc_id", "ss", "n")
-          .union(s.read.parquet(dSetsLoc).select("doc_id", "ss", "n")))
-      batchFunnel(b1, near1, 1).union(batchFunnel(b2, near2, 2))
-        .select($"batch", $"source", $"batch_docs", $"near_dups",
-          $"kept_docs")
-        .orderBy($"batch", $"source")
+      twoStepCycle(s, dir, dBandsLoc, dSetsLoc)((bands, sets) => (bands, sets))
     },
     Some(q110cOracleSql))
 
-  /** dedupFunnel with the q110c/q110e two-step report's batch tag —
-    * ONE definition so the append-cycle and compaction reports cannot
-    * drift. */
-  private def batchFunnel(batch: DataFrame, near: DataFrame,
-      tag: Int): DataFrame =
-    dedupFunnel(batch, near).withColumn("batch", lit(tag.toLong))
+  /** The q110c/q110e two-step report: ingest batch 1 (mod 0) vs the
+    * base index, its kept docs' bands/sets becoming the delta segment
+    * at (dBandsLoc, dSetsLoc); then ingest batch 2 (mod 1) vs the index
+    * `index2` makes of base ∪ delta — fused batch-2 signature (round
+    * 21): one aggregation for bands + verify sets, the q110b
+    * rationale. ONE definition so the append-cycle and compaction
+    * reports cannot drift. */
+  private def twoStepCycle(s: SparkSession, dir: String, dBandsLoc: String,
+      dSetsLoc: String)
+      (index2: (DataFrame, DataFrame) => (DataFrame, DataFrame))
+      : DataFrame = {
+    val (iBands, iSets) = Tables.minhashIndexBase(s, dir)
+    val d = docs(s, dir)
+    val b1 = d.filter(q110Mod === 0)
+    val b2 = d.filter(q110Mod === 1)
+    val near1 = ingestAndAppend(b1, iBands, iSets, dBandsLoc, dSetsLoc)
+    val (bands2, sets2) = index2(
+      iBands.select("doc_id", "band_idx", "band_val")
+        .union(s.read.parquet(dBandsLoc)
+          .select("doc_id", "band_idx", "band_val")),
+      iSets.select("doc_id", "ss", "n")
+        .union(s.read.parquet(dSetsLoc).select("doc_id", "ss", "n")))
+    val shB2 = shingleTable(b2, Nil)
+    val sig2 = fusedSigTable(shB2)
+    val near2 = indexDedupStep(shB2, sigBandRows(sig2),
+      Some(sig2.select(col("doc_id"), col("ss"), col("n"))), bands2, sets2)
+    def tagged(b: DataFrame, near: DataFrame, tag: Long): DataFrame =
+      dedupFunnel(b, near).withColumn("batch", lit(tag))
+    tagged(b1, near1, 1L).union(tagged(b2, near2, 2L))
+      .select("batch", "source", "batch_docs", "near_dups", "kept_docs")
+      .orderBy("batch", "source")
+  }
 
   /** The two-step cycle computed relationally: near1 from the mod-0 vs
     * mod-2 band join, the updated index as mod-2 ∪ (mod-0 minus near1),
@@ -3199,37 +3205,40 @@ object DocQueries {
   // the index grows by exactly the admitted docs per batch. Fresh
   // sink/ckpt/delta dirs per run (Bench reps time the full replay,
   // like q79); plan consumers see only the sink read (q44 caveat).
+  /** The minhash index's two LSM relations (bands, verify sets) — ONE
+    * definition for q110d, q110f and the q122 capstone, so the dedup
+    * families cannot disagree on the index's shape. The fold dirs stay
+    * empty for a stream with folding off (q110d). */
+  private def minhashRels(baseBands: DataFrame, baseSets: DataFrame,
+      deltaBandsDir: String, deltaSetsDir: String,
+      foldBandsDir: String = "", foldSetsDir: String = "")
+      : Seq[LsmRelation] = Seq(
+    LsmRelation(baseBands, deltaBandsDir,
+      Seq("doc_id", "band_idx", "band_val"), foldBandsDir),
+    LsmRelation(baseSets, deltaSetsDir,
+      Seq("doc_id", "ss", "n"), foldSetsDir))
+
   /** One streaming ingest-dedup micro-batch — a pure function of
-    * (batchId, data): dedup vs base ∪ strictly-earlier deltas, append
-    * this batch's kept bands/sets as `batch=<id>`, write the funnel to
-    * the sink's `batch=<id>`. private[graft] for
-    * StreamIndexDedupSpec's redelivery law. */
-  private[graft] def streamDedupBatch(s: SparkSession, micro: DataFrame,
-      id: Long, baseBands: DataFrame, baseSets: DataFrame,
-      deltaBandsDir: String, deltaSetsDir: String, sinkDir: String,
-      crashBeforeSink: Long => Unit = _ => ()): Unit = {
+    * (batchId, disk state at batch start): dedup vs the minhash LSM
+    * state below `id` (Lsm.lsmBatch: base ∪ strictly-earlier deltas
+    * with folding off, the latest committed fold ∪ the tail past it
+    * under a cadence), append this batch's kept bands/sets as
+    * `batch=<id>`, fold at the cadence, write the funnel to the sink's
+    * `batch=<id>`. ONE kernel for q110d (k = None) and q110f; the
+    * dedup plan is recorded under "`planKey` batch=<id>". */
+  private def dedupBatch(s: SparkSession, micro: DataFrame, id: Long,
+      rels: Seq[LsmRelation], sinkDir: String, planKey: String,
+      k: Option[Int], crashBeforeSink: Long => Unit,
+      crashMidFold: Long => Unit): Unit = {
     // micro feeds three branches (shingles, kept anti-join, funnel):
     // pin it once so the file slice is read once
     val b = micro.localCheckpoint()
-    // EMPTY-TAIL ELISION (round 21, guide §2.4): when the listing
-    // proves no strictly-earlier segment exists (batch 0 of a fresh
-    // run), the base relation IS the index — skip the empty delta
-    // scan and the union. Same `batch < id` self-exclusion contract:
-    // a redelivered batch's own segment never qualifies either way.
-    def withPriorDelta(base: DataFrame, loc: String,
-        cols: Seq[String]): DataFrame =
-      if (!hasBatchIn(loc, Long.MinValue, id)) base
-      else base.union(s.read.parquet(loc).filter(col("batch") < id)
-        .select(cols.map(col): _*))
-    val near = ingestAndAppend(b,
-      withPriorDelta(
-        baseBands.select("doc_id", "band_idx", "band_val"),
-        deltaBandsDir, Seq("doc_id", "band_idx", "band_val")),
-      withPriorDelta(baseSets.select("doc_id", "ss", "n"),
-        deltaSetsDir, Seq("doc_id", "ss", "n")),
-      s"$deltaBandsDir/batch=$id", s"$deltaSetsDir/batch=$id",
-      graft.streaming.StreamingJobs.recordInnerPlan(
-        s"q110d_stream_index_dedup batch=$id", _))
+    val Seq(bands, sets) = rels
+    val near = lsmBatch(s, rels, id, k, () => crashMidFold(id)) {
+      case Seq(ib, is) => ingestAndAppend(b, ib, is,
+        s"${bands.deltaDir}/batch=$id", s"${sets.deltaDir}/batch=$id",
+        StreamingJobs.recordInnerPlan(s"$planKey batch=$id", _))
+    }
     // TORN-WRITE injection point (StreamIndexDedupSpec's crash law):
     // the worst at-least-once case is a kill AFTER the segment write
     // but BEFORE the sink write — the batch's delta exists, its commit
@@ -3239,55 +3248,58 @@ object DocQueries {
       .write.mode("overwrite").parquet(s"$sinkDir/batch=$id")
   }
 
+  /** q110d's micro-batch: dedupBatch with folding off. private[graft]
+    * for StreamIndexDedupSpec's redelivery law. */
+  private[graft] def streamDedupBatch(s: SparkSession, micro: DataFrame,
+      id: Long, baseBands: DataFrame, baseSets: DataFrame,
+      deltaBandsDir: String, deltaSetsDir: String, sinkDir: String,
+      crashBeforeSink: Long => Unit = _ => ()): Unit =
+    dedupBatch(s, micro, id,
+      minhashRels(baseBands, baseSets, deltaBandsDir, deltaSetsDir),
+      sinkDir, "q110d_stream_index_dedup", None, crashBeforeSink, _ => ())
+
   /** Run the full streaming ingest-dedup replay: drain the two-file
-    * replay through foreachBatch with AvailableNow. The `batch=-1`
-    * schema-seed writes are gone (round 21): batch 0's empty-tail
-    * read is elided by listing (hasBatchIn), so no seed segment —
-    * and no seed-write Spark job — is needed.
-    * private[graft] for StreamIndexDedupSpec. */
+    * replay through streamDedupBatch. No `batch=-1` schema seed is
+    * written: batch 0's empty-tail read is elided by listing
+    * (Lsm.hasBatchIn). private[graft] for StreamIndexDedupSpec. */
   private[graft] def runStreamIndexDedup(s: SparkSession, dir: String,
       replayDir: String, deltaBandsDir: String, deltaSetsDir: String,
       sinkDir: String, ckpt: String,
       crashBeforeSink: Long => Unit = _ => ()): Unit = {
     val (iBands, iSets) = Tables.minhashIndexBase(s, dir)
-    val q = graft.streaming.StreamingJobs.readDocsStream(s, replayDir)
-      .writeStream
-      .foreachBatch {
-        (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         id: Long) =>
-          streamDedupBatch(s, df, id, iBands, iSets,
-            deltaBandsDir, deltaSetsDir, sinkDir, crashBeforeSink)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.streaming.StreamingJobs.capturePlan(
-      "q110d_stream_index_dedup", q)
+    StreamingJobs.drain("q110d_stream_index_dedup", ckpt,
+        StreamingJobs.readDocsStream(s, replayDir)) { (df, id) =>
+      streamDedupBatch(s, df, id, iBands, iSets,
+        deltaBandsDir, deltaSetsDir, sinkDir, crashBeforeSink)
+    }
   }
 
-  /** Resolve the q110d sink change-log to the q110c report: each batch
-    * owns its `batch=<id>` partition, so the read is a union of the
-    * per-batch funnels with the partition column mapped to the
-    * report's 1-based batch tag. */
+  /** A change-log sink read: each batch owns its `batch=<id>`
+    * partition, so the read is a union of the per-batch rows with the
+    * partition column mapped to the report's 1-based batch tag — ONE
+    * definition for every streaming report. */
+  private def sinkLog(s: SparkSession, sinkDir: String,
+      cols: String*): DataFrame =
+    s.read.parquet(sinkDir).select(
+      (col("batch").cast(LongType) + 1).as("batch") +: cols.map(col): _*)
+
+  private val funnelCols = Seq("source", "batch_docs", "near_dups",
+    "kept_docs")
+
+  /** Resolve the q110d/q110f sink change-log to the q110c report. */
   private[graft] def streamDedupTable(s: SparkSession,
       sinkDir: String): DataFrame =
-    s.read.parquet(sinkDir)
-      .select((col("batch").cast(LongType) + 1).as("batch"),
-        col("source"), col("batch_docs"), col("near_dups"),
-        col("kept_docs"))
-      .orderBy(col("batch"), col("source"))
+    sinkLog(s, sinkDir, funnelCols: _*).orderBy(col("batch"), col("source"))
 
   private val q110d = QueryDef(
     "q110d_stream_index_dedup",
     (s, dir) => {
-      val replay = graft.streaming.StreamingJobs.docsReplayDir(s, dir)
+      val replay = StreamingJobs.docsReplayDir(s, dir)
       // Scratch-registered (round-15 ADVICE item 2): fresh per run so
       // the reps time the full replay, deleted by the harness once the
       // sink read is consumed
-      def tmp(tag: String): String = Scratch.dir(s"graft-q110d-$tag")
-      val (dBands, dSets, sink, ckpt) =
-        (tmp("dbands"), tmp("dsets"), tmp("sink"), tmp("ckpt"))
+      val Seq(dBands, dSets, sink, ckpt) =
+        Scratch.dirs("graft-q110d", "dbands", "dsets", "sink", "ckpt")
       runStreamIndexDedup(s, dir, replay, dBands, dSets, sink, ckpt)
       streamDedupTable(s, sink)
     },
@@ -3334,35 +3346,16 @@ object DocQueries {
   private val q110e = QueryDef(
     "q110e_index_compaction",
     (s, dir) => {
-      import s.implicits._
-      val (iBands, iSets) = Tables.minhashIndexBase(s, dir)
-      val d = docs(s, dir)
-      val b1 = d.filter(q110Mod === 0)
-      val b2 = d.filter(q110Mod === 1)
-      // ---- ingest batch 1 vs the base index (q110c's step 1), kept
-      // docs landing as this query's own delta segment
+      // q110c's step 1 lands in this query's own delta segment
       val (dBandsLoc, dSetsLoc) = q110eDeltaLocs(s, dir)
-      val near1 = ingestAndAppend(b1, iBands, iSets, dBandsLoc, dSetsLoc)
-      // ---- major compaction: fold base ∪ delta into a new base
-      val (cBandsLoc, cSetsLoc) = q110eCompactLocs(s, dir)
-      iBands.select("doc_id", "band_idx", "band_val")
-        .union(s.read.parquet(dBandsLoc)
-          .select("doc_id", "band_idx", "band_val"))
-        .write.mode("overwrite").parquet(cBandsLoc)
-      iSets.select("doc_id", "ss", "n")
-        .union(s.read.parquet(dSetsLoc).select("doc_id", "ss", "n"))
-        .write.mode("overwrite").parquet(cSetsLoc)
-      // ---- ingest batch 2 vs the COMPACTED index only — fused
-      // batch-2 signature (round 21), the q110b rationale
-      val shB2 = shingleTable(b2, Nil)
-      val sig2 = fusedSigTable(shB2)
-      val near2 = indexDedupStep(shB2, sigBandRows(sig2),
-        Some(sig2.select(col("doc_id"), col("ss"), col("n"))),
-        s.read.parquet(cBandsLoc), s.read.parquet(cSetsLoc))
-      batchFunnel(b1, near1, 1).union(batchFunnel(b2, near2, 2))
-        .select($"batch", $"source", $"batch_docs", $"near_dups",
-          $"kept_docs")
-        .orderBy($"batch", $"source")
+      twoStepCycle(s, dir, dBandsLoc, dSetsLoc) { (bands, sets) =>
+        // ---- major compaction: fold base ∪ delta into a new base;
+        // batch 2 then reads the COMPACTED index only
+        val (cBandsLoc, cSetsLoc) = q110eCompactLocs(s, dir)
+        bands.write.mode("overwrite").parquet(cBandsLoc)
+        sets.write.mode("overwrite").parquet(cSetsLoc)
+        (s.read.parquet(cBandsLoc), s.read.parquet(cSetsLoc))
+      }
     },
     Some(q110cOracleSql))
 
@@ -3402,297 +3395,6 @@ object DocQueries {
   // delta segments instead of base + ALL segments, and k trades fold
   // write volume against read fan-in exactly like an LSM level policy.
   // Old folds are GC'd past the live fold point (here: Scratch).
-  /** One relation of an LSM-compacted index under the compact-every-k
-    * cadence: the immutable base, the write-once `batch=<id>` delta
-    * segments under deltaDir, and the immutable `fold=<id>` segments
-    * under foldDir. ONE definition of the cadence machinery (fold
-    * point, read state, fold write) for both compaction families —
-    * q110f's two-relation minhash index and q117e's gram index — so a
-    * cadence fix cannot land in one and miss the other. */
-  private[graft] final case class LsmRelation(base: DataFrame,
-      deltaDir: String, cols: Seq[String], foldDir: String)
-
-  /** The fold a batch reads: the LATEST COMMITTED `fold=<n>` segment
-    * on disk with n STRICTLY BELOW the batch id (-1 = none: read the
-    * base). Committed means the writer's `_SUCCESS` marker exists in
-    * EVERY relation's fold dir (the Tables.scala idempotence
-    * contract) — mere directory existence is not enough, because a
-    * crash between a fold's per-relation writes (or mid-write) leaves
-    * a torn fold that the crashed batch is NOT guaranteed to rewrite:
-    * if k was retuned across the restart, the re-run may not fire a
-    * fold at all, and the torn dir would otherwise wedge or silently
-    * truncate every later read. Derived from the listing, not from
-    * (id, k) arithmetic (review finding): under a fixed cadence the
-    * two agree — folds fire after batches k-1, 2k-1, …, so the latest
-    * committed fold below id is k·⌊id/k⌋-1 — but the listing also
-    * survives RETUNING k across a checkpoint resume (arithmetic would
-    * derive a fold that never fired and crash the read). The n < id
-    * bound is the `batch < id` self-exclusion contract at fold
-    * granularity: a redelivered batch never sees its own (possibly
-    * torn) fold, and folds of LATER batches cannot exist when a batch
-    * first runs, so every re-run reads exactly what the first
-    * delivery read. A deployment's GC must use the same committed
-    * predicate AND retain a fold's inputs until its writer batch
-    * checkpoints (a re-run fold overwrite passes through an
-    * uncommitted window). */
-  /** FileSystem + Path for an LSM dir, resolved through the active
-    * session's Hadoop conf (round-17 verdict item 4: the fold/delta
-    * listing previously went through `java.io.File`, binding the LSM
-    * family's deployment story to the local FS — on a cluster these
-    * dirs live on HDFS/S3A and the directory protocol must run
-    * through the same `FileSystem` API the parquet writes use). */
-  private def lsmFs(dir: String)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    // getActiveSession is thread-local — a maintenance thread calling
-    // lsmGc/foldPoint would miss the session's fs.* credentials/
-    // defaultFS through it, so fall back to the process-wide default
-    // session before a bare Configuration (review finding)
-    val conf = SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession)
-      .map(_.sessionState.newHadoopConf())
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-    (p.getFileSystem(conf), p)
-  }
-
-  /** The `_SUCCESS`-committed segment ids under `dir` whose dirname
-    * starts with `prefix` ("fold=" / "batch=") — ONE definition of the
-    * committed predicate for the fold point, the fold-write skip and
-    * the GC, so the three can never disagree on what "committed"
-    * means. */
-  private def committedIds(dir: String, prefix: String): Set[Long] = {
-    val (fs, p) = lsmFs(dir)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).iterator
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith(prefix) &&
-        fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      .flatMap(st =>
-        scala.util.Try(st.getPath.getName.drop(prefix.length).toLong)
-          .toOption)
-      .toSet
-  }
-
-  private[graft] def foldPoint(dirs: Seq[String], id: Long): Long =
-    dirs.map(committedIds(_, "fold=")).reduce(_ intersect _)
-      .filter(_ < id).foldLeft(-1L)(math.max)
-
-  /** True iff `dir` holds any `batch=<n>` partition dir with
-    * lo < n < hi — the LISTING form of the delta-tail-emptiness
-    * question every per-batch read asks (round 21, guide §2.4: remove
-    * provably-empty scans outright). DIRECTORY existence — not the
-    * `_SUCCESS` commit marker — is deliberately the predicate: it is
-    * exactly the set a parquet partition-discovery read of the root
-    * would enumerate, so skipping the scan+union when this is false
-    * cannot change what any read returns. This is also what retires
-    * the `batch=-1` schema seed: the only reason the runners wrote an
-    * empty seed segment was so the batch-0 empty-tail read had a
-    * schema to infer — a read that is now elided instead of paid
-    * (2-3 seed-write jobs per streaming run, one empty scan per
-    * batch-0 relation). A spec-seeded `batch=-1` still behaves as
-    * before: it satisfies n < hi bounds with lo = MinValue and the
-    * parquet read then sees its 0 rows, while lsmStateAsOf's
-    * lo = f ≥ -1 excludes it exactly like its `batch > f` filter. */
-  private def hasBatchIn(dir: String, lo: Long, hi: Long): Boolean = {
-    val (fs, p) = lsmFs(dir)
-    fs.exists(p) && fs.listStatus(p).iterator.exists { st =>
-      st.isDirectory && st.getPath.getName.startsWith("batch=") &&
-        scala.util.Try(st.getPath.getName.drop("batch=".length).toLong)
-          .toOption.exists(n => n > lo && n < hi)
-    }
-  }
-
-  /** Highest micro-batch id the stream's CHECKPOINT has committed —
-    * lsmGc's `checkpointedId` input, read from the checkpoint's
-    * commit log (`<ckpt>/commits/<batchId>`, one file per committed
-    * batch; long-lived streams also hold `<n>.compact` rollups whose
-    * id is the suffix-stripped name). −1 = nothing committed yet, so
-    * a GC driven by it is a no-op. Goes through the same FileSystem
-    * resolution as every other LSM directory read. */
-  private[graft] def checkpointedBatchId(ckpt: String): Long = {
-    val (fs, p) = lsmFs(s"$ckpt/commits")
-    if (!fs.exists(p)) -1L
-    else fs.listStatus(p).iterator
-      .flatMap(st => scala.util.Try(
-        st.getPath.getName.stripSuffix(".compact").toLong).toOption)
-      .foldLeft(-1L)(math.max)
-  }
-
-  /** Index state as of just before `hi`, per relation: fold=f ∪ the
-    * delta tail in (f, hi) — f = -1 means the base relation. ONE
-    * definition for the batch read (hi = id) and the fold input
-    * (hi = id + 1), so the two views of "the index so far" cannot
-    * drift. At a fresh post-fold batch (hi = f + 1) the tail is empty
-    * and the state is the fold scan ALONE — the read-side signature
-    * the plan pins read. */
-  private def lsmStateAsOf(s: SparkSession, rels: Seq[LsmRelation],
-      f: Long, hi: Long): Seq[DataFrame] = rels.map { r =>
-    def tail: DataFrame = s.read.parquet(r.deltaDir)
-      .filter(col("batch") > f && col("batch") < hi)
-      .select(r.cols.map(col): _*)
-    // EMPTY-TAIL ELISION (round 21, guide §2.4): when the listing
-    // proves no delta segment falls in (f, hi) — batch 0, or any
-    // fresh post-fold batch — skip the tail scan AND the union
-    // outright instead of scanning an empty relation. The old
-    // hi == f + 1 special case is subsumed (no n fits in (f, f+1)).
-    val hasTail = hasBatchIn(r.deltaDir, f, hi)
-    if (f < 0L) {
-      val base = r.base.select(r.cols.map(col): _*)
-      if (hasTail) base.union(tail) else base
-    }
-    else if (!hasTail) s.read.parquet(s"${r.foldDir}/fold=$f")
-    else s.read.parquet(s"${r.foldDir}/fold=$f").union(tail)
-  }
-
-  /** Write the fold at batch `id`: prior fold ∪ the delta tail
-    * THROUGH this batch (byte-equivalent to base ∪ all deltas so far,
-    * bounded at O(fold + k) inputs) to the immutable per-fold
-    * location `fold=<id>` of every relation. `midFold` fires between
-    * per-relation writes — the torn-fold crash-injection point.
-    *
-    * A relation whose fold=<id> is already COMMITTED is skipped
-    * (round-17 ADVICE item 4): a redelivered fold's content is
-    * byte-identical by construction — its inputs are the immutable
-    * prior fold + write-once deltas and foldPoint resolves the same f
-    * on redelivery (`n < id` excludes the batch's own fold; later
-    * folds cannot exist for an uncheckpointed batch) — so rewriting
-    * it through mode("overwrite") only passed a committed fold
-    * through a transient uncommitted window (the _SUCCESS delete) for
-    * nothing. Skipping closes that window entirely; a TORN fold (no
-    * _SUCCESS) still takes the overwrite path and completes. */
-  /** Run independent Spark write thunks CONCURRENTLY, one thread per
-    * thunk, propagating the first failure. Spark's scheduler is built
-    * for multi-threaded job submission (FIFO across the 32 local
-    * cores); the LSM family's per-batch cost at bench scale is
-    * FIXED per-job overhead, not data (q122 reads ~16 s at sf0.001
-    * AND sf0.1), so running the independent writes of one batch as
-    * one wave instead of a sequence is pure wall-clock back — the
-    * round-18 WATCH item's fix, without changing any on-disk layout
-    * or commit point. Single-thunk calls stay inline (no thread). */
-  private def parWrite(thunks: Seq[() => Unit]): Unit =
-    if (thunks.sizeIs <= 1) thunks.foreach(_())
-    else {
-      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-      val ts = thunks.map(t => new Thread(() =>
-        try t() catch { case e: Throwable => errs.add(e) }))
-      ts.foreach(_.start()); ts.foreach(_.join())
-      if (!errs.isEmpty) {
-        // surface ONE failure, but keep every other thread's as
-        // suppressed — a wave where both families fail must not lose
-        // the more informative diagnostic (review finding)
-        val first = errs.poll()
-        var e = errs.poll()
-        while (e != null) { first.addSuppressed(e); e = errs.poll() }
-        throw first
-      }
-    }
-
-  private def lsmFoldAt(s: SparkSession, rels: Seq[LsmRelation],
-      f: Long, id: Long, midFold: () => Unit = () => ()): Unit = {
-    // decide the skip set FIRST: building lsmStateAsOf eagerly lists +
-    // schema-infers every relation's fold/delta locations, which is
-    // pure waste for relations about to be skipped (review finding —
-    // several LIST/HEAD round-trips per redelivered fold on S3/HDFS).
-    val pending = rels.filterNot(r =>
-      committedIds(r.foldDir, "fold=").contains(id))
-    // STAGE + RENAME (round-18 verdict item 6, the r17 ADVICE item 4
-    // residual): a direct mode("overwrite") of a genuinely TORN fold
-    // deleted the remains and then spent the whole parquet job inside
-    // a half-written final location — a second crash left a
-    // differently-torn dir. Staging to a dot-prefixed sibling (hidden
-    // from parquet listings, committedIds and GC's fold= prefix
-    // match) and renaming into place shrinks the commit to one
-    // directory rename: the final location is only ever absent, the
-    // old torn remains, or complete-with-_SUCCESS — never mid-write.
-    // Committed folds are skipped above, so no _SUCCESS-bearing
-    // segment is ever deleted (law-pinned). Staging also splits the
-    // fold into an expensive parallel phase and a cheap commit phase:
-    // the parquet jobs run as ONE concurrent wave (they are
-    // independent — immutable prior fold + write-once deltas in, a
-    // private staging dir out), then the renames COMMIT sequentially
-    // with midFold between them, so the observable crash states are
-    // exactly the sequential ones (relations 0..i-1 committed, the
-    // rest absent-from-final) at a third of the wall.
-    val staged = pending.zip(lsmStateAsOf(s, pending, f, id + 1))
-      .map { case (r, st) =>
-        val (fs, _) = lsmFs(r.foldDir)
-        val finalP = new org.apache.hadoop.fs.Path(s"${r.foldDir}/fold=$id")
-        val stageP = new org.apache.hadoop.fs.Path(
-          s"${r.foldDir}/.fold=$id.staging")
-        (fs, finalP, stageP,
-          () => st.write.mode("overwrite").parquet(stageP.toString))
-      }
-    parWrite(staged.map(_._4))
-    staged.zipWithIndex.foreach { case ((fs, finalP, stageP, _), i) =>
-      if (i > 0) midFold()
-      if (fs.exists(finalP)) fs.delete(finalP, true) // torn remains
-      if (!fs.rename(stageP, finalP))
-        throw new java.io.IOException(
-          s"fold commit rename failed: $stageP -> $finalP")
-    }
-  }
-
-  /** LSM GC exemplar (round-17 verdict item 3 — the contract the
-    * foldPoint docstring specifies, as code): delete the fold/delta
-    * segments that can never be read again, and ONLY those. The live
-    * fold point is the latest fold that is both COMMITTED (the same
-    * `_SUCCESS`-in-every-relation predicate foldPoint reads) and
-    * CHECKPOINTED (writer batch ≤ `checkpointedId`, the highest batch
-    * the stream's checkpoint has committed — the caller reads it from
-    * the checkpoint's commit log). Below that point everything is
-    * dead: earlier folds are superseded, and deltas at or below it
-    * are folded in. AT or ABOVE it everything must survive —
-    * a committed-but-uncheckpointed fold sits inside the redelivery
-    * window (its writer batch may re-run and must re-read the live
-    * fold + the tail past it), so GC never touches it or its delta
-    * inputs. A `batch=-1` schema seed (no longer written by the
-    * runners — empty tails are elided by listing — but legal on
-    * disk, e.g. spec-seeded) also stays: deadSegs bounds at n >= 0.
-    * Returns the live fold
-    * point (-1 = nothing GC-able yet). Idempotent and crash-safe:
-    * every delete targets a segment no current or future read can
-    * reference, so a GC torn mid-way just leaves some dead segments
-    * for the next GC. */
-  private[graft] def lsmGc(rels: Seq[LsmRelation],
-      checkpointedId: Long): Long = {
-    val f = foldPoint(rels.map(_.foldDir), checkpointedId + 1)
-    // delete by RAW listing, not the committed set: a TORN fold below
-    // the live point is dead garbage too (its writer batch
-    // checkpointed, so nothing will ever complete it, and the commit
-    // predicate already hides it from every read) — leaving it would
-    // accumulate junk dirs forever. Above the live point commit state
-    // doesn't matter either: everything survives.
-    def deadSegs(dir: String, prefix: String, upTo: Long,
-        suffix: String = ""): Seq[org.apache.hadoop.fs.Path] = {
-      val (fs, p) = lsmFs(dir)
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).iterator
-        .filter { st =>
-          val n = st.getPath.getName
-          n.startsWith(prefix) && n.endsWith(suffix) &&
-            scala.util.Try(n.drop(prefix.length)
-              .dropRight(suffix.length).toLong).toOption
-              .exists(v => v >= 0 && v <= upTo)
-        }
-        .map(st => st.getPath).toSeq
-    }
-    if (f >= 0) rels.foreach { r =>
-      val (foldFs, _) = lsmFs(r.foldDir)
-      deadSegs(r.foldDir, "fold=", f - 1)
-        .foreach(foldFs.delete(_, true))
-      // dead fold STAGING leftovers (a crash between lsmFoldAt's stage
-      // write and its rename): at id < f the fold is superseded; at
-      // id = f the live fold committed, so the staged copy will never
-      // be renamed. Above f the owning batch may still redeliver —
-      // its rewrite owns (and overwrites) that staging dir, not GC.
-      deadSegs(r.foldDir, ".fold=", f, ".staging")
-        .foreach(foldFs.delete(_, true))
-      val (dFs, _) = lsmFs(r.deltaDir)
-      deadSegs(r.deltaDir, "batch=", f).foreach(dFs.delete(_, true))
-    }
-    f
-  }
-
   /** One micro-batch under the COMPACT-EVERY-K cadence policy
     * (round-16 verdict item 2 — the hard-coded compact-at-batch-0
     * generalized): batch id dedups against fold=f ∪ the delta segments
@@ -3720,45 +3422,18 @@ object DocQueries {
       deltaBandsDir: String, deltaSetsDir: String,
       compactBandsDir: String, compactSetsDir: String, sinkDir: String,
       k: Int = 1, crashBeforeSink: Long => Unit = _ => (),
-      crashMidFold: Long => Unit = _ => ()): Unit = {
-    require(k >= 1, s"compact-every-k cadence needs k >= 1, got $k")
-    val b = micro.localCheckpoint()
-    val record: DataFrame => Unit =
-      graft.streaming.StreamingJobs.recordInnerPlan(
-        s"q110f_stream_compaction batch=$id", _)
-    val rels = Seq(
-      LsmRelation(baseBands, deltaBandsDir,
-        Seq("doc_id", "band_idx", "band_val"), compactBandsDir),
-      LsmRelation(baseSets, deltaSetsDir,
-        Seq("doc_id", "ss", "n"), compactSetsDir))
-    // the latest fold COMMITTED in both relations' dirs (the batch=-1
-    // schema seed in the delta tail is excluded by the > f bound)
-    val f = foldPoint(rels.map(_.foldDir), id)
-    val Seq(ib, is) = lsmStateAsOf(s, rels, f, id)
-    val near = ingestAndAppend(b, ib, is,
-      s"$deltaBandsDir/batch=$id", s"$deltaSetsDir/batch=$id", record)
-    // major compaction at the cadence: fold the prior fold ∪ the delta
-    // tail THROUGH this batch into the immutable fold=<id> segment —
-    // byte-equivalent to base ∪ all deltas so far but bounded at
-    // O(fold + k) input segments (review finding: re-reading base +
-    // every delta since batch 0 grew with stream lifetime and kept
-    // folded deltas forever-live; now deltas at or below f are DEAD
-    // and a deployment GCs them with the superseded folds). One
-    // linear union per relation, no shuffle; inputs are the immutable
-    // prior fold + write-once deltas, so a redelivered fold rewrites
-    // the same relation.
-    if ((id + 1) % k == 0)
-      lsmFoldAt(s, rels, f, id, () => crashMidFold(id))
-    crashBeforeSink(id)
-    dedupFunnel(b, near).coalesce(1)
-      .write.mode("overwrite").parquet(s"$sinkDir/batch=$id")
-  }
+      crashMidFold: Long => Unit = _ => ()): Unit =
+    dedupBatch(s, micro, id,
+      minhashRels(baseBands, baseSets, deltaBandsDir, deltaSetsDir,
+        compactBandsDir, compactSetsDir),
+      sinkDir, "q110f_stream_compaction", Some(k), crashBeforeSink,
+      crashMidFold)
 
   /** Run the streaming compaction replay: drain the two-file replay
-    * through streamCompactBatch with AvailableNow under the
-    * compact-every-k cadence (no schema seeds — the empty tail is
-    * elided by listing). private[graft] for StreamIndexDedupSpec's
-    * restart-across-the-fold and torn-write laws. */
+    * through streamCompactBatch under the compact-every-k cadence (no
+    * schema seeds — the empty tail is elided by listing).
+    * private[graft] for StreamIndexDedupSpec's restart-across-the-fold
+    * and torn-write laws. */
   private[graft] def runStreamCompactDedup(s: SparkSession, dir: String,
       replayDir: String, deltaBandsDir: String, deltaSetsDir: String,
       compactBandsDir: String, compactSetsDir: String, sinkDir: String,
@@ -3766,31 +3441,20 @@ object DocQueries {
       crashBeforeSink: Long => Unit = _ => (),
       crashMidFold: Long => Unit = _ => ()): Unit = {
     val (iBands, iSets) = Tables.minhashIndexBase(s, dir)
-    val q = graft.streaming.StreamingJobs.readDocsStream(s, replayDir)
-      .writeStream
-      .foreachBatch {
-        (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         id: Long) =>
-          streamCompactBatch(s, df, id, iBands, iSets,
-            deltaBandsDir, deltaSetsDir, compactBandsDir, compactSetsDir,
-            sinkDir, k, crashBeforeSink, crashMidFold)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.streaming.StreamingJobs.capturePlan(
-      "q110f_stream_compaction", q)
+    StreamingJobs.drain("q110f_stream_compaction", ckpt,
+        StreamingJobs.readDocsStream(s, replayDir)) { (df, id) =>
+      streamCompactBatch(s, df, id, iBands, iSets, deltaBandsDir,
+        deltaSetsDir, compactBandsDir, compactSetsDir, sinkDir, k,
+        crashBeforeSink, crashMidFold)
+    }
   }
 
   private val q110f = QueryDef(
     "q110f_stream_compaction",
     (s, dir) => {
-      val replay = graft.streaming.StreamingJobs.docsReplayDir(s, dir)
-      def tmp(tag: String): String = Scratch.dir(s"graft-q110f-$tag")
-      val (dBands, dSets, cBands, cSets, sink, ckpt) =
-        (tmp("dbands"), tmp("dsets"), tmp("cbands"), tmp("csets"),
-          tmp("sink"), tmp("ckpt"))
+      val replay = StreamingJobs.docsReplayDir(s, dir)
+      val Seq(dBands, dSets, cBands, cSets, sink, ckpt) = Scratch.dirs(
+        "graft-q110f", "dbands", "dsets", "cbands", "csets", "sink", "ckpt")
       runStreamCompactDedup(s, dir, replay, dBands, dSets, cBands, cSets,
         sink, ckpt)
       streamDedupTable(s, sink)
@@ -4318,31 +3982,19 @@ object DocQueries {
     "q116b_stream_drift",
     (s, dir) => {
       import s.implicits._
-      val replay = graft.streaming.StreamingJobs.docsReplayDir(s, dir)
-      def tmp(tag: String): String = Scratch.dir(s"graft-q116b-$tag")
-      val (sink, ckpt) = (tmp("sink"), tmp("ckpt"))
-      val q = graft.streaming.StreamingJobs.readDocsStream(s, replay)
-        .writeStream
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           id: Long) =>
-            val counts = df.groupBy(col("source"))
-              .agg(count(lit(1)).as("batch_docs"))
-            graft.streaming.StreamingJobs.recordInnerPlan(
-              s"q116b_stream_drift batch=$id", counts)
-            counts.coalesce(1)
-              .write.mode("overwrite").parquet(s"$sink/batch=$id")
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.StreamingJobs.capturePlan("q116b_stream_drift", q)
+      val replay = StreamingJobs.docsReplayDir(s, dir)
+      val Seq(sink, ckpt) = Scratch.dirs("graft-q116b", "sink", "ckpt")
+      StreamingJobs.drain("q116b_stream_drift", ckpt,
+          StreamingJobs.readDocsStream(s, replay)) { (df, id) =>
+        val counts = df.groupBy(col("source"))
+          .agg(count(lit(1)).as("batch_docs"))
+        StreamingJobs.recordInnerPlan(s"q116b_stream_drift batch=$id", counts)
+        counts.coalesce(1)
+          .write.mode("overwrite").parquet(s"$sink/batch=$id")
+      }
       // read time: the standing corpus mixture + exact integer ppm
       // (the shared withDriftColumns arithmetic)
-      withDriftColumns(s, dir, s.read.parquet(sink)
-          .select(($"batch".cast(LongType) + 1).as("batch"),
-            $"source", $"batch_docs"))
+      withDriftColumns(s, dir, sinkLog(s, sink, "source", "batch_docs"))
         .select($"batch", $"source", $"batch_docs", $"corpus_docs",
           $"batch_ppm", $"corpus_ppm", $"drift_ppm")
         .orderBy($"batch", $"source")
@@ -4548,35 +4200,20 @@ object DocQueries {
   private val q117b = QueryDef(
     "q117b_stream_novelty",
     (s, dir) => {
-      import s.implicits._
-      val replay = graft.streaming.StreamingJobs.docsReplayDir(s, dir)
+      val replay = StreamingJobs.docsReplayDir(s, dir)
       val grams = Tables.gramIndex(s, dir)
-      def tmp(tag: String): String = Scratch.dir(s"graft-q117b-$tag")
-      val (sink, ckpt) = (tmp("sink"), tmp("ckpt"))
-      val q = graft.streaming.StreamingJobs.readDocsStream(s, replay)
-        .writeStream
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           id: Long) =>
-            // bg feeds the probe set and the final left join — pin one
-            // derivation (the q117 pattern; batch-sized blocks)
-            val bg = sourceGrams(df).localCheckpoint()
-            val rep = noveltyBatchReport(bg, grams)
-            graft.streaming.StreamingJobs.recordInnerPlan(
-              s"q117b_stream_novelty batch=$id", rep)
-            rep.coalesce(1)
-              .write.mode("overwrite").parquet(s"$sink/batch=$id")
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.StreamingJobs.capturePlan("q117b_stream_novelty", q)
-      s.read.parquet(sink)
-        .select(($"batch".cast(LongType) + 1).as("batch"), $"source",
-          $"batch_grams", $"novel_grams",
-          expr("novel_grams * 1000000 DIV batch_grams").as("novelty_ppm"))
-        .orderBy($"batch", $"source")
+      val Seq(sink, ckpt) = Scratch.dirs("graft-q117b", "sink", "ckpt")
+      StreamingJobs.drain("q117b_stream_novelty", ckpt,
+          StreamingJobs.readDocsStream(s, replay)) { (df, id) =>
+        // bg feeds the probe set and the final left join — pin one
+        // derivation (the q117 pattern; batch-sized blocks)
+        val bg = sourceGrams(df).localCheckpoint()
+        val rep = noveltyBatchReport(bg, grams)
+        StreamingJobs.recordInnerPlan(s"q117b_stream_novelty batch=$id", rep)
+        rep.coalesce(1).write.mode("overwrite").parquet(s"$sink/batch=$id")
+      }
+      // the q117c report shape, which the stateless sink shares
+      streamGramTable(s, sink)
     },
     Some("""WITH t AS (
         SELECT doc_id, source,
@@ -4731,73 +4368,72 @@ object DocQueries {
   // the write-once segments, not the state store). Fresh
   // sink/ckpt/delta dirs per run (Scratch-registered).
   /** One streaming cumulative-novelty micro-batch — pure function of
-    * (batchId, data). private[graft] for GramAppendSpec's redelivery
-    * law. `crashAfterSink` is the torn-write injection point (round-16
-    * verdict item 4): q117d writes sink-BEFORE-segment — the mirror of
-    * q110d's segment-before-sink order — so the worst at-least-once
-    * tear here is a committed sink partition with a MISSING delta
-    * segment, and the rerun must restore both to the one-shot bytes. */
-  private[graft] def streamGramBatch(s: SparkSession, micro: DataFrame,
-      id: Long, grams: DataFrame, deltaDir: String,
-      sinkDir: String, crashAfterSink: Long => Unit = _ => ()): Unit = {
+    * (batchId, disk state at batch start): probe the batch's grams
+    * against the gram LSM state below `id` (Lsm.lsmBatch: index ∪
+    * strictly-earlier deltas with folding off, the latest committed
+    * fold ∪ the tail past it under a cadence), write the per-source
+    * counts to the sink's `batch=<id>`, append the novel grams as the
+    * batch's own delta segment, fold at the cadence. ONE kernel for
+    * q117d (k = None) and q117e; the probe plan is recorded under
+    * "`planKey` batch=<id>". `crashAfterSink` is the torn-write
+    * injection point (round-16 verdict item 4): the gram family writes
+    * sink-BEFORE-segment — the mirror of q110d's segment-before-sink
+    * order — so the worst at-least-once tear here is a committed sink
+    * partition with a MISSING delta segment, and the rerun must
+    * restore both to the one-shot bytes. */
+  private def gramBatch(s: SparkSession, micro: DataFrame, id: Long,
+      rel: LsmRelation, sinkDir: String, planKey: String, k: Option[Int],
+      crashAfterSink: Long => Unit): Unit = {
     val bg = sourceGrams(micro).localCheckpoint()
-    // empty-tail elision, the streamDedupBatch form: batch 0 of a
-    // fresh run probes the base gram index alone
-    val ref =
-      if (!hasBatchIn(deltaDir, Long.MinValue, id)) grams
-      else grams.union(
-        s.read.parquet(deltaDir).filter(col("batch") < id)
-          .select(col("gram")))
-    val hitsPlan = noveltyHits(bg, ref)
-    graft.streaming.StreamingJobs.recordInnerPlan(
-      s"q117d_stream_gram_append batch=$id", hitsPlan)
-    val hits = hitsPlan.localCheckpoint()
-    noveltyReportFromHits(bg, hits).coalesce(1)
-      .write.mode("overwrite").parquet(s"$sinkDir/batch=$id")
-    crashAfterSink(id)
-    novelGrams(bg, hits)
-      .write.mode("overwrite").parquet(s"$deltaDir/batch=$id")
+    lsmBatch(s, Seq(rel), id, k) { case Seq(gramState) =>
+      val hitsPlan = noveltyHits(bg, gramState)
+      StreamingJobs.recordInnerPlan(s"$planKey batch=$id", hitsPlan)
+      val hits = hitsPlan.localCheckpoint()
+      noveltyReportFromHits(bg, hits).coalesce(1)
+        .write.mode("overwrite").parquet(s"$sinkDir/batch=$id")
+      crashAfterSink(id)
+      novelGrams(bg, hits)
+        .write.mode("overwrite").parquet(s"${rel.deltaDir}/batch=$id")
+    }
   }
 
+  /** q117d's micro-batch: gramBatch with folding off. private[graft]
+    * for GramAppendSpec's redelivery law. */
+  private[graft] def streamGramBatch(s: SparkSession, micro: DataFrame,
+      id: Long, grams: DataFrame, deltaDir: String,
+      sinkDir: String, crashAfterSink: Long => Unit = _ => ()): Unit =
+    gramBatch(s, micro, id, LsmRelation(grams, deltaDir, Seq("gram")),
+      sinkDir, "q117d_stream_gram_append", None, crashAfterSink)
+
   /** Run the streaming cumulative-novelty replay: drain the two-file
-    * replay with AvailableNow (no schema seed — the empty tail is
+    * replay through streamGramBatch (no schema seed — the empty tail is
     * elided by listing). private[graft] for GramAppendSpec's resume
     * law. */
   private[graft] def runStreamGramAppend(s: SparkSession, dir: String,
       replayDir: String, deltaDir: String, sinkDir: String,
       ckpt: String, crashAfterSink: Long => Unit = _ => ()): Unit = {
     val grams = Tables.gramIndex(s, dir)
-    val q = graft.streaming.StreamingJobs.readDocsStream(s, replayDir)
-      .writeStream
-      .foreachBatch {
-        (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         id: Long) =>
-          streamGramBatch(s, df, id, grams, deltaDir, sinkDir,
-            crashAfterSink)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.streaming.StreamingJobs.capturePlan(
-      "q117d_stream_gram_append", q)
+    StreamingJobs.drain("q117d_stream_gram_append", ckpt,
+        StreamingJobs.readDocsStream(s, replayDir)) { (df, id) =>
+      streamGramBatch(s, df, id, grams, deltaDir, sinkDir, crashAfterSink)
+    }
   }
 
-  /** Resolve the q117d sink change-log to the q117c report shape. */
+  /** Resolve a gram-novelty sink change-log (q117b/q117d/q117e) to the
+    * q117c report shape. */
   private[graft] def streamGramTable(s: SparkSession,
       sinkDir: String): DataFrame =
-    s.read.parquet(sinkDir)
-      .select((col("batch").cast(LongType) + 1).as("batch"),
-        col("source"), col("batch_grams"), col("novel_grams"),
-        expr("novel_grams * 1000000 DIV batch_grams").as("novelty_ppm"))
+    sinkLog(s, sinkDir, "source", "batch_grams", "novel_grams")
+      .withColumn("novelty_ppm",
+        expr("novel_grams * 1000000 DIV batch_grams"))
       .orderBy(col("batch"), col("source"))
 
   private val q117d = QueryDef(
     "q117d_stream_gram_append",
     (s, dir) => {
-      val replay = graft.streaming.StreamingJobs.docsReplayDir(s, dir)
-      def tmp(tag: String): String = Scratch.dir(s"graft-q117d-$tag")
-      val (delta, sink, ckpt) = (tmp("delta"), tmp("sink"), tmp("ckpt"))
+      val replay = StreamingJobs.docsReplayDir(s, dir)
+      val Seq(delta, sink, ckpt) =
+        Scratch.dirs("graft-q117d", "delta", "sink", "ckpt")
       runStreamGramAppend(s, dir, replay, delta, sink, ckpt)
       streamGramTable(s, sink)
     },
@@ -4831,68 +4467,38 @@ object DocQueries {
   // instead of base + ALL segments — the same LSM read/write trade as
   // q110f, at the granularity where the segment tail grows fastest
   // (every batch appends grams; only admitted docs append bands).
-  /** One gram micro-batch under the compact-every-k cadence — pure
-    * function of (batchId, data); sink-before-segment-before-fold
-    * write order (the q117d family order, `crashAfterSink` mirrors its
-    * torn-write injection point). private[graft] for GramAppendSpec. */
+  /** One gram micro-batch under the compact-every-k cadence: gramBatch
+    * with folding on — sink, then segment, then fold.
+    * private[graft] for GramAppendSpec. */
   private[graft] def streamGramCompactBatch(s: SparkSession,
       micro: DataFrame, id: Long, grams: DataFrame, deltaDir: String,
       foldDir: String, sinkDir: String, k: Int = 1,
-      crashAfterSink: Long => Unit = _ => ()): Unit = {
-    require(k >= 1, s"compact-every-k cadence needs k >= 1, got $k")
-    val bg = sourceGrams(micro).localCheckpoint()
-    // the shared LSM cadence machinery (foldPoint/lsmStateAsOf/
-    // lsmFoldAt — the streamCompactBatch contract at gram granularity)
-    val rels = Seq(LsmRelation(grams, deltaDir, Seq("gram"), foldDir))
-    val f = foldPoint(rels.map(_.foldDir), id)
-    val Seq(gramState) = lsmStateAsOf(s, rels, f, id)
-    val hitsPlan = noveltyHits(bg, gramState)
-    graft.streaming.StreamingJobs.recordInnerPlan(
-      s"q117e_stream_gram_compaction batch=$id", hitsPlan)
-    val hits = hitsPlan.localCheckpoint()
-    noveltyReportFromHits(bg, hits).coalesce(1)
-      .write.mode("overwrite").parquet(s"$sinkDir/batch=$id")
-    crashAfterSink(id)
-    novelGrams(bg, hits)
-      .write.mode("overwrite").parquet(s"$deltaDir/batch=$id")
-    // fold the prior fold ∪ the tail THROUGH this batch — bounded at
-    // O(fold + k) inputs, byte-equivalent to base ∪ all deltas so far
-    // (the streamCompactBatch fold contract; deltas at or below f are
-    // dead once superseded)
-    if ((id + 1) % k == 0) lsmFoldAt(s, rels, f, id)
-  }
+      crashAfterSink: Long => Unit = _ => ()): Unit =
+    gramBatch(s, micro, id, LsmRelation(grams, deltaDir, Seq("gram"),
+      foldDir), sinkDir, "q117e_stream_gram_compaction", Some(k),
+      crashAfterSink)
 
-  /** Run the streaming gram-compaction replay (drain, AvailableNow —
-    * the runStreamGramAppend contract plus the fold dir; no schema
-    * seed). private[graft] for GramAppendSpec. */
+  /** Run the streaming gram-compaction replay (the runStreamGramAppend
+    * contract plus the fold dir; no schema seed). private[graft] for
+    * GramAppendSpec. */
   private[graft] def runStreamGramCompact(s: SparkSession, dir: String,
       replayDir: String, deltaDir: String, foldDir: String,
       sinkDir: String, ckpt: String, k: Int = 1,
       crashAfterSink: Long => Unit = _ => ()): Unit = {
     val grams = Tables.gramIndex(s, dir)
-    val q = graft.streaming.StreamingJobs.readDocsStream(s, replayDir)
-      .writeStream
-      .foreachBatch {
-        (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         id: Long) =>
-          streamGramCompactBatch(s, df, id, grams, deltaDir, foldDir,
-            sinkDir, k, crashAfterSink)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.streaming.StreamingJobs.capturePlan(
-      "q117e_stream_gram_compaction", q)
+    StreamingJobs.drain("q117e_stream_gram_compaction", ckpt,
+        StreamingJobs.readDocsStream(s, replayDir)) { (df, id) =>
+      streamGramCompactBatch(s, df, id, grams, deltaDir, foldDir,
+        sinkDir, k, crashAfterSink)
+    }
   }
 
   private val q117e = QueryDef(
     "q117e_stream_gram_compaction",
     (s, dir) => {
-      val replay = graft.streaming.StreamingJobs.docsReplayDir(s, dir)
-      def tmp(tag: String): String = Scratch.dir(s"graft-q117e-$tag")
-      val (delta, fold, sink, ckpt) =
-        (tmp("delta"), tmp("fold"), tmp("sink"), tmp("ckpt"))
+      val replay = StreamingJobs.docsReplayDir(s, dir)
+      val Seq(delta, fold, sink, ckpt) =
+        Scratch.dirs("graft-q117e", "delta", "fold", "sink", "ckpt")
       runStreamGramCompact(s, dir, replay, delta, fold, sink, ckpt)
       streamGramTable(s, sink)
     },
@@ -4952,6 +4558,18 @@ object DocQueries {
   // reads fold=0 ALONE in both the dedup join and the gram probe
   // (StreamCapstoneSpec pins the recorded inner plans), and the
   // oracle is UNCHANGED — fold read-equivalence, the q110f pattern.
+  /** The capstone's three LSM relations, in ONE place so the per-batch
+    * function and the post-checkpoint GC can never disagree on what
+    * the index family is. */
+  private def capstoneRels(baseBands: DataFrame, baseSets: DataFrame,
+      deltaBandsDir: String, deltaSetsDir: String,
+      foldBandsDir: String, foldSetsDir: String,
+      grams: DataFrame, gramDeltaDir: String, gramFoldDir: String)
+      : Seq[LsmRelation] =
+    minhashRels(baseBands, baseSets, deltaBandsDir, deltaSetsDir,
+      foldBandsDir, foldSetsDir) :+
+      LsmRelation(grams, gramDeltaDir, Seq("gram"), gramFoldDir)
+
   /** One capstone micro-batch — a pure function of (batchId, disk
     * state at batch start): dedup vs the minhash LSM state (latest
     * committed fold ∪ the strictly-earlier delta tail past it; -1 =
@@ -4968,20 +4586,6 @@ object DocQueries {
     * `_SUCCESS` in all three fold dirs), so the dedup and novelty
     * monitors can never disagree about which fold a batch reads.
     * private[graft] for StreamCapstoneSpec's redelivery law. */
-  /** The capstone's three LSM relations, in ONE place so the per-batch
-    * function and the post-checkpoint GC can never disagree on what
-    * the index family is. */
-  private def capstoneRels(baseBands: DataFrame, baseSets: DataFrame,
-      deltaBandsDir: String, deltaSetsDir: String,
-      foldBandsDir: String, foldSetsDir: String,
-      grams: DataFrame, gramDeltaDir: String, gramFoldDir: String)
-      : Seq[LsmRelation] = Seq(
-    LsmRelation(baseBands, deltaBandsDir,
-      Seq("doc_id", "band_idx", "band_val"), foldBandsDir),
-    LsmRelation(baseSets, deltaSetsDir,
-      Seq("doc_id", "ss", "n"), foldSetsDir),
-    LsmRelation(grams, gramDeltaDir, Seq("gram"), gramFoldDir))
-
   private[graft] def streamCapstoneBatch(s: SparkSession, micro: DataFrame,
       id: Long, baseBands: DataFrame, baseSets: DataFrame,
       deltaBandsDir: String, deltaSetsDir: String,
@@ -4990,7 +4594,6 @@ object DocQueries {
       funnelSinkDir: String, novSinkDir: String, k: Int = 1,
       crashBeforeSink: Long => Unit = _ => (),
       crashMidFold: Long => Unit = _ => ()): Unit = {
-    require(k >= 1, s"compact-every-k cadence needs k >= 1, got $k")
     val b = micro.localCheckpoint()
     // ONE shingling pass serves both monitors (the capstone's reason
     // to exist): per-doc projection for the dedup kernel, per-source
@@ -5002,8 +4605,6 @@ object DocQueries {
     val rels = capstoneRels(baseBands, baseSets, deltaBandsDir,
       deltaSetsDir, foldBandsDir, foldSetsDir, grams, gramDeltaDir,
       gramFoldDir)
-    val f = foldPoint(rels.map(_.foldDir), id)
-    val Seq(ib, is, gramRef) = lsmStateAsOf(s, rels, f, id)
     // ---- (a) ∥ (b): the two monitor families are INDEPENDENT — (a)
     // reads the batch + the minhash LSM state and writes the two
     // minhash deltas, (b) reads the shared shingle pass + the gram
@@ -5021,31 +4622,29 @@ object DocQueries {
     var near: DataFrame = null
     var bg: DataFrame = null
     var hits: DataFrame = null
-    parWrite(Seq(
-      // (a) dedup + minhash index append (q110d's step, shared sh)
-      () => near = ingestAndAppend(b, ib, is,
-        s"$deltaBandsDir/batch=$id", s"$deltaSetsDir/batch=$id",
-        graft.streaming.StreamingJobs.recordInnerPlan(
-          s"q122_stream_ingest_capstone dedup batch=$id", _),
-        prebuiltSh = Some(shAll.select(col("doc_id"), col("shingle")))),
-      // (b) cumulative gram novelty + gram append (q117d's step)
-      () => {
-        val bgL = shAll.select(col("source"), col("shingle")).distinct()
-          .localCheckpoint()
-        val hitsPlan = noveltyHits(bgL, gramRef)
-        graft.streaming.StreamingJobs.recordInnerPlan(
-          s"q122_stream_ingest_capstone novelty batch=$id", hitsPlan)
-        val hitsL = hitsPlan.localCheckpoint()
-        novelGrams(bgL, hitsL)
-          .write.mode("overwrite").parquet(s"$gramDeltaDir/batch=$id")
-        bg = bgL; hits = hitsL
-      }))
-    // ---- fold at the cadence, all three relations in one step: prior
-    // fold ∪ the delta tail THROUGH this batch lands at the immutable
-    // fold=<id> of each relation (bounded at O(fold + k) inputs;
-    // deltas at or below f are dead — lsmGc's food)
-    if ((id + 1) % k == 0)
-      lsmFoldAt(s, rels, f, id, () => crashMidFold(id))
+    // the fold at the cadence runs after the wave, all three relations
+    // in one step (deltas at or below f are dead — lsmGc's food)
+    lsmBatch(s, rels, id, Some(k), () => crashMidFold(id)) {
+      case Seq(ib, is, gramRef) => parWrite(Seq(
+        // (a) dedup + minhash index append (q110d's step, shared sh)
+        () => near = ingestAndAppend(b, ib, is,
+          s"$deltaBandsDir/batch=$id", s"$deltaSetsDir/batch=$id",
+          StreamingJobs.recordInnerPlan(
+            s"q122_stream_ingest_capstone dedup batch=$id", _),
+          prebuiltSh = Some(shAll.select(col("doc_id"), col("shingle")))),
+        // (b) cumulative gram novelty + gram append (q117d's step)
+        () => {
+          val bgL = shAll.select(col("source"), col("shingle")).distinct()
+            .localCheckpoint()
+          val hitsPlan = noveltyHits(bgL, gramRef)
+          StreamingJobs.recordInnerPlan(
+            s"q122_stream_ingest_capstone novelty batch=$id", hitsPlan)
+          val hitsL = hitsPlan.localCheckpoint()
+          novelGrams(bgL, hitsL)
+            .write.mode("overwrite").parquet(s"$gramDeltaDir/batch=$id")
+          bg = bgL; hits = hitsL
+        }))
+    }
     // ---- (c) sink commits (torn-write injection point: all segments
     // landed, neither sink has — the worst at-least-once case)
     crashBeforeSink(id)
@@ -5061,7 +4660,7 @@ object DocQueries {
   }
 
   /** Run the capstone replay: drain the two-file replay through
-    * streamCapstoneBatch with AvailableNow (no schema seeds — all
+    * streamCapstoneBatch (no schema seeds — all
     * three families' empty tails are elided by listing).
     * private[graft] for StreamCapstoneSpec. */
   private[graft] def runStreamCapstone(s: SparkSession, dir: String,
@@ -5075,22 +4674,13 @@ object DocQueries {
       gc: Boolean = true): Unit = {
     val (iBands, iSets) = Tables.minhashIndexBase(s, dir)
     val grams = Tables.gramIndex(s, dir)
-    val q = graft.streaming.StreamingJobs.readDocsStream(s, replayDir)
-      .writeStream
-      .foreachBatch {
-        (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         id: Long) =>
-          streamCapstoneBatch(s, df, id, iBands, iSets, deltaBandsDir,
-            deltaSetsDir, foldBandsDir, foldSetsDir, grams,
-            gramDeltaDir, gramFoldDir, funnelSinkDir, novSinkDir, k,
-            crashBeforeSink, crashMidFold)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.streaming.StreamingJobs.capturePlan(
-      "q122_stream_ingest_capstone", q)
+    StreamingJobs.drain("q122_stream_ingest_capstone", ckpt,
+        StreamingJobs.readDocsStream(s, replayDir)) { (df, id) =>
+      streamCapstoneBatch(s, df, id, iBands, iSets, deltaBandsDir,
+        deltaSetsDir, foldBandsDir, foldSetsDir, grams, gramDeltaDir,
+        gramFoldDir, funnelSinkDir, novSinkDir, k, crashBeforeSink,
+        crashMidFold)
+    }
     // POST-CHECKPOINT MAINTENANCE (round-18 verdict item 5): this is
     // the call site where a deployment runs the GC — after the drain,
     // every batch the checkpoint has committed is past its redelivery
@@ -5112,13 +4702,8 @@ object DocQueries {
     * novelty columns from the novelty sink. */
   private[graft] def capstoneTable(s: SparkSession, dir: String,
       funnelSinkDir: String, novSinkDir: String): DataFrame = {
-    val fun = s.read.parquet(funnelSinkDir)
-      .select((col("batch").cast(LongType) + 1).as("batch"),
-        col("source"), col("batch_docs"), col("near_dups"),
-        col("kept_docs"))
-    val nov = s.read.parquet(novSinkDir)
-      .select((col("batch").cast(LongType) + 1).as("batch"),
-        col("source"), col("batch_grams"), col("novel_grams"))
+    val fun = sinkLog(s, funnelSinkDir, funnelCols: _*)
+    val nov = sinkLog(s, novSinkDir, "source", "batch_grams", "novel_grams")
     // drift columns from the shared q116b arithmetic — the batch
     // counts are the funnel's, so the monitor costs nothing extra
     withDriftColumns(s, dir, fun)
@@ -5134,13 +4719,10 @@ object DocQueries {
   private val q122 = QueryDef(
     "q122_stream_ingest_capstone",
     (s, dir) => {
-      val replay = graft.streaming.StreamingJobs.docsReplayDir(s, dir)
-      def tmp(tag: String): String = Scratch.dir(s"graft-q122-$tag")
-      val (dBands, dSets, cBands, cSets, gDelta, gFold, fSink, nSink,
-        ckpt) =
-        (tmp("dbands"), tmp("dsets"), tmp("cbands"), tmp("csets"),
-          tmp("gdelta"), tmp("gfold"), tmp("fsink"), tmp("nsink"),
-          tmp("ckpt"))
+      val replay = StreamingJobs.docsReplayDir(s, dir)
+      val Seq(dBands, dSets, cBands, cSets, gDelta, gFold, fSink, nSink,
+        ckpt) = Scratch.dirs("graft-q122", "dbands", "dsets", "cbands",
+          "csets", "gdelta", "gfold", "fsink", "nsink", "ckpt")
       runStreamCapstone(s, dir, replay, dBands, dSets, cBands, cSets,
         gDelta, gFold, fSink, nSink, ckpt)
       capstoneTable(s, dir, fSink, nSink)

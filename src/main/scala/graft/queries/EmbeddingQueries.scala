@@ -1133,9 +1133,9 @@ object EmbeddingQueries {
     * assignment becomes a pure projection of `e`, so each Lloyd round
     * stops shuffling a corpus-sized relation. Tie-break identical:
     * least(struct(d2, cid)) is the same lexicographic (d2, cid) min as
-    * min(struct(d2, cid)) and is visit-order-free (R21Probe: diff rows
-    * = 0, and the fold measured ~2× faster at 32k vectors despite the
-    * interpreted HOF lambda — the removed n·k materialization and
+    * min(struct(d2, cid)) and is visit-order-free (OPTIMIZATION_r21.md:
+    * diff rows = 0, and the fold measured ~2× faster at 32k vectors
+    * despite the interpreted HOF lambda — the removed n·k materialization and
     * exchange dominate). Scale note: the array row needs k·268 B in
     * one cell (k ≤ ~7M under the 2 GB cell cap) — the same
     * broadcastable-k regime the old table form capped at (~8 GB / 30M

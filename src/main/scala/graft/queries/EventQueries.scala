@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 
 import graft.Tables
 import graft.Policy._
+import graft.streaming.StreamingJobs
 
 /** Q20–Q21: the event-stream shapes, run as batch over `events`
   * (`graft.streaming` replays the same logic through Structured Streaming;
@@ -215,7 +216,6 @@ object EventQueries {
     "q44_stream_hourly",
     (s, dir) => {
       import s.implicits._
-      import graft.streaming.StreamingJobs
       val replay = StreamingJobs.replayDirFor(s, dir)
       // memory-sink query names are session-global — make each run's
       // unique so Bench's repeated executions don't collide.
@@ -227,13 +227,8 @@ object EventQueries {
       // paying 32 state stores × per-batch commit IO for a few
       // thousand aggregate rows; see withStatePartitions)
       StreamingJobs.withStatePartitions(s, 8) {
-        val q = stream.writeStream
-          .format("memory").queryName(qname)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        StreamingJobs.capturePlan("q44_stream_hourly", q)
+        StreamingJobs.drainToMemory("q44_stream_hourly", qname,
+          stream, "complete")
       }
       s.table(qname)
         .select(date_format($"hour", "yyyy-MM-dd HH:mm:ss").as("hour"),
@@ -264,7 +259,6 @@ object EventQueries {
     "q49_stream_sessions",
     (s, dir) => {
       import s.implicits._
-      import graft.streaming.StreamingJobs
       val replay = StreamingJobs.replayDirFor(s, dir)
       val qname = s"q49_mem_${memCounter.incrementAndGet()}"
       val stream = StreamingJobs.sessions(
@@ -272,13 +266,8 @@ object EventQueries {
       // session state sized to the job, like q58 (see
       // StreamingJobs.withStatePartitions)
       StreamingJobs.withStatePartitions(s, 8) {
-        val q = stream.writeStream
-          .format("memory").queryName(qname)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        StreamingJobs.capturePlan("q49_stream_sessions", q)
+        StreamingJobs.drainToMemory("q49_stream_sessions", qname,
+          stream, "complete")
       }
       s.table(qname)
         .select($"user_id",
@@ -372,7 +361,6 @@ object EventQueries {
     "q58_stream_funnel",
     (s, dir) => {
       import s.implicits._
-      import graft.streaming.StreamingJobs
       val replay = StreamingJobs.replayDirFor(s, dir)
       val qname = s"q58_mem_${memCounter.incrementAndGet()}"
       def side(t: String) = StreamingJobs
@@ -381,14 +369,9 @@ object EventQueries {
       // ~20k state rows across 4 stores per side — 8 partitions, not
       // the relational 32 (measured 8.7 → 3.4 s at sf0.1)
       StreamingJobs.withStatePartitions(s, 8) {
-        val q = StreamingJobs
-          .clickPurchaseFunnel(side("click"), side("purchase"))
-          .writeStream.format("memory").queryName(qname)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        StreamingJobs.capturePlan("q58_stream_funnel", q)
+        StreamingJobs.drainToMemory("q58_stream_funnel", qname,
+          StreamingJobs.clickPurchaseFunnel(side("click"), side("purchase")),
+          "append")
       }
       s.table(qname)
         .select($"c_user".as("user_id"), $"click_id",
@@ -492,13 +475,11 @@ object EventQueries {
     "q79_stream_foreach_sink",
     (s, dir) => {
       import s.implicits._
-      import graft.streaming.StreamingJobs
       val replay = StreamingJobs.replayDirMulti(s, dir)
       // Scratch-registered like the q110d family's dirs (round-16
       // review finding: q79 was the one streaming query still leaking
       // its per-rep sink/checkpoint copies past the harness purge)
-      val out = Scratch.dir("graft-q79-sink")
-      val ckpt = Scratch.dir("graft-q79-ckpt")
+      val Seq(out, ckpt) = Scratch.dirs("graft-q79", "sink", "ckpt")
       StreamingJobs.withStatePartitions(s, 8) {
         StreamingJobs.runForeachBatchCounts(s, replay, ckpt, out)
       }
@@ -567,7 +548,6 @@ object EventQueries {
     "q96_stream_totals",
     (s, dir) => {
       import s.implicits._
-      import graft.streaming.StreamingJobs
       val replay = StreamingJobs.replayDirFor(s, dir)
       val qname = s"q96_mem_${memCounter.incrementAndGet()}"
       val key = "spark.sql.streaming.stateStore.providerClass"
@@ -579,13 +559,8 @@ object EventQueries {
           .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
           .as[StreamingJobs.Event]
         StreamingJobs.withStatePartitions(s, 8) {
-          val q = StreamingJobs.runningTotals(stream).toDF()
-            .writeStream.format("memory").queryName(qname)
-            .outputMode("update")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          StreamingJobs.capturePlan("q96_stream_totals", q)
+          StreamingJobs.drainToMemory("q96_stream_totals", qname,
+            StreamingJobs.runningTotals(stream).toDF(), "update")
         }
       } finally prev match {
         case Some(v) => s.conf.set(key, v)
@@ -619,19 +594,13 @@ object EventQueries {
     "q97_stream_sliding",
     (s, dir) => {
       import s.implicits._
-      import graft.streaming.StreamingJobs
       val replay = StreamingJobs.replayDirFor(s, dir)
       val qname = s"q97_mem_${memCounter.incrementAndGet()}"
       val stream = StreamingJobs.slidingCounts(
         StreamingJobs.readReplayStream(s, replay))
       StreamingJobs.withStatePartitions(s, 8) {
-        val q = stream.writeStream
-          .format("memory").queryName(qname)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        StreamingJobs.capturePlan("q97_stream_sliding", q)
+        StreamingJobs.drainToMemory("q97_stream_sliding", qname,
+          stream, "complete")
       }
       s.table(qname)
         .select(date_format($"w_start", "yyyy-MM-dd HH:mm:ss").as("w_start"),
@@ -663,19 +632,13 @@ object EventQueries {
     "q98_stream_dedup",
     (s, dir) => {
       import s.implicits._
-      import graft.streaming.StreamingJobs
       val replay = StreamingJobs.replayDirDup(s, dir)
       val qname = s"q98_mem_${memCounter.incrementAndGet()}"
       val stream = StreamingJobs.dedupedHourlyCounts(
         StreamingJobs.readReplayStream(s, replay, maxFilesPerTrigger = Some(1)))
       StreamingJobs.withStatePartitions(s, 8) {
-        val q = stream.writeStream
-          .format("memory").queryName(qname)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        StreamingJobs.capturePlan("q98_stream_dedup", q)
+        StreamingJobs.drainToMemory("q98_stream_dedup", qname,
+          stream, "complete")
       }
       s.table(qname)
         .select(date_format($"hour", "yyyy-MM-dd HH:mm:ss").as("hour"),
@@ -701,20 +664,14 @@ object EventQueries {
     "q99_stream_enrich",
     (s, dir) => {
       import s.implicits._
-      import graft.streaming.StreamingJobs
       val replay = StreamingJobs.replayDirFor(s, dir)
       val qname = s"q99_mem_${memCounter.incrementAndGet()}"
       val stream = StreamingJobs.segmentActivity(
         StreamingJobs.readReplayStream(s, replay),
         Tables.load(s, dir, "customer"))
       StreamingJobs.withStatePartitions(s, 8) {
-        val q = stream.writeStream
-          .format("memory").queryName(qname)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        StreamingJobs.capturePlan("q99_stream_enrich", q)
+        StreamingJobs.drainToMemory("q99_stream_enrich", qname,
+          stream, "complete")
       }
       s.table(qname)
         .select($"c_mktsegment", $"n_events", $"sum_value")

@@ -32,6 +32,10 @@ object Scratch {
     p.toString
   }
 
+  /** One fresh registered dir per tag, named `<prefix>-<tag>`. */
+  def dirs(prefix: String, tags: String*): Seq[String] =
+    tags.map(t => dir(s"$prefix-$t"))
+
   def liveCount: Int = live.size
 
   /** Recursively delete every scratch dir registered since the last

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupStateTimeout
 import org.apache.spark.sql.types._
@@ -498,16 +498,39 @@ object StreamingJobs {
     val counts = readReplayStream(spark, replayDir, Some(1))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"), sumDbl(col("value")).as("sum_value"))
-    val q = counts.writeStream
-      .outputMode("update")
-      .foreachBatch { (df: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/batch=$id")
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    drain("q79_stream_foreach_sink", ckpt, counts, "update") { (df, id) =>
+      df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/batch=$id")
+    }
+  }
+
+  /** THE foreachBatch driver: drain `stream` through `batchFn` once
+    * with Trigger.AvailableNow under the checkpoint `ckpt`, then record
+    * the micro-batch plan under `name` (capturePlan). Every foreachBatch
+    * job in the engine runs through here, so the streams share one
+    * replay/commit skeleton and each query supplies only its per-batch
+    * kernel. `batchFn` must be a pure function of (batchId, data):
+    * delivery is at-least-once. */
+  def drain(name: String, ckpt: String, stream: DataFrame,
+      outputMode: String = "append")(batchFn: (DataFrame, Long) => Unit)
+      : Unit =
+    runOnce(name, stream.writeStream.outputMode(outputMode)
+      .foreachBatch { (df: DataFrame, id: Long) => batchFn(df, id) }
+      .option("checkpointLocation", ckpt))
+
+  /** The memory-sink twin of `drain`: replay `stream` once into the
+    * session-global memory table `table` (the q44-class oracle entries
+    * then read it back), recording the plan under `name`. */
+  def drainToMemory(name: String, table: String, stream: DataFrame,
+      outputMode: String): Unit =
+    runOnce(name, stream.writeStream.outputMode(outputMode)
+      .format("memory").queryName(table))
+
+  private def runOnce(name: String,
+      w: org.apache.spark.sql.streaming.DataStreamWriter[Row]): Unit = {
+    val q = w.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    capturePlan("q79_stream_foreach_sink", q)
+    capturePlan(name, q)
   }
 
   /** Resolve the foreachBatch change-log directory to its current

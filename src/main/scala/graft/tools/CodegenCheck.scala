@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.{Sessions, SparkEntry}
-import org.apache.spark.sql.execution.debug._
 
 /** Dev tool: whole-stage-codegen audit for named queries. Prints each
   * WholeStageCodegen subtree's max generated-method bytecode size —

@@ -4,12 +4,20 @@ import java.io.{ByteArrayOutputStream, PrintStream}
 import java.nio.file.{Files, Paths}
 
 import graft.{Sessions, SparkEntry}
+import graft.streaming.StreamingJobs
 
 /** Writes PLANS.md: the formatted physical plans of the representative
   * queries, as reviewable evidence of the scale properties the code
   * comments argue (pushdown, pruning, broadcast-vs-shuffle choice,
   * banded joins, window rewrites). Regenerate after plan-affecting
-  * changes:  sbt "runMain graft.tools.PlanDump /root/testdata/sf0.1" */
+  * changes:  sbt "runMain graft.tools.PlanDump /root/testdata/sf0.1"
+  *
+  * Round form, for before/after optimization evidence:
+  *   sbt "runMain graft.tools.PlanDump <sfDir> <outDir> <tag> <query...>"
+  * writes `<outDir>/<query>_<tag>.txt` per named query: its formatted
+  * physical plan plus, for streaming queries, the recorded inner
+  * foreachBatch plans (the returned DataFrame is a sink read, so the
+  * per-batch kernels are the plans that matter). */
 object PlanDump {
   private val picks = Seq(
     "q01_pricing_summary"    -> "scan pushdown + pruning + partial/final decimal agg",
@@ -71,11 +79,11 @@ object PlanDump {
     * the per-batch dedup/probe join shapes a 100 TB operator reads
     * first (round-15 verdict item 4). */
   private val streamPicks = Seq(
-    "q110d_stream_index_dedup" -> "streaming incremental dedup — per-batch dedup vs base ∪ strictly-earlier deltas (`batch < id`), broadcast kept-id semis",
+    "q110d_stream_index_dedup" -> "streaming incremental dedup, the shared LSM cadence read with folding off — per-batch dedup vs base ∪ the delta tail below the batch (f = -1; batch 0's empty tail elided by listing), broadcast kept-id semis",
     "q110f_stream_compaction"  -> "streaming compaction, compact-every-k cadence (k=1 here) — batch 0 dedups vs base then folds; batch 1 scans the immutable fold=0 segment alone (no base, no delta)",
     "q116b_stream_drift"       -> "streaming drift — stateless |sources|-row count inside foreachBatch; corpus joined at read time",
     "q117b_stream_novelty"     -> "streaming novelty — bounded batch grams broadcast-semi against ONE pruned gram-index scan per batch",
-    "q117d_stream_gram_append" -> "streaming cumulative gram append — per-batch probe of index ∪ strictly-earlier deltas (`batch < id`), novel grams appended as the batch's own segment",
+    "q117d_stream_gram_append" -> "streaming cumulative gram append, the shared LSM cadence read with folding off — per-batch probe of index ∪ the delta tail below the batch (f = -1; batch 0's empty tail elided by listing), novel grams appended as the batch's own segment",
     "q117e_stream_gram_compaction" -> "streaming gram compaction, compact-every-k cadence (k=1 here) — batch 0 probes the base gram index then folds; batch 1 probes the immutable fold=0 segment alone",
     "q122_stream_ingest_capstone" -> "streaming ingest capstone — ONE replay drain per batch: shared shingle pass feeds the dedup kernel AND the gram probe, both riding ONE compact-every-k fold cadence (k=1 here: batch 1's dedup and probe scan fold=0 segments alone)")
 
@@ -93,8 +101,51 @@ object PlanDump {
     text.replaceAll(
       "/tmp/(graft-[A-Za-z0-9.-]+?)\\d+(?![A-Za-z0-9.-])", "<$1>")
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
+  def main(args: Array[String]): Unit = args match {
+    case Array() => plansMd("/root/testdata/sf0.1")
+    case Array(sfDir) => plansMd(sfDir)
+    case Array(sfDir, outDir, tag, names @ _*) if names.nonEmpty =>
+      roundDump(sfDir, outDir, tag, names)
+    case _ => throw new IllegalArgumentException(
+      "usage: PlanDump [sfDir] | PlanDump <sfDir> <outDir> <tag> <query...>")
+  }
+
+  private def explained(df: org.apache.spark.sql.DataFrame): String = {
+    val buf = new ByteArrayOutputStream()
+    Console.withOut(new PrintStream(buf, true, "UTF-8")) {
+      df.explain("formatted")
+    }
+    buf.toString("UTF-8").trim
+  }
+
+  /** The recorded inner foreachBatch plans of one streaming query, in
+    * (name, numeric batch id) order. */
+  private def innerPlans(name: String): Seq[(String, String)] =
+    StreamingJobs.innerPlanKeys.filter(_.startsWith(name + " "))
+      .map(k => k -> StreamingJobs.innerPlanOf(k).get.trim)
+
+  private def roundDump(sfDir: String, outDir: String, tag: String,
+      names: Seq[String]): Unit = {
+    val spark = Sessions.local("graft-plandump")
+    Files.createDirectories(Paths.get(outDir))
+    names.foreach { name =>
+      val out = new StringBuilder
+      out ++= s"== $name ($tag) ==\n\n"
+      out ++= explained(SparkEntry.queries(name)(spark, sfDir))
+      out ++= "\n"
+      innerPlans(name).foreach { case (k, plan) =>
+        out ++= s"\n== recorded inner plan: $k ==\n\n$plan\n"
+      }
+      val file = Paths.get(outDir, s"${name}_$tag.txt")
+      Files.writeString(file, normalizeScratch(out.toString))
+      println(s"[plandump] wrote $file")
+      graft.queries.QueryCaches.releaseAll()
+      graft.queries.Scratch.purge()
+    }
+    spark.stop()
+  }
+
+  private def plansMd(sfDir: String): Unit = {
     val spark = Sessions.local("graft-plandump")
     val out = new StringBuilder
     out ++= "# PLANS — formatted physical plans of representative queries\n\n"
@@ -103,24 +154,18 @@ object PlanDump {
     out ++= "machine-checked versions of these properties live in\n"
     out ++= "`PlanShapeSpec`.\n"
     picks.foreach { case (name, why) =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val buf = new ByteArrayOutputStream()
-      Console.withOut(new PrintStream(buf, true, "UTF-8")) {
-        df.explain("formatted")
-      }
-      out ++= s"\n## $name — $why\n\n```\n${buf.toString("UTF-8").trim}\n```\n"
+      out ++= s"\n## $name — $why\n\n```\n" +
+        explained(SparkEntry.queries(name)(spark, sfDir)) + "\n```\n"
     }
     var streamSections = 0
     streamPicks.foreach { case (name, why) =>
       // building the DataFrame RUNS the replay (the q44 caveat), which
       // records each micro-batch kernel's plan as a side effect
       SparkEntry.queries(name)(spark, sfDir)
-      val keys = graft.streaming.StreamingJobs.innerPlanKeys
-        .filter(_.startsWith(name + " "))
-      require(keys.nonEmpty, s"$name recorded no inner plans")
+      val plans = innerPlans(name)
+      require(plans.nonEmpty, s"$name recorded no inner plans")
       out ++= s"\n## $name — $why (recorded inner foreachBatch plans)\n"
-      keys.foreach { k =>
-        val plan = graft.streaming.StreamingJobs.innerPlanOf(k).get.trim
+      plans.foreach { case (k, plan) =>
         out ++= s"\n### $k\n\n```\n$plan\n```\n"
         streamSections += 1
       }

@@ -111,6 +111,23 @@ class GramAppendSpec extends AnyFunSuite {
       "redelivered batches changed the sink or the gram segments")
   }
 
+  test("q117d: folding off — the run lists and writes no fold segment anywhere") {
+    // q117d runs the shared gram kernel with folding off: its probe is
+    // the cadence read at f = -1, and no fold=<n> segment or
+    // .fold=<n>.staging leftover may appear under any run directory
+    val replay = graft.streaming.StreamingJobs.docsReplayDir(spark, dir)
+    def tmp(t: String): String = java.nio.file.Files
+      .createTempDirectory(s"graft-ganf-$t").toString
+    val runDirs @ Seq(delta, sink, ckpt) =
+      Seq(tmp("delta"), tmp("sink"), tmp("ckpt"))
+    DocQueries.runStreamGramAppend(spark, dir, replay, delta, sink, ckpt)
+    assert(new java.io.File(s"$delta/batch=1").exists() &&
+      new java.io.File(s"$sink/batch=1").exists(),
+      "the run did not drain both batches")
+    val folds = TestSpark.foldSegmentsUnder(runDirs :+ replay)
+    assert(folds.isEmpty, s"folding-off run left fold segments: $folds")
+  }
+
   test("q117d: checkpoint resume between batches equals the one-shot run") {
     import java.nio.file.{Files, Path, StandardCopyOption}
     val oneShot = streamed.map(_.toSeq).toSeq // force BEFORE own legs

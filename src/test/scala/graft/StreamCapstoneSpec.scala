@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.lsm.Lsm
 import graft.queries.{DocQueries, Registry}
 import graft.streaming.StreamingJobs
 
@@ -359,15 +360,15 @@ class StreamCapstoneSpec extends AnyFunSuite {
     val (iBands, iSets) = graft.Tables.minhashIndexBase(spark, dir)
     val grams = graft.Tables.gramIndex(spark, dir)
     val rels = Seq(
-      DocQueries.LsmRelation(
+      Lsm.LsmRelation(
         iBands.select("doc_id", "band_idx", "band_val"), db,
         Seq("doc_id", "band_idx", "band_val"), cb),
-      DocQueries.LsmRelation(iSets.select("doc_id", "ss", "n"), ds,
+      Lsm.LsmRelation(iSets.select("doc_id", "ss", "n"), ds,
         Seq("doc_id", "ss", "n"), cs),
-      DocQueries.LsmRelation(grams.select("gram"), gd, Seq("gram"), gf))
-    assert(DocQueries.checkpointedBatchId(ckptNoGc) === 1L,
+      Lsm.LsmRelation(grams.select("gram"), gd, Seq("gram"), gf))
+    assert(Lsm.checkpointedBatchId(ckptNoGc) === 1L,
       "commit log does not show both drained batches")
-    assert(DocQueries.lsmGc(rels, 1L) === 1L)
+    assert(Lsm.lsmGc(rels, 1L) === 1L)
     assertGcd(dirsNoGc)
     assert(!new java.io.File(s"$cb/.fold=0.staging").exists(),
       "GC left the dead staging leftover alive")

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.lsm.Lsm
 import graft.queries.{DocQueries, Registry}
 import graft.streaming.StreamingJobs
 
@@ -97,6 +98,23 @@ class StreamIndexDedupSpec extends AnyFunSuite {
       DocQueries.streamDedupTable(spark, sink)
         .collect().map(_.toSeq).toSeq,
       "a seeded tree and an unseeded tree disagree")
+  }
+
+  test("folding off: a q110d run lists and writes no fold segment anywhere") {
+    // q110d runs the shared dedup kernel with folding off: its read is
+    // the cadence read at f = -1, and no fold=<n> segment or
+    // .fold=<n>.staging leftover may appear under any run directory
+    val replay = StreamingJobs.docsReplayDir(spark, dir)
+    def tmp(t: String): String = java.nio.file.Files
+      .createTempDirectory(s"graft-sinf-$t").toString
+    val runDirs @ Seq(db, ds, sink, ckpt) =
+      Seq(tmp("dbands"), tmp("dsets"), tmp("sink"), tmp("ckpt"))
+    DocQueries.runStreamIndexDedup(spark, dir, replay, db, ds, sink, ckpt)
+    assert(new java.io.File(s"$db/batch=1").exists() &&
+      new java.io.File(s"$sink/batch=1").exists(),
+      "the run did not drain both batches")
+    val folds = TestSpark.foldSegmentsUnder(runDirs :+ replay)
+    assert(folds.isEmpty, s"folding-off run left fold segments: $folds")
   }
 
   test("at-least-once redelivery leaves the funnel and the index unchanged") {
@@ -530,10 +548,10 @@ class StreamIndexDedupSpec extends AnyFunSuite {
         cadenceTmp("cb4"), cadenceTmp("cs4"), cadenceTmp("sink4"))
       seedDeltas(db, ds)
       val rels = Seq(
-        DocQueries.LsmRelation(
+        Lsm.LsmRelation(
           iBands.select("doc_id", "band_idx", "band_val"), db,
           Seq("doc_id", "band_idx", "band_val"), cb),
-        DocQueries.LsmRelation(iSets.select("doc_id", "ss", "n"), ds,
+        Lsm.LsmRelation(iSets.select("doc_id", "ss", "n"), ds,
           Seq("doc_id", "ss", "n"), cs))
       def batch(id: Long): Unit =
         DocQueries.streamCompactBatch(spark, fourBatches(id.toInt), id,
@@ -541,7 +559,7 @@ class StreamIndexDedupSpec extends AnyFunSuite {
       batch(0L); batch(1L) // k=1: fold=0 and fold=1 both commit
       if (gc) {
         // batch 1 committed its fold but "has not checkpointed yet"
-        assert(DocQueries.lsmGc(rels, 0L) === 0L)
+        assert(Lsm.lsmGc(rels, 0L) === 0L)
         assert(new java.io.File(s"$cb/fold=0", "_SUCCESS").exists() &&
           new java.io.File(s"$cb/fold=1", "_SUCCESS").exists() &&
           new java.io.File(s"$db/batch=1").exists(),
@@ -560,7 +578,7 @@ class StreamIndexDedupSpec extends AnyFunSuite {
         assert(new java.io.File(s"$cs/fold=0", "_SUCCESS").delete())
         // now batch 1 checkpoints: fold=0 (committed OR torn) and
         // delta-1 are dead
-        assert(DocQueries.lsmGc(rels, 1L) === 1L)
+        assert(Lsm.lsmGc(rels, 1L) === 1L)
         assert(!new java.io.File(s"$cb/fold=0").exists() &&
           !new java.io.File(s"$cs/fold=0").exists() &&
           !new java.io.File(s"$db/batch=1").exists(),

@@ -27,6 +27,23 @@ object TestSpark {
     }
   }
 
+  /** Every `fold=<n>` segment or `.fold=<n>.staging` leftover at any
+    * depth under `dirs` — the no-fold laws of StreamIndexDedupSpec and
+    * GramAppendSpec assert a folding-off run leaves none. */
+  def foldSegmentsUnder(dirs: Seq[String]): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val fold = """\.?fold=-?\d+(\.staging)?""".r
+    dirs.map(java.nio.file.Paths.get(_))
+      .filter(java.nio.file.Files.exists(_)).flatMap { root =>
+        val walk = java.nio.file.Files.walk(root)
+        try walk.iterator().asScala
+          .filter(p => java.nio.file.Files.isDirectory(p) &&
+            fold.matches(p.getFileName.toString))
+          .map(_.toString).toList
+        finally walk.close()
+      }
+  }
+
   /** The FINAL section of an executed AQE plan string. AQE's toString
     * prints "== Final Plan ==" followed by "== Initial Plan ==", and
     * the Initial section legitimately contains shapes (e.g. an SMJ
