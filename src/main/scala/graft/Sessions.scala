@@ -18,6 +18,17 @@ import org.apache.spark.sql.SparkSession
   *     AQE coalesces post-shuffle partitions anyway.
   *   - AQE on: runtime re-plan (broadcast conversion, skew-join split) is
   *     the 100 TB answer to stats drift; we design plans assuming it.
+  *   - buffer.pageSize=1m: a Tungsten page is the smallest unit a hash
+  *     map or sorter takes, and a broadcast hashed relation holds one
+  *     whole page for a few KB of rows. At the 16 MB default, the
+  *     relations a pass leaves in the driver's memory store until a GC
+  *     lets ContextCleaner drop them show up as tens of MB of live heap.
+  *     1 MB is inside Spark's own 1–64 MB default range, and a task still
+  *     addresses 8 GB through its 8,192-entry page table. The page also
+  *     bounds HashAggregate's first-level fast map, so more keys spill
+  *     over to the regular map: partial-aggregate rows leave in another
+  *     order (shuffle bytes move by tenths of a percent), with the same
+  *     values.
   */
 object Sessions {
   def cpus: String = sys.props.get("SPARK_GRAFT_CPUS")
@@ -32,6 +43,7 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.buffer.pageSize", "1m")
       .config("spark.sql.warehouse.dir",
         sys.props.getOrElse("graft.warehouse", "/tmp/graft-warehouse"))
       .config("spark.ui.enabled", "false")

@@ -87,19 +87,45 @@ object PlanDump {
     "q117e_stream_gram_compaction" -> "streaming gram compaction, compact-every-k cadence (k=1 here) — batch 0 probes the base gram index then folds; batch 1 probes the immutable fold=0 segment alone",
     "q122_stream_ingest_capstone" -> "streaming ingest capstone — ONE replay drain per batch: shared shingle pass feeds the dedup kernel AND the gram probe, both riding ONE compact-every-k fold cadence (k=1 here: batch 1's dedup and probe scan fold=0 segments alone)")
 
-  /** Replace per-run /tmp scratch paths (Scratch.dir and the replay
-    * temp dirs — `createTempDirectory(tag)` = tag + a random digit
-    * run) with the stable `<tag>` placeholder, so regenerating
-    * PLANS.md doesn't churn the diff with nondeterministic paths
-    * (round-16 ADVICE item 4). The lookahead pins the digit run to the
-    * END of the path component — tags like "graft-q110d-sink" keep
-    * their interior digits. CONTRACT: temp-dir tags must not END in a
-    * digit (the split between tag and random suffix would be
-    * ambiguous and two tags could normalize to one placeholder —
-    * review finding; "graft-replay4" was renamed for this). */
-  private[tools] def normalizeScratch(text: String): String =
-    text.replaceAll(
-      "/tmp/(graft-[A-Za-z0-9.-]+?)\\d+(?![A-Za-z0-9.-])", "<$1>")
+  /** Rewrite the run-dependent tokens of plan text so regenerating
+    * PLANS.md (or a round dump) diffs only where a plan changed:
+    *
+    *   - per-run /tmp scratch paths (Scratch.dir and the replay temp
+    *     dirs — `createTempDirectory(tag)` = tag + a random digit run)
+    *     become the stable `<tag>` placeholder. The lookahead pins the
+    *     digit run to the END of the path component — tags like
+    *     "graft-q110d-sink" keep their interior digits. CONTRACT:
+    *     temp-dir tags must not END in a digit (the split between tag
+    *     and random suffix would be ambiguous and two tags could
+    *     normalize to one placeholder; "graft-replay4" was renamed for
+    *     this);
+    *   - `<File>.scala:<line>` call sites lose the line number, which
+    *     moves with every edit above it;
+    *   - an exchange's partition count equal to the session's shuffle
+    *     partitions (`SPARK_GRAFT_CPUS`) becomes `<partitions>`;
+    *   - expression ids `#n`, `plan_id=n` and `RDD[n]` are renumbered
+    *     per section (a markdown heading or an `== … ==` line starts
+    *     one) in order of first appearance: they count up over the
+    *     whole JVM, so they depend on what ran before. */
+  private[tools] def normalizeScratch(text: String,
+      partitions: String = Sessions.cpus): String = {
+    val stable = text
+      .replaceAll("/tmp/(graft-[A-Za-z0-9.-]+?)\\d+(?![A-Za-z0-9.-])", "<$1>")
+      .replaceAll("(\\w+\\.scala):\\d+", "$1")
+      .replaceAll(s"(?<=[(, ])$partitions(?=\\), [A-Z_]+, \\[plan_id=)",
+        "<partitions>")
+    stable.split("(?m)(?=^(?:#{1,6} |== ))").map(renumberIds).mkString
+  }
+
+  private val runIds =
+    Seq("#(\\d+)", "plan_id=(\\d+)", "RDD\\[(\\d+)\\]").map(_.r)
+
+  private def renumberIds(section: String): String =
+    runIds.foldLeft(section) { (text, id) =>
+      val seen = scala.collection.mutable.Map.empty[String, Int]
+      id.replaceAllIn(text, m => m.matched.replace(m.group(1),
+        seen.getOrElseUpdate(m.group(1), seen.size).toString))
+    }
 
   def main(args: Array[String]): Unit = args match {
     case Array() => plansMd("/root/testdata/sf0.1")

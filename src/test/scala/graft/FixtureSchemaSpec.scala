@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Fixture-schema guard (round-8 verdict item 2): pins the CANONICAL
@@ -14,6 +18,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * suite pins. When the driver re-provisions testdata incompatibly, this
   * suite fails FIRST with one readable message, instead of 14 opaque
   * golden-hash failures discovering it piecemeal.
+  *
+  * `Tables.load` reads through a memoized inferred schema; the last two
+  * laws pin that the memo changes nothing a query sees and that a repeat
+  * load costs no Spark job.
   */
 class FixtureSchemaSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -76,5 +84,42 @@ class FixtureSchemaSpec extends AnyFunSuite {
     assert(diffs.isEmpty,
       "\nFIXTURE ROW-COUNT MISMATCH — testdata re-provisioned?\n" +
         diffs.mkString("\n"))
+  }
+
+  test("the memoized schema equals a fresh inference at sf0.001 and sf0.01") {
+    val diffs = for {
+      d <- Seq(dir, dir.replace("sf0.001", "sf0.01"))
+      name <- Tables.names
+      fresh = spark.read.parquet(Tables.path(d, name))
+      want = Tables.canonical(name, fresh).schema
+      got = Tables.load(spark, d, name).schema
+      if got != want
+    } yield s"  $d/$name:\n    inferred $want\n    loaded   $got"
+    assert(diffs.isEmpty, "\n" + diffs.mkString("\n"))
+  }
+
+  test("a repeat Tables.load starts no Spark job") {
+    val sc = spark.sparkContext
+    Tables.names.foreach(Tables.load(spark, dir, _))
+    val marker = "graft.fixtureSchemaSpec.marker"
+    val jobs = new AtomicInteger
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(marker) != null)
+          markerSeen.countDown()
+        else jobs.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    try {
+      Tables.names.foreach(n => Tables.load(spark, dir, n).schema)
+      // the bus is FIFO: once the marker job's start is delivered, every
+      // job the loads above could have started has been delivered too
+      sc.setLocalProperty(marker, "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(marker, null)
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "marker job never seen")
+      assert(jobs.get == 0, s"${jobs.get} Spark job(s) started by repeat loads")
+    } finally sc.removeSparkListener(listener)
   }
 }
