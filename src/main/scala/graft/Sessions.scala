@@ -29,6 +29,20 @@ import org.apache.spark.sql.SparkSession
   *     over to the regular map: partial-aggregate rows leave in another
   *     order (shuffle bytes move by tenths of a percent), with the same
   *     values.
+  *   - sql.codegen.cache.maxEntries=4096: Spark keeps the classes Janino
+  *     compiles for generated code in one JVM-wide LRU cache of this
+  *     many entries (default 100). The working sets are larger: a
+  *     doc_pipeline pass of loadbench needs about 400 distinct classes,
+  *     olap_batch about 180, and a Bench JVM has compiled 2,632 by the
+  *     end of its first pass over all 149 queries at sf0.1. At 100 the
+  *     cache thrashes and every warm pass pays the compile again, while
+  *     codegen only pays off when a class is compiled once and run many
+  *     times (Spark SQL, SIGMOD 2015, §4.3.4). 4096 is the smallest
+  *     power of two at least 1.25 times the Bench count; a cached class
+  *     holds about 25 KB of live heap.
+  *     It is a static conf that `CodeGenerator` reads once, when the
+  *     object is first initialized, so the first session in a JVM fixes
+  *     it for the JVM's life: that session must come from here.
   */
 object Sessions {
   def cpus: String = sys.props.get("SPARK_GRAFT_CPUS")
@@ -44,6 +58,7 @@ object Sessions {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.buffer.pageSize", "1m")
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.sql.warehouse.dir",
         sys.props.getOrElse("graft.warehouse", "/tmp/graft-warehouse"))
       .config("spark.ui.enabled", "false")

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session-state hygiene for registry queries that `persist()` (today:
   * q93's shared daily summary). A registry query must not leak cache
@@ -32,8 +32,21 @@ object QueryCaches {
     b.result()
   }
 
-  /** Unpersist everything tracked since the last release. Safe to call
-    * when empty (the common case — only cache-exemplar queries track). */
+  /** Unpersist everything tracked since the last release, then every
+    * spent `localCheckpoint` pin. Safe to call when empty.
+    *
+    * A builder's `localCheckpoint()` persists its RDD's blocks in the
+    * block manager and nothing else tracks them, so without this a
+    * query's pins stay until ContextCleaner drops them after some later
+    * GC finds the RDD unreachable: a pass's leftovers read as about
+    * 10 MB of deserialized blocks in the next query's live heap. A
+    * pin's lineage is truncated, so once its blocks are gone its
+    * DataFrame cannot be recomputed: reading it again fails with
+    * Spark's "Checkpoint block ... not found" error. So no caller may
+    * reuse a query's DataFrame across a release, and none does: Bench,
+    * Verify, ProfileQuery, GoldenGen, PlanDump and loadbench each run
+    * a query, then release.
+    */
   def releaseAll(): Unit = {
     var df = live.poll()
     while (df != null) {
@@ -41,5 +54,9 @@ object QueryCaches {
       catch { case _: Throwable => () }
       df = live.poll()
     }
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .foreach(_.sparkContext.getPersistentRDDs.values
+        .filter(_.isCheckpointed)
+        .foreach(_.unpersist(blocking = false)))
   }
 }

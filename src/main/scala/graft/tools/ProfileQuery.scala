@@ -1,12 +1,17 @@
 package graft.tools
 
 import graft.{Sessions, SparkEntry}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Dev measurement tool (guide §1): run named queries once (after a
   * warm-up rep) and print every Spark job's wall time + the dead time
   * between jobs — the fixed-overhead breakdown the LSM/streaming rows
-  * need (their cost is per-job overhead, not data).
+  * need (their cost is per-job overhead, not data) — and how many
+  * classes the measured rep compiled and in how many seconds (0 for
+  * most queries once the warm-up rep has filled the codegen cache; see
+  * Sessions).
   * Usage: runMain graft.tools.ProfileQuery <sfDir> <query> [query...] */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
@@ -42,10 +47,14 @@ object ProfileQuery {
     }
     args.tail.foreach { name =>
       done.clear()
+      val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileNs0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       val w0 = System.currentTimeMillis()
       SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
       val total = (System.nanoTime() - t0) / 1e9
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
+      val compileS = (CodeGenerator.compileTime - compileNs0) / 1e9
       Thread.sleep(300) // let listener events drain
       import scala.jdk.CollectionConverters._
       val evs = done.asScala.toSeq.sortBy(_._2)
@@ -62,6 +71,7 @@ object ProfileQuery {
         cursor = math.max(cursor, s1)
       }
       println(f"  == jobs ${jobSum / 1000.0}%.3f s (sum), inter-job gaps ${gapSum / 1000.0}%.3f s, wall $total%.3f s")
+      println(f"  == codegen $compiled classes compiled in $compileS%.3f s")
       graft.queries.QueryCaches.releaseAll()
       graft.queries.Scratch.purge()
     }

@@ -81,7 +81,6 @@ class BucketingSpec extends AnyFunSuite {
   }
 
   test("sortWithinPartitions orders rows inside each partition only") {
-    import spark.implicits._
     val df = spark.range(1000).toDF("id")
       .withColumn("k", pmod(col("id") * 37, lit(1000)))
       .repartition(7)

@@ -49,4 +49,20 @@ class CacheSpec extends AnyFunSuite {
     assert(tracked.forall(_.storageLevel == StorageLevel.NONE),
       "release must actually unpersist — no InMemoryRelation survives q93")
   }
+
+  test("q23 pins: harness release unpersists every localCheckpoint; a rerun hashes the same") {
+    import tools.Canon
+    def pinned = spark.sparkContext.getPersistentRDDs.values
+      .filter(_.isCheckpointed)
+    queries.QueryCaches.releaseAll() // clean slate
+    val df = SparkEntry.queries("q23_near_dup_minhash")(spark, dir)
+    val first = Canon.rows(df)
+    assert(pinned.nonEmpty, "q23 should hold its localCheckpoint pins while it lives")
+    queries.QueryCaches.releaseAll()
+    assert(pinned.isEmpty, s"release left ${pinned.size} checkpointed RDDs persisted")
+    java.lang.ref.Reference.reachabilityFence(df)
+    val again = Canon.rows(SparkEntry.queries("q23_near_dup_minhash")(spark, dir))
+    queries.QueryCaches.releaseAll()
+    assert(Canon.sha256(again) === Canon.sha256(first))
+  }
 }

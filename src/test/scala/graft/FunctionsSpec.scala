@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -94,7 +93,6 @@ class FunctionsSpec extends AnyFunSuite {
 
   // ------------------------------------------------------- topk_by_score
   test("topk_by_score equals the window formulation (incl. partial merges)") {
-    import spark.implicits._
     // 10k rows, 7 groups, scores with deliberate ties; 13 partitions so
     // partial heaps MUST merge across partitions and serialize.
     val df = spark.range(10000).repartition(13).selectExpr(
@@ -333,7 +331,6 @@ class FunctionsSpec extends AnyFunSuite {
     // would throw — in both the interpreted and codegen paths; a null
     // past the frontier (after one side is exhausted) can't change the
     // count and leaves the result defined.
-    import spark.implicits._
     val rows = spark.sql(
       """SELECT
         |  sorted_icount(array('b', CAST(NULL AS STRING)), array('b')) AS tail_ok,

@@ -372,7 +372,6 @@ class PlanShapeSpec extends AnyFunSuite {
     // Audit the PRE-checkpoint signature pipeline directly: q32 itself
     // materializes it behind an eager localCheckpoint, whose plan is
     // invisible to the final query's debugCodegen.
-    import org.apache.spark.sql.execution.debug._
     val df = graft.queries.DocQueries.simhashSig(spark, dir)
     df.queryExecution.toRdd.count()
     val subtrees = df.queryExecution.debug.codegenToSeq()

@@ -27,24 +27,25 @@ class SpillPathSpec extends AnyFunSuite {
   private val dir = TestSpark.sf0001
 
   // in.memory.threshold=2 forces every buffered join/window array onto
-  // the spill-capable UnsafeExternalSorter immediately;
-  // spill.threshold=128 then forces disk spills in bounded batches (a
+  // the spill-capable UnsafeExternalSorter immediately; a spill
+  // threshold of 128 rows then forces disk spills in bounded batches (a
   // threshold of 2 spills per-row — pathological churn that turns a 2 s
   // query into minutes without proving anything more).
-  private val pressure = Seq(
+  private def pressure(spillRows: Int) = Seq(
     "spark.sql.autoBroadcastJoinThreshold" -> "-1",
     "spark.sql.sortMergeJoinExec.buffer.in.memory.threshold" -> "2",
-    "spark.sql.sortMergeJoinExec.buffer.spill.threshold" -> "128",
+    "spark.sql.sortMergeJoinExec.buffer.spill.threshold" -> s"$spillRows",
     "spark.sql.windowExec.buffer.in.memory.threshold" -> "2",
-    "spark.sql.windowExec.buffer.spill.threshold" -> "128",
+    "spark.sql.windowExec.buffer.spill.threshold" -> s"$spillRows",
     "spark.sql.cartesianProductExec.buffer.in.memory.threshold" -> "2",
-    "spark.sql.cartesianProductExec.buffer.spill.threshold" -> "128")
+    "spark.sql.cartesianProductExec.buffer.spill.threshold" -> s"$spillRows")
 
-  private def withPressure[A](body: => A): A = {
-    val saved = pressure.map { case (k, _) =>
+  private def withPressure[A](spillRows: Int)(body: => A): A = {
+    val knobs = pressure(spillRows)
+    val saved = knobs.map { case (k, _) =>
       k -> (try Some(spark.conf.get(k)) catch { case _: Exception => None })
     }
-    pressure.foreach { case (k, v) => spark.conf.set(k, v) }
+    knobs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
@@ -76,7 +77,7 @@ class SpillPathSpec extends AnyFunSuite {
         "q65_fuzzy_edit_dedup")) {
       val expected = Registry.byName(name).run(spark, dir)
         .collect().map(_.toSeq).toSeq
-      val got = withPressure {
+      val got = withPressure(128) {
         Registry.byName(name).run(spark, dir).collect().map(_.toSeq).toSeq
       }
       assert(got === expected, s"$name output changed under memory pressure")
@@ -87,12 +88,16 @@ class SpillPathSpec extends AnyFunSuite {
     // One join key with 200k buffered-side rows: the per-key match
     // array exceeds every threshold, so the external sorter MUST write
     // spill files (task metric diskBytesSpilled > 0) and the join must
-    // still produce exactly one output row per buffered row.
+    // still produce exactly one output row per buffered row. The
+    // constant key plans as a cartesian product, whose reader opens a
+    // read-ahead buffer for every spill file at once: at 128 rows per
+    // spill that is ~1,560 files and an OutOfMemoryError in a 4 GB
+    // heap, so this test spills every 4,096 rows (~49 files).
     import spark.implicits._
     val streamed = Seq((1L, "probe")).toDF("k", "tag")
     val buffered = spark.range(200000).select(lit(1L).as("k"), $"id")
     val (cnt, spilled) = collectSpill {
-      withPressure {
+      withPressure(4096) {
         streamed.join(buffered, "k").count()
       }
     }
