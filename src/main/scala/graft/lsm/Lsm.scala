@@ -200,7 +200,7 @@ object Lsm {
     * nothing. Skipping closes that window entirely; a TORN fold (no
     * _SUCCESS) still takes the overwrite path and completes. */
   private def lsmFoldAt(s: SparkSession, rels: Seq[LsmRelation],
-      f: Long, id: Long, midFold: () => Unit = () => ()): Unit = {
+      f: Long, id: Long, midFold: () => Unit): Unit = {
     // decide the skip set FIRST: building lsmStateAsOf eagerly lists +
     // schema-infers every relation's fold/delta locations, which is
     // pure waste for relations about to be skipped (review finding —

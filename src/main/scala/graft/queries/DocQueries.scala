@@ -31,28 +31,12 @@ object DocQueries {
   /** The 5-gram window explode every gram/shingle consumer shares —
     * ONE definition of the token-window contract (width 5,
     * space-joined, over a `toks` array<string> column) so q23's
-    * fallback branch, `shingleTable`, q117's corpus pass and the gram
+    * shingle table, `shingleTable`, q117's corpus pass and the gram
     * index cannot drift apart (review finding: this expression
     * previously lived in four hand-synchronized string literals). */
   private def gramExplode: Column =
     explode(expr("transform(sequence(1, size(toks) - 4), " +
       "i -> concat_ws(' ', slice(toks, i, 5)))"))
-
-  /** The q104/q108 vocab join-back strategy flag, parsed DEFENSIVELY:
-    * only an explicit "false" (case-insensitive, trimmed) selects the
-    * shuffle path; any other value — including "1"/"0"/typos that
-    * String.toBoolean would abort the whole query on — falls back to
-    * the broadcast default with a stderr breadcrumb (round-11 ADVICE:
-    * a misconfigured strategy flag must degrade to the default
-    * strategy, never to a query failure). */
-  private def vocabBroadcast(s: SparkSession): Boolean =
-    s.conf.getOption("graft.vocab.broadcast").forall { v =>
-      val t = v.trim.toLowerCase(java.util.Locale.ROOT)
-      if (t != "true" && t != "false")
-        System.err.println(
-          s"[graft] graft.vocab.broadcast='$v' is not true/false — using broadcast default")
-      t != "false"
-    }
 
   private val stopwords = Seq("a", "the", "of", "and", "to", "in")
   private val stopList = stopwords.map(w => s"'$w'").mkString(", ")
@@ -168,30 +152,18 @@ object DocQueries {
       // queried 100 TB corpus the same decision becomes "materialize
       // the shingle table to storage once at ingest".
       //
-      // MEASURED ALTERNATIVE, flag-wired (round-3 verdict item 7): with
-      // spark.conf `graft.shingles.native=true` the native
+      // MEASURED ALTERNATIVE, rejected (round 3): the native
       // `word_shingles(text, 5)` expression dedups per document inside
-      // the scan stage, making this shingle table MAP-ONLY (the global
-      // .distinct() shuffle disappears — per-doc distinctness is all
-      // MinHash/sizes/Jaccard ever need). On local[32] it is ~0.6 s
-      // SLOWER (4.4–4.9 s vs 3.8 s cold): a 500k-row dedup shuffle in a
-      // single JVM is memcpy-cheap, while the per-row JVM string work is
-      // real. On a multi-node cluster, where that shuffle pays
-      // network+disk, the native flag is the one to flip — documented in
-      // BASELINE.md; FunctionsSpec pins the two paths pair-identical.
-      val nativeShingles =
-        s.conf.getOption("graft.shingles.native").exists(_.toBoolean)
-      val shBase =
-        if (nativeShingles)
-          docs(s, dir).select($"doc_id",
-            explode(expr("word_shingles(text, 5)")).as("shingle"))
-        else
-          docs(s, dir)
-            .select($"doc_id", split(lower($"text"), " ").as("toks"))
-            .filter(size($"toks") >= 5)
-            .select($"doc_id", gramExplode.as("shingle"))
-            .distinct()
-      val sh = shBase.localCheckpoint()
+      // the scan stage and makes this table map-only, but on local[32]
+      // it ran ~0.6 s SLOWER (4.4–4.9 s vs 3.8 s cold): a 500k-row dedup
+      // shuffle in a single JVM is memcpy-cheap, while the per-row JVM
+      // string work is real. FunctionsSpec pins the two shapes equal.
+      val sh = docs(s, dir)
+        .select($"doc_id", split(lower($"text"), " ").as("toks"))
+        .filter(size($"toks") >= 5)
+        .select($"doc_id", gramExplode.as("shingle"))
+        .distinct()
+        .localCheckpoint()
       // ONE aggregation computes all 16 minhashes AND the shingle-set
       // size (the Jaccard denominator) — fusing `sizes` in here removes
       // a second scan+shuffle of the shingle set. One md5 per row; each
@@ -862,7 +834,7 @@ object DocQueries {
       // groupBy+join form in a back-to-back 5-rep A/B — whole-partition
       // count windows SORT their 260k input twice, while these hash
       // aggregates don't sort at all; the join probes are cheaper than
-      // the sorts. (Same lesson as q23's native-shingles flag: shapes
+      // the sorts. (Same lesson as q23's native-shingles rejection: shapes
       // that delete operators don't automatically win — measure.)
       val freq = sh.groupBy($"shingle").agg(count(lit(1)).as("df"))
       val sizes = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
@@ -1774,19 +1746,10 @@ object DocQueries {
     * QueryCaches' per-query release cycle never touches it. The
     * trainer itself ALWAYS retrains (it is the training query; its
     * bench reps must keep paying training cost) and refreshes the
-    * entry. Flag `graft.bpe.reuse` (default on; only an explicit
-    * "false" disables — the vocabBroadcast parsing rule) pins the
-    * self-contained fallback: with reuse off, q89c re-derives the
-    * model exactly as before, and BpeTrainerSpec proves both paths
-    * hash-identical. */
+    * entry; q89c trains for itself only when no entry exists yet. */
   private[graft] val bpeTrainedRules =
     scala.collection.concurrent.TrieMap
       .empty[String, Seq[(Long, String, String, Long)]]
-
-  private def bpeReuse(s: SparkSession): Boolean =
-    s.conf.getOption("graft.bpe.reuse").forall { v =>
-      v.trim.toLowerCase(java.util.Locale.ROOT) != "false"
-    }
 
   private val q89b = QueryDef(
     "q89b_bpe_trainer",
@@ -1896,12 +1859,9 @@ object DocQueries {
     (s, dir) => {
       import s.implicits._
       // train-once/apply-many: reuse q89b's published model when
-      // available (and allowed); self-contained retrain otherwise
-      val rules =
-        if (bpeReuse(s))
-          bpeTrainedRules.getOrElseUpdate(dir,
-            bpeTrain(s, dir, applyLast = false)._1)
-        else bpeTrain(s, dir, applyLast = false)._1
+      // available; self-contained training otherwise
+      val rules = bpeTrainedRules.getOrElseUpdate(dir,
+        bpeTrain(s, dir, applyLast = false)._1)
       // the learned model as ONE nested map expression (rule order
       // matters: round 1 innermost, exactly the training order)
       def encode(c: Column): Column =
@@ -2223,16 +2183,10 @@ object DocQueries {
   //
   // Scale shape (100 TB): the vocabulary aggregate is ONE shuffle over
   // a Heaps-law-bounded key domain with map-side partial collapse; the
-  // join-back BROADCASTS the vocab table by default (valid while the
-  // vocab fits — ~10⁷ rows). The flip documented for past-that corpora
-  // is WIRED, not just described (round-10 verdict item 2, the
-  // `graft.shingles.native` flag precedent): spark.conf
-  // `graft.vocab.broadcast=false` routes the join-back through a
-  // shuffle join on token instead (merge-hinted so the plan provably
-  // exchanges both sides rather than letting AQE re-broadcast) — same
-  // semantics, output pinned identical end-to-end and both plan shapes
-  // asserted in VocabJoinbackSpec. (Past ~2⁵³/10⁶ corpus tokens,
-  // sum_freq·10⁶ additionally swaps to DECIMAL(38,0).) Per-doc
+  // join-back BROADCASTS the vocab table (valid while the vocab fits —
+  // ~10⁷ rows; a corpus past that needs a shuffle join on token).
+  // VocabJoinbackSpec asserts the broadcast plan. (Past ~2⁵³/10⁶ corpus
+  // tokens, sum_freq·10⁶ additionally swaps to DECIMAL(38,0).) Per-doc
   // aggregation collapses map-side
   // (docs live within partitions); the per-lang top-5 gets the q75/q88
   // WindowGroupLimit map-side limit, so the final exchange carries
@@ -2246,11 +2200,9 @@ object DocQueries {
           explode(split(lower($"text"), " ")).as("token"))
         .filter(length($"token") > 0)
       val freq = toks.groupBy($"token").agg(count(lit(1)).as("f"))
-      val vocabSide =
-        if (vocabBroadcast(s)) broadcast(freq) else freq.hint("merge")
       val w = Window.partitionBy($"lang")
         .orderBy($"score_micro", $"doc_id")
-      toks.join(vocabSide, Seq("token"))
+      toks.join(broadcast(freq), Seq("token"))
         .groupBy($"doc_id", $"lang")
         .agg(count(lit(1)).as("n_tokens"), sum($"f").as("sum_freq"))
         .withColumn("score_micro",
@@ -2452,10 +2404,9 @@ object DocQueries {
   // over the token array, then a Generate fanning out one row per
   // bigram occurrence inside the same stage — no shuffle of per-bigram
   // rows except the model aggregate's own, which collapses map-side
-  // over a Heaps-bounded bigram domain); the join-back rides the SAME
-  // `graft.vocab.broadcast` strategy flag as q104 (bigram vocabularies
-  // outgrow broadcast sooner than unigram ones — the flip is the same
-  // merge-hinted shuffle join, VocabJoinbackSpec's contract); per-doc
+  // over a Heaps-bounded bigram domain); the join-back broadcasts the
+  // model as q104 does (bigram vocabularies outgrow broadcast sooner
+  // than unigram ones; VocabJoinbackSpec asserts the plan); per-doc
   // sums collapse map-side; the per-lang bottom-5 is a map-side
   // WindowGroupLimit. Docs with < 2 real tokens have no bigrams and
   // are out of contract on both sides (list_filter/filter first, so
@@ -2473,10 +2424,9 @@ object DocQueries {
           "transform(sequence(1, size(ts) - 1), " +
             "i -> concat(ts[i-1], ' ', ts[i]))")).as("bigram"))
       val lm = bigrams.groupBy($"bigram").agg(count(lit(1)).as("f"))
-      val lmSide = if (vocabBroadcast(s)) broadcast(lm) else lm.hint("merge")
       val w = Window.partitionBy($"lang")
         .orderBy($"score_micro", $"doc_id")
-      bigrams.join(lmSide, Seq("bigram"))
+      bigrams.join(broadcast(lm), Seq("bigram"))
         .groupBy($"doc_id", $"lang")
         .agg(count(lit(1)).as("n_bigrams"), sum($"f").as("sum_freq"))
         .withColumn("score_micro",
@@ -2545,9 +2495,8 @@ object DocQueries {
   // Scale shape (100 TB): this is q104's corpus-model join-back with
   // the one structural improvement DSIR's feature hashing buys — the
   // model is a FIXED 64-row table regardless of corpus size, so the
-  // broadcast join-back is UNCONDITIONALLY valid (no vocab-growth flag
-  // needed; contrast `graft.vocab.broadcast` on q104/q108, whose
-  // vocab-keyed models outgrow broadcast). Model fitting is one
+  // broadcast join-back is UNCONDITIONALLY valid (contrast q104/q108,
+  // whose vocab-keyed models outgrow broadcast). Model fitting is one
   // explode → 64-key aggregate (map-side collapse over an
   // alphabet-bounded domain, both counts in ONE pass via count_if);
   // per-doc aggregation collapses map-side. The report is TWO branches

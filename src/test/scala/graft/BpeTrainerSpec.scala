@@ -110,21 +110,17 @@ class BpeTrainerSpec extends AnyFunSuite {
       "en-trained merges saved zero symbols on en")
   }
 
-  test("q89c reuse handoff: published model consumed; off-flag retrains (round-12 ADVICE item 3)") {
+  test("q89c reuse handoff: published model consumed (round-12 ADVICE item 3)") {
     // The q89b-publishes/q89c-consumes cycle, asserted end-to-end with
-    // a poison probe: (1) cold cache + reuse on → q89c self-trains AND
-    // publishes; (2) q89b refreshes the entry, warm q89c must be
-    // hash-identical; (3) a deliberately WRONG cached model with reuse
-    // on changes q89c's output — proving the cache is genuinely
-    // consumed, not dead-reckoned; (4) reuse=false ignores the poisoned
-    // cache and retrains to the true output.
+    // a poison probe: (1) cold cache → q89c self-trains AND publishes;
+    // (2) q89b refreshes the entry, warm q89c must be hash-identical;
+    // (3) a deliberately WRONG cached model changes q89c's output —
+    // proving the cache is genuinely consumed, not dead-reckoned.
     import graft.tools.Canon
     val dir = TestSpark.sf0001
     def encode(): Seq[String] =
       Canon.rows(Registry.byName("q89c_bpe_encode").run(spark, dir))
-    val savedConf = spark.conf.getOption("graft.bpe.reuse")
     try {
-      spark.conf.set("graft.bpe.reuse", "true")
       DocQueries.bpeTrainedRules.remove(dir)
       val cold = encode()
       assert(DocQueries.bpeTrainedRules.contains(dir),
@@ -140,17 +136,7 @@ class BpeTrainerSpec extends AnyFunSuite {
       val poisoned = encode()
       assert(poisoned !== cold,
         "q89c output unchanged under a poisoned cache — reuse path is dead")
-      // reuse off: poisoned cache ignored, self-contained retrain
-      spark.conf.set("graft.bpe.reuse", "false")
-      assert(encode() === cold,
-        "reuse=false did not fall back to self-contained retraining")
-    } finally {
-      DocQueries.bpeTrainedRules.remove(dir)
-      savedConf match {
-        case Some(v) => spark.conf.set("graft.bpe.reuse", v)
-        case None => spark.conf.unset("graft.bpe.reuse")
-      }
-    }
+    } finally DocQueries.bpeTrainedRules.remove(dir)
   }
 
   test("q89b learns 3 distinct merges with consistent final counts") {

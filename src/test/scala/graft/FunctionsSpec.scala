@@ -179,23 +179,6 @@ class FunctionsSpec extends AnyFunSuite {
     assert(native === composite)
   }
 
-  test("q23 native-shingles flag yields identical near-dup pairs") {
-    // graft.shingles.native=true swaps the composite explode+distinct
-    // shingle table for the map-only word_shingles path INSIDE
-    // nearDupPairs (the multi-node deployment flag, BASELINE.md §4) —
-    // the emitted pairs must be identical row for row.
-    val q = graft.queries.Registry.byName("q23_near_dup_minhash")
-    def rows() = q.run(spark, TestSpark.sf0001).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getDouble(5))).sorted.toSeq
-    val composite = rows()
-    spark.conf.set("graft.shingles.native", "true")
-    try {
-      val native = rows()
-      assert(native === composite)
-    } finally spark.conf.unset("graft.shingles.native")
-  }
-
   test("word_shingles edge cases: short text, dedup, foldable n") {
     val r = spark.sql(
       """SELECT word_shingles('a b', 3) AS short,

@@ -36,14 +36,8 @@ class IndexAppendSpec extends AnyFunSuite {
   }
 
   test("q110c batch-2 stage scans the appended delta segment") {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     funnelRows // ensure the run happened (delta written)
-    val roots = funnel.queryExecution.optimizedPlan.collect {
-      case l: LogicalRelation => l.relation match {
-        case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString)
-        case _ => Seq.empty
-      }
-    }.flatten
+    val roots = TestSpark.scanRoots(funnel)
     assert(roots.exists(_.endsWith("_delta_bands")) &&
       roots.exists(_.endsWith("_delta_sets")),
       s"plan does not scan the delta segment: $roots")

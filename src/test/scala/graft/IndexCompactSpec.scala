@@ -30,14 +30,8 @@ class IndexCompactSpec extends AnyFunSuite {
   }
 
   test("batch-2 stage scans the compacted segment and no delta anywhere") {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     funnelRows // ensure the run happened (compacted segment written)
-    val roots = funnel.queryExecution.optimizedPlan.collect {
-      case l: LogicalRelation => l.relation match {
-        case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString)
-        case _ => Seq.empty
-      }
-    }.flatten
+    val roots = TestSpark.scanRoots(funnel)
     assert(roots.exists(_.endsWith("_compact_bands")) &&
       roots.exists(_.endsWith("_compact_sets")),
       s"plan does not scan the compacted segment: $roots")

@@ -26,15 +26,9 @@ class IndexedDedupSpec extends AnyFunSuite {
   }
 
   test("q110b reads the index; raw documents scans are batch-side only") {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     Tables.minhashIndex(spark, dir) // ensure built (the untimed ingest)
     val df = Registry.byName("q110b_indexed_dedup").run(spark, dir)
-    val roots = df.queryExecution.optimizedPlan.collect {
-      case l: LogicalRelation => l.relation match {
-        case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString)
-        case _ => Seq.empty
-      }
-    }.flatten
+    val roots = TestSpark.scanRoots(df)
     assert(roots.exists(_.contains("docs_minhash_")) &&
       roots.exists(_.endsWith("_bands")),
       s"plan does not read the band index parquet: $roots")

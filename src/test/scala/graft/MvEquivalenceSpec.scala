@@ -28,14 +28,8 @@ class MvEquivalenceSpec extends AnyFunSuite {
   }
 
   test("q94 reads the materialized MV; events is scanned exactly once") {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     val df = Registry.byName("q94_incremental_mv").run(spark, dir)
-    val roots = df.queryExecution.optimizedPlan.collect {
-      case l: LogicalRelation => l.relation match {
-        case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString)
-        case _ => Seq.empty
-      }
-    }.flatten
+    val roots = TestSpark.scanRoots(df)
     assert(roots.exists(_.contains("events_mv_")),
       s"plan does not read the MV parquet: $roots")
     assert(roots.count(_.endsWith("events.parquet")) === 1,

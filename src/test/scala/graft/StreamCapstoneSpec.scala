@@ -60,9 +60,9 @@ class StreamCapstoneSpec extends AnyFunSuite {
   test("one replay fed both monitors: dedup AND novelty plans recorded per batch") {
     capstone // one run records all four keys
     Seq(0, 1).foreach { id =>
-      val dedup = StreamingJobs
+      assert(StreamingJobs
         .innerPlanOf(s"q122_stream_ingest_capstone dedup batch=$id")
-        .getOrElse(fail(s"dedup batch=$id inner plan was not recorded"))
+        .isDefined, s"dedup batch=$id inner plan was not recorded")
       val probe = StreamingJobs
         .innerPlanOf(s"q122_stream_ingest_capstone novelty batch=$id")
         .getOrElse(fail(s"novelty batch=$id inner plan was not recorded"))

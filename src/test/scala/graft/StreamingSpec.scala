@@ -23,7 +23,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   private def runToTable(df: DataFrame, name: String,
-      mode: String = "append"): DataFrame = {
+      mode: String): DataFrame = {
     val q = df.writeStream.format("memory").queryName(name)
       .outputMode(mode).trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()

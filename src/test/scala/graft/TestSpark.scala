@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** One SparkSession for the whole forked test JVM (suites run
   * sequentially under sbt's forked runner). Built by the same factory
@@ -44,13 +45,22 @@ object TestSpark {
       }
   }
 
+  /** The root path of every file relation `df`'s optimized plan scans. */
+  def scanRoots(df: DataFrame): Seq[String] =
+    df.queryExecution.optimizedPlan.collect {
+      case l: LogicalRelation => l.relation match {
+        case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString)
+        case _ => Seq.empty
+      }
+    }.flatten
+
   /** The FINAL section of an executed AQE plan string. AQE's toString
     * prints "== Final Plan ==" followed by "== Initial Plan ==", and
     * the Initial section legitimately contains shapes (e.g. an SMJ
     * later demoted to broadcast) that plan-shape assertions forbid —
     * asserting on the raw string checks the wrong plan. Call after the
     * df has been executed. */
-  def finalPlan(df: org.apache.spark.sql.DataFrame): String = {
+  def finalPlan(df: DataFrame): String = {
     val p = df.queryExecution.executedPlan.toString
     p.indexOf("== Initial Plan ==") match {
       case -1 => p

@@ -4,69 +4,27 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.Registry
 
-/** q104's vocab join-back strategy flag (round-10 verdict item 2).
-  *
-  * The corpus-model join-back broadcasts the vocabulary by default
-  * (valid to ~10⁷ vocab rows); `graft.vocab.broadcast=false` flips it
-  * to a merge-hinted shuffle join for corpora whose vocabulary outgrows
-  * the broadcast budget. This spec pins (a) the two paths byte-identical
-  * end-to-end on the real fixture, and (b) the PHYSICAL shape of each —
-  * the default must broadcast the vocab side, the flipped path must
-  * sort-merge it (the hint stops AQE from silently re-broadcasting,
-  * which would make the "fallback" a no-op in disguise).
+/** The corpus-model join-backs of q104 (unigram vocab) and q108 (bigram
+  * LM) broadcast the model (valid to ~10⁷ model rows). This spec pins
+  * the PHYSICAL shape on the real fixture: the model side rides a
+  * broadcast and no join in either query shuffles.
   */
 class VocabJoinbackSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = TestSpark.sf0001
-  private val Flag = "graft.vocab.broadcast"
-
-  private def run(): (Seq[String], String) = {
-    val df = Registry.byName("q104_token_rarity").run(spark, dir)
-    val rows = df.collect().map(_.toString).toSeq
-    (rows, TestSpark.finalPlan(df))
-  }
-
-  test("q104 shuffle-join fallback is output-identical to the broadcast path") {
-    val (defRows, defPlan) = run()
-    spark.conf.set(Flag, "false")
-    try {
-      val (shufRows, shufPlan) = run()
-      assert(shufRows === defRows,
-        "vocab join strategy changed the ANSWER — the flag must be " +
-          "execution-only")
-      assert(defPlan.contains("BroadcastHashJoin"),
-        s"default path did not broadcast the vocab:\n$defPlan")
-      assert(shufPlan.contains("SortMergeJoin"),
-        s"fallback path did not shuffle-join the vocab:\n$shufPlan")
-    } finally spark.conf.unset(Flag)
-  }
-
-  test("q108 honors the same flag: both paths identical, both shapes planned") {
-    // the bigram-LM join-back shares q104's strategy flag — same
-    // contract, one n-gram order up (bigram vocabularies outgrow the
-    // broadcast budget sooner, so the flip matters MORE here)
-    def runQ108(): (Seq[String], String) = {
-      val df = Registry.byName("q108_bigram_lm_score").run(spark, dir)
-      (df.collect().map(_.toString).toSeq, TestSpark.finalPlan(df))
-    }
-    val (defRows, defPlan) = runQ108()
-    spark.conf.set(Flag, "false")
-    try {
-      val (shufRows, shufPlan) = runQ108()
-      assert(shufRows === defRows)
-      assert(defPlan.contains("BroadcastHashJoin"),
-        s"q108 default did not broadcast the LM:\n$defPlan")
-      assert(shufPlan.contains("SortMergeJoin"),
-        s"q108 fallback did not shuffle-join the LM:\n$shufPlan")
-    } finally spark.conf.unset(Flag)
-  }
 
   test("q104 default path plans NO sort-merge join anywhere") {
     // the Heaps-bounded vocab and the top-5 tails are the only joins;
-    // both must ride broadcasts in the default configuration
-    val (_, plan) = run()
-    assert(!plan.contains("SortMergeJoin") &&
-      !plan.contains("ShuffledHashJoin"),
-      s"q104 default shuffled a join:\n$plan")
+    // both must ride broadcasts — and q108's bigram LM the same way
+    for (q <- Seq("q104_token_rarity", "q108_bigram_lm_score")) {
+      val df = Registry.byName(q).run(spark, dir)
+      df.collect()
+      val plan = TestSpark.finalPlan(df)
+      assert(plan.contains("BroadcastHashJoin"),
+        s"$q did not broadcast its model:\n$plan")
+      assert(!plan.contains("SortMergeJoin") &&
+        !plan.contains("ShuffledHashJoin"),
+        s"$q shuffled a join:\n$plan")
+    }
   }
 }
