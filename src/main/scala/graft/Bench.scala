@@ -132,25 +132,21 @@ object Bench {
     case c => c.toString
   }
 
-  /** Per-query scan-telemetry JSON block ("scan": files touched, bytes
-    * read, min scan ms across passes). This is the instrumentation that
-    * diagnosed the round-9 q03b driver-floor mystery (cold warehouse
-    * files on a fresh box) — pulled out of main() and spec-pinned in
-    * BenchAggSpec (round-10 verdict item 6) so the five warehouse-
-    * layout readers (q03b/q55/q56/q95/q94) are guaranteed a scan block
-    * in bench_out.json and a future cold driver box is diagnosable
-    * from the artifact alone. Missing metrics render as -1, never as
-    * an absent key. */
+  /** Per-query scan JSON block ("scan": input bytes and rows summed
+    * over the task metrics of EVERY job the query's action started, as
+    * `graft.trace.JobTrace` measures them — so pinned subplans and
+    * `foreachBatch` jobs count, not only the final plan's leaf scans).
+    * Spec-pinned in BenchAggSpec (round-10 verdict item 6) so the five
+    * warehouse-layout readers (q03b/q55/q56/q95/q94) are guaranteed a
+    * scan block in bench_out.json and a cold driver box is diagnosable
+    * from the artifact alone. An unmeasured query renders as -1, never
+    * as an absent key. */
   def scanJson(
       names: Seq[String],
-      files: scala.collection.Map[String, Long],
-      bytes: scala.collection.Map[String, Long],
-      ms: scala.collection.Map[String, Long]): String =
+      scan: scala.collection.Map[String, (Long, Long)]): String =
     names.map { k =>
-      val m = ms.getOrElse(k, Long.MaxValue)
-      "\"" + k + "\":{\"files\":" + files.getOrElse(k, -1L) +
-        ",\"bytes\":" + bytes.getOrElse(k, -1L) +
-        ",\"scan_ms\":" + (if (m == Long.MaxValue) -1L else m) + "}"
+      val (bytes, rows) = scan.getOrElse(k, (-1L, -1L))
+      "\"" + k + "\":{\"bytes\":" + bytes + ",\"rows\":" + rows + "}"
     }.mkString("{", ",", "}")
 
   /** Deterministic single-thread CPU probe: a fixed xorshift64* mix
@@ -480,9 +476,7 @@ object Bench {
   def fullJson(
       names: Seq[String],
       times: scala.collection.Map[String, Vector[Double]],
-      scanFiles: scala.collection.Map[String, Long],
-      scanBytes: scala.collection.Map[String, Long],
-      scanMs: scala.collection.Map[String, Long],
+      scan: scala.collection.Map[String, (Long, Long)],
       ingestResults: Seq[(String, Boolean, Double, Option[String])],
       ingestSecs: Double,
       probes: Seq[Double], probesPar: Seq[Double],
@@ -504,7 +498,7 @@ object Bench {
     val floorRatio = good.map { case (k, med, mn, _, _) =>
       "\"" + k + "\":" + num(if (mn > 0) med / mn else 1.0, 2)
     }.mkString("{", ",", "}")
-    val scanBlock = scanJson(good.map(_._1), scanFiles, scanBytes, scanMs)
+    val scanBlock = scanJson(good.map(_._1), scan)
     val repsOk = good.map { case (k, _, _, _, n) => "\"" + k + "\":" + n }
       .mkString("{", ",", "}")
     val failed = names.filter(times.getOrElse(_, Vector.empty).isEmpty)
@@ -538,7 +532,7 @@ object Bench {
     * (toRdd, like the timed passes) — the warm-up primitive for the
     * warehouse-layout readers. Unknown names are a silent no-op so a
     * renamed query degrades to "cold again" rather than a bench abort
-    * (the artifact's scan_ms then shows the regression). */
+    * (the artifact's timings then show the regression). */
   private def warmQuery(spark: org.apache.spark.sql.SparkSession,
       sfDir: String, name: String): Unit =
     SparkEntry.queries.get(name)
@@ -633,8 +627,8 @@ object Bench {
       // queries alone pay a cold disk read while everything else scans
       // /root/testdata page-cache-warm. One throwaway execution per
       // reader makes the comparison like-for-like; the per-query
-      // "scan" block (files/bytes/min scan_ms) stays in the output so
-      // a future cold box is diagnosed from the artifact alone.
+      // "scan" block (input bytes/rows) stays in the output so a
+      // future cold box is diagnosed from the artifact alone.
       // the corpus MinHash index q110b reads (round-12: write-once
       // ingest artifact, same contract as the layouts above)
       "docs_minhash" -> (() => Tables.minhashIndex(spark, sfDir)),
@@ -673,33 +667,12 @@ object Bench {
       }
     val ingestOk = ingestResults.forall(_._2)
     val ingestSecs = (System.nanoTime() - ingestT0) / 1e9
-    // Per-leaf scanned-row metric, best-effort (descends into the AQE
-    // final plan) — the reference's one-metrics-line-per-stage ethos
-    // (DoublePsramBuffer480x480.cpp:209-214) applied per query.
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def leaves(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => leaves(a.executedPlan)
-      case q: QueryStageExec => leaves(q.plan) // AQE stages have no children
-      case o if o.children.isEmpty => Seq(o)
-      case o => o.children.flatMap(leaves)
-    }
     val only = sys.env.get("GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
     val times = scala.collection.mutable.Map
       .empty[String, Vector[Double]].withDefaultValue(Vector.empty)
-    val scanned = scala.collection.mutable.Map.empty[String, Long]
-    // per-query SCAN detail (files touched, bytes read, scan ms), read
-    // from the leaf scan nodes' SQL metrics — the instrumentation the
-    // q03b driver-floor investigation needed (round-9 verdict item 1):
-    // an IO-bound elevation shows up as bytes/scan-time here, a plan
-    // regression as file/row counts. scan_ms keeps the MIN across passes
-    // (a co-tenant can only add time); files/bytes are stable per plan.
-    val scanFiles = scala.collection.mutable.Map.empty[String, Long]
-    val scanBytes = scala.collection.mutable.Map.empty[String, Long]
-    val scanMs = scala.collection.mutable.Map.empty[String, Long]
     // TOTAL attempts per query, successful or not: the adaptive
     // escalation below must be bounded by attempts, not by successful
     // samples (round-12 ADVICE item 1) — runOne swallows per-rep
@@ -708,95 +681,43 @@ object Bench {
     // satisfy times(n).size >= MaxReps and the loop would spin forever.
     val attempts = scala.collection.mutable.Map
       .empty[String, Int].withDefaultValue(0)
-    // Per-query JOB telemetry (round-20 verdict item 7): a listener
-    // records every Spark job's (start, end) wall ms; runOne clears
-    // the queue before its action and reads it after, so the events
-    // it sees are exactly its own (the bench runs one query at a
-    // time — concurrent jobs WITHIN a query, e.g. parWrite waves,
-    // are handled by the cursor walk below). Kept as MIN across
-    // passes: steal only ever adds gap time, and AQE only ever adds
-    // stage-jobs, so the min is the cleanest observed shape.
-    val jobEvents =
-      new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        private val starts =
-          new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          starts.put(js.jobId, js.time)
-        override def onJobEnd(
-            je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          val t0 = starts.remove(je.jobId)
-          if (t0 != null) jobEvents.add((t0.longValue(), je.time))
-        }
-      })
+    // Per-query JOB telemetry (round-20 verdict item 7) from one
+    // JobTrace window per rep: job count and summed inter-job driver
+    // gap, kept as MIN across passes (steal only ever adds gap time,
+    // and AQE only ever adds stage-jobs, so the min is the cleanest
+    // observed shape), and input bytes/rows over all the rep's jobs
+    // (stable per plan; the last rep's stand).
+    val trace = new graft.trace.JobTrace(spark)
     val jobCounts = scala.collection.mutable.Map.empty[String, Long]
     val gapSecs = scala.collection.mutable.Map.empty[String, Double]
-    // The listener bus is async: wait (bounded, POST-timing) until the
-    // drained event count stops moving, so the last job's end event is
-    // in the queue before we aggregate. Two stable 5 ms polls suffice
-    // in practice; the 100 ms cap keeps a backed-up bus from stalling
-    // the run — an undercounted diagnostic beats a slow bench.
-    def drainJobEvents(): Seq[(Long, Long)] = {
-      var last = -1
-      var spins = 0
-      while (spins < 20 && jobEvents.size != last) {
-        last = jobEvents.size
-        Thread.sleep(5)
-        spins += 1
-      }
-      import scala.jdk.CollectionConverters._
-      jobEvents.asScala.toSeq
-    }
+    val scan = scala.collection.mutable.Map.empty[String, (Long, Long)]
     def runOne(pass: String, name: String): Unit = {
       attempts(name) += 1
       // Execute the query's OWN physical plan via toRdd, not count()
       // and not a write: a count() action lets Catalyst prune the
-      // measured work, and df.write re-plans in a fresh QueryExecution
-      // whose metrics are invisible here. toRdd.count() materializes
-      // every output column through the full plan AND leaves the scan
-      // metrics readable on df.queryExecution. Elapsed is captured
-      // ONCE, immediately after the action — metric collection below
-      // must not inflate the reported time.
+      // measured work, and df.write re-plans in a fresh QueryExecution.
+      // toRdd.count() materializes every output column through the full
+      // plan. Elapsed is captured ONCE, immediately after the action —
+      // the trace's drain and aggregation run after it and must not
+      // inflate the reported time.
       try {
-        jobEvents.clear()
-        val w0 = System.currentTimeMillis()
-        val t0 = System.nanoTime()
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        df.queryExecution.toRdd.count()
-        val secs = (System.nanoTime() - t0) / 1e9
-        times(name) = times(name) :+ secs
-        // job-count/gap aggregation is strictly POST-timing (like the
-        // scan metrics below): walk the window's jobs in start order
-        // with a cursor so overlapping jobs never count as gap
-        try {
-          val evs = drainJobEvents().sortBy(_._1)
-          var cursor = w0
-          var gapMs = 0L
-          evs.foreach { case (s0, s1) =>
-            gapMs += math.max(0L, s0 - cursor)
-            cursor = math.max(cursor, s1)
-          }
-          jobCounts(name) =
-            math.min(jobCounts.getOrElse(name, Long.MaxValue), evs.size.toLong)
-          gapSecs(name) = math.min(
-            gapSecs.getOrElse(name, Double.MaxValue), gapMs / 1000.0)
-        } catch { case _: Throwable => () }
-        try {
-          val ls = leaves(df.queryExecution.executedPlan)
-          def m(keys: Set[String]): Long =
-            ls.flatMap(_.metrics.collect {
-              case (k, v) if keys(k) => v.value }).sum
-          scanned(name) = ls.flatMap(_.metrics.get("numOutputRows"))
-            .map(_.value).sum
-          scanFiles(name) = m(Set("numFiles"))
-          scanBytes(name) = m(Set("filesSize"))
-          val ms = m(Set("scanTime"))
-          scanMs(name) = math.min(scanMs.getOrElse(name, Long.MaxValue), ms)
-        } catch { case _: Throwable => scanned(name) = -1L }
+        val (secs, w) = trace.window {
+          val t0 = System.nanoTime()
+          val df = SparkEntry.queries(name)(spark, sfDir)
+          df.queryExecution.toRdd.count()
+          val secs = (System.nanoTime() - t0) / 1e9
+          // recorded before the drain: a failed drain loses only the
+          // job telemetry, never a completed timing
+          times(name) = times(name) :+ secs
+          secs
+        }
+        jobCounts(name) =
+          math.min(jobCounts.getOrElse(name, Long.MaxValue), w.jobs.size.toLong)
+        gapSecs(name) = math.min(
+          gapSecs.getOrElse(name, Double.MaxValue), w.gapsMs.sum / 1000.0)
+        scan(name) = (w.inputBytes, w.inputRows)
         System.err.println(
-          f"[bench] pass $pass $name%-28s ${secs}%8.3f s  scanned=${scanned.getOrElse(name, -1L)}%,12d rows")
+          f"[bench] pass $pass $name%-28s ${secs}%8.3f s  jobs=${w.jobs.size}%4d  input=${w.inputRows}%,12d rows")
       } catch { case e: Throwable =>
         System.err.println(s"[bench] pass $pass $name failed: ${e.getMessage}")
       } finally {
@@ -835,10 +756,9 @@ object Bench {
     val printedCompact = new java.util.concurrent.atomic.AtomicBoolean(false)
     def emit(): String = {
       val stealNow = stealPctOf(cpuRun0, readProcCpu())
-      val json = fullJson(names, times, scanFiles, scanBytes, scanMs,
-        ingestResults, ingestSecs, probes, probesPar,
-        passesDone, adaptiveDone, shed, sfDir, stealNow, stealPass,
-        jobCounts, gapSecs)
+      val json = fullJson(names, times, scan, ingestResults, ingestSecs,
+        probes, probesPar, passesDone, adaptiveDone, shed, sfDir,
+        stealNow, stealPass, jobCounts, gapSecs)
       // arm the hook's line only once per-query data EXISTS: a
       // zero-pass compact line reads "value":0.0 with an empty
       // queries map — shaped like an implausibly fast successful run,

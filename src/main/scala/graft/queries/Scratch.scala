@@ -10,7 +10,7 @@ package graft.queries
   * register what they create, the harnesses (Bench after each timed
   * pass, Verify after each query) call `purge()` once the returned
   * DataFrame has been consumed, and a JVM shutdown hook covers
-  * everything else (specs, Explain, PlanDump).
+  * everything else (specs, PlanDump).
   *
   * purge() must only run AFTER the query's result has been collected:
   * the returned DataFrame is a scan of the sink directory, so deleting

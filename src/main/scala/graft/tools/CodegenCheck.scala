@@ -14,19 +14,27 @@ object CodegenCheck {
     val sfDir = args.head
     val spark = Sessions.local("graft-codegen-check")
     args.tail.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
       println(s"===== $name =====")
-      // Execute first: under AQE the WholeStageCodegen nodes only exist
-      // in the materialized final stage plans, not the initial plan.
-      df.queryExecution.toRdd.count()
-      // codegenToSeq gives per-subtree generated code + CodeStats; we
-      // reduce that to the audit signal (max method bytecode size).
-      val full = df.queryExecution.debug.codegenToSeq()
-      full.zipWithIndex.foreach { case ((subtree, _, codeStats), i) =>
-        val head = subtree.linesIterator.find(_.nonEmpty).getOrElse("")
-        println(f"subtree $i%2d maxMethodCodeSize=${codeStats.maxMethodCodeSize}%6d  $head")
+      try {
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        // Execute first: under AQE the WholeStageCodegen nodes only
+        // exist in the materialized final stage plans, not the initial
+        // plan.
+        df.queryExecution.toRdd.count()
+        // codegenToSeq gives per-subtree generated code + CodeStats; we
+        // reduce that to the audit signal (max method bytecode size).
+        val full = df.queryExecution.debug.codegenToSeq()
+        full.zipWithIndex.foreach { case ((subtree, _, codeStats), i) =>
+          val head = subtree.linesIterator.find(_.nonEmpty).getOrElse("")
+          println(f"subtree $i%2d maxMethodCodeSize=${codeStats.maxMethodCodeSize}%6d  $head")
+        }
+        println(s"total codegen subtrees: ${full.size}")
+      } finally {
+        // release what the query pinned and its scratch dirs, as Verify
+        // does
+        graft.queries.QueryCaches.releaseAll()
+        graft.queries.Scratch.purge()
       }
-      println(s"total codegen subtrees: ${full.size}")
     }
     spark.stop()
   }

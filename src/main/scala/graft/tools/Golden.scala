@@ -41,9 +41,14 @@ object GoldenGen {
     val Array(sfDir, outFile) = args
     val spark = Sessions.local("graft-golden")
     val entries = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val lines = Canon.rows(fn(spark, sfDir))
-      // release any cache the query persisted (q93) — QueryCaches contract
-      graft.queries.QueryCaches.releaseAll()
+      val lines =
+        try Canon.rows(fn(spark, sfDir))
+        finally {
+          // release any cache the query persisted (q93) and delete the
+          // streaming queries' scratch dirs, as Verify does
+          graft.queries.QueryCaches.releaseAll()
+          graft.queries.Scratch.purge()
+        }
       s"""  "$name": {"rows": ${lines.size}, "sha256": "${Canon.sha256(lines)}"}"""
     }
     Files.createDirectories(Paths.get(outFile).getParent)

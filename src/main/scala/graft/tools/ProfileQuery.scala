@@ -1,8 +1,8 @@
 package graft.tools
 
 import graft.{Sessions, SparkEntry}
+import graft.trace.JobTrace
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Dev measurement tool (guide §1): run named queries once (after a
@@ -11,7 +11,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   * need (their cost is per-job overhead, not data) — and how many
   * classes the measured rep compiled and in how many seconds (0 for
   * most queries once the warm-up rep has filled the codegen cache; see
-  * Sessions).
+  * Sessions). The jobs and gaps are one `JobTrace` window per query,
+  * the same measurement Bench's "jobs"/"gap_secs" come from.
   * Usage: runMain graft.tools.ProfileQuery <sfDir> <query> [query...] */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
@@ -24,56 +25,35 @@ object ProfileQuery {
       spark.conf.set(k.trim, v.trim)
       System.err.println(s"[profile] conf ${k.trim}=${v.trim}")
     })
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Long, String)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val desc = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .orElse(js.stageInfos.lastOption.map(_.name)).getOrElse("?")
-        jobs.put(js.jobId, (js.time, desc.take(120)))
-      }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit = {
-        Option(jobs.get(je.jobId)).foreach { case (t0, d) =>
-          done.add((je.jobId, t0, je.time, d))
-        }
-      }
-    })
-    // warm up JIT/codegen on the same shapes
-    args.tail.foreach { name =>
-      SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
+    def release(): Unit = {
       graft.queries.QueryCaches.releaseAll()
       graft.queries.Scratch.purge()
     }
+    // warm up JIT/codegen on the same shapes
     args.tail.foreach { name =>
-      done.clear()
+      SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
+      release()
+    }
+    val trace = new JobTrace(spark)
+    args.tail.foreach { name =>
       val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val compileNs0 = CodeGenerator.compileTime
-      val t0 = System.nanoTime()
-      val w0 = System.currentTimeMillis()
-      SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
-      val total = (System.nanoTime() - t0) / 1e9
+      val (total, w) = trace.window {
+        val t0 = System.nanoTime()
+        SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
+        (System.nanoTime() - t0) / 1e9
+      }
       val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
       val compileS = (CodeGenerator.compileTime - compileNs0) / 1e9
-      Thread.sleep(300) // let listener events drain
-      import scala.jdk.CollectionConverters._
-      val evs = done.asScala.toSeq.sortBy(_._2)
-      println(s"===== $name total=${f"$total%.3f"} s, ${evs.size} jobs =====")
-      var cursor = w0
-      var jobSum = 0L
-      var gapSum = 0L
-      evs.foreach { case (id, s0, s1, d) =>
-        val gap = s0 - cursor
+      println(s"===== $name total=${f"$total%.3f"} s, ${w.jobs.size} jobs =====")
+      w.jobs.zip(w.gapsMs).foreach { case (j, gap) =>
         if (gap > 30) println(f"  [gap ${gap / 1000.0}%6.3f s]")
-        gapSum += math.max(0, gap)
-        println(f"  job $id%3d ${(s1 - s0) / 1000.0}%7.3f s  $d")
-        jobSum += (s1 - s0)
-        cursor = math.max(cursor, s1)
+        println(f"  job ${j.id}%3d ${(j.endMs - j.startMs) / 1000.0}%7.3f s  ${j.site.take(120)}")
       }
-      println(f"  == jobs ${jobSum / 1000.0}%.3f s (sum), inter-job gaps ${gapSum / 1000.0}%.3f s, wall $total%.3f s")
+      val jobSum = w.jobs.map(j => j.endMs - j.startMs).sum
+      println(f"  == jobs ${jobSum / 1000.0}%.3f s (sum), inter-job gaps ${w.gapsMs.sum / 1000.0}%.3f s, wall $total%.3f s")
       println(f"  == codegen $compiled classes compiled in $compileS%.3f s")
-      graft.queries.QueryCaches.releaseAll()
-      graft.queries.Scratch.purge()
+      release()
     }
     spark.stop()
   }

@@ -186,15 +186,14 @@ class BenchAggSpec extends AnyFunSuite {
   }
 
   test("scanJson renders a block per query; missing metrics become -1") {
-    // round-10 verdict item 6: the scan telemetry (files/bytes/min
-    // scan_ms per query) must ride in bench_out.json for every reported
-    // query so a cold driver box is diagnosed from the artifact alone
+    // round-10 verdict item 6: the scan telemetry (input bytes/rows per
+    // query) must ride in bench_out.json for every reported query so a
+    // cold driver box is diagnosed from the artifact alone
     val names = Seq("q_a", "q_b")
-    val out = Bench.scanJson(names,
-      Map("q_a" -> 64L), Map("q_a" -> 6512179L), Map("q_a" -> 442L))
+    val out = Bench.scanJson(names, Map("q_a" -> (6512179L, 60175L)))
     assert(out ===
-      """{"q_a":{"files":64,"bytes":6512179,"scan_ms":442},""" +
-        """"q_b":{"files":-1,"bytes":-1,"scan_ms":-1}}""")
+      """{"q_a":{"bytes":6512179,"rows":60175},""" +
+        """"q_b":{"bytes":-1,"rows":-1}}""")
   }
 
   test("the five warehouse-layout readers are registered, so their scan blocks ship") {
@@ -311,7 +310,7 @@ class BenchAggSpec extends AnyFunSuite {
       "q01_a" -> Vector(1.5), "q02_b" -> Vector(0.25),
       "q03_c" -> Vector.empty[Double]) // failed on its only pass so far
     val json = Bench.fullJson(names, times,
-      Map("q01_a" -> 4L), Map("q01_a" -> 1024L), Map("q01_a" -> 12L),
+      Map("q01_a" -> (1024L, 6000L)),
       ingestResults = Seq(("lineitem_bkt", true, 2.0, None)),
       ingestSecs = 2.0,
       probes = Seq(0.62), probesPar = Seq(0.55), // before-values only
@@ -330,8 +329,8 @@ class BenchAggSpec extends AnyFunSuite {
     assert((p \ "value") === JDouble(1.75))
     assert((p \ "ingest_ok") === JBool(true))
     // and the final two-probe form parses the same way
-    val done = Bench.fullJson(names, times, Map.empty, Map.empty,
-      Map.empty, Seq(("lineitem_bkt", true, 2.0, None)), 2.0,
+    val done = Bench.fullJson(names, times, Map.empty,
+      Seq(("lineitem_bkt", true, 2.0, None)), 2.0,
       Seq(0.62, 0.64), Seq(0.55, 1.02), 3, 1, shed = false,
       "/root/testdata/sf0.1")
     val pd = JsonMethods.parse(done)
@@ -396,8 +395,8 @@ class BenchAggSpec extends AnyFunSuite {
     import org.json4s.jackson.JsonMethods
     val names = Seq("q01_a")
     val times = Map("q01_a" -> Vector(1.5))
-    val json = Bench.fullJson(names, times, Map.empty, Map.empty,
-      Map.empty, Seq(("lineitem_bkt", true, 2.0, None)), 2.0,
+    val json = Bench.fullJson(names, times, Map.empty,
+      Seq(("lineitem_bkt", true, 2.0, None)), 2.0,
       Seq(0.62), Seq(0.55), 1, 0, shed = false, "/root/testdata/sf0.1",
       stealPct = 46.8, stealPass = Seq(51.2, 44.0))
     val p = JsonMethods.parse(json)
@@ -406,7 +405,7 @@ class BenchAggSpec extends AnyFunSuite {
       JArray(List(JDouble(51.2), JDouble(44.0))))
     // omitted → explicit -1 sentinel (off-Linux), still parseable
     val pn = JsonMethods.parse(Bench.fullJson(names, times, Map.empty,
-      Map.empty, Map.empty, Nil, 0.0, Nil, Nil, 0, 0, shed = false, "sf"))
+      Nil, 0.0, Nil, Nil, 0, 0, shed = false, "sf"))
     assert((pn \ "steal_pct") === JDouble(-1.0))
     assert((pn \ "steal_pct_pass") === JArray(Nil))
     // compact: 1-decimal "steal" in the tail so the 2x gate can
@@ -491,8 +490,8 @@ class BenchAggSpec extends AnyFunSuite {
     import org.json4s.jackson.JsonMethods
     val names = Seq("q01_a", "q02_b")
     val times = Map("q01_a" -> Vector(1.5), "q02_b" -> Vector(0.25))
-    val json = Bench.fullJson(names, times, Map.empty, Map.empty,
-      Map.empty, Seq(("lineitem_bkt", true, 2.0, None)), 2.0,
+    val json = Bench.fullJson(names, times, Map.empty,
+      Seq(("lineitem_bkt", true, 2.0, None)), 2.0,
       Seq(0.62), Seq(0.55), 1, 0, shed = false, "/root/testdata/sf0.1",
       jobCounts = Map("q01_a" -> 79L),
       gapSecs = Map("q01_a" -> 2.437))
@@ -505,7 +504,7 @@ class BenchAggSpec extends AnyFunSuite {
     // omitting the maps entirely (old call shape) still parses, with
     // sentinels for every query — the artifact schema is stable
     val pn = JsonMethods.parse(Bench.fullJson(names, times, Map.empty,
-      Map.empty, Map.empty, Nil, 0.0, Nil, Nil, 0, 0, shed = false, "sf"))
+      Nil, 0.0, Nil, Nil, 0, 0, shed = false, "sf"))
     assert((pn \ "jobs" \ "q01_a") === JInt(-1))
     // and the compact line carries neither key
     val line2 = Bench.compactLine(

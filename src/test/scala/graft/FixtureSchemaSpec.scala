@@ -1,10 +1,8 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.trace.JobTrace
 
 /** Fixture-schema guard (round-8 verdict item 2): pins the CANONICAL
   * (post-`Tables.load`) Spark schema of every driver-provisioned table at
@@ -99,27 +97,10 @@ class FixtureSchemaSpec extends AnyFunSuite {
   }
 
   test("a repeat Tables.load starts no Spark job") {
-    val sc = spark.sparkContext
     Tables.names.foreach(Tables.load(spark, dir, _))
-    val marker = "graft.fixtureSchemaSpec.marker"
-    val jobs = new AtomicInteger
-    val markerSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(marker) != null)
-          markerSeen.countDown()
-        else jobs.incrementAndGet(): Unit
-    }
-    sc.addSparkListener(listener)
-    try {
+    val (_, w) = JobTrace.once(spark) {
       Tables.names.foreach(n => Tables.load(spark, dir, n).schema)
-      // the bus is FIFO: once the marker job's start is delivered, every
-      // job the loads above could have started has been delivered too
-      sc.setLocalProperty(marker, "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty(marker, null)
-      assert(markerSeen.await(60, TimeUnit.SECONDS), "marker job never seen")
-      assert(jobs.get == 0, s"${jobs.get} Spark job(s) started by repeat loads")
-    } finally sc.removeSparkListener(listener)
+    }
+    assert(w.jobs.isEmpty, s"${w.jobs.size} Spark job(s) started by repeat loads")
   }
 }

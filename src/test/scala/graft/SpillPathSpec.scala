@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.Registry
+import graft.trace.JobTrace
 
 /** Join/window spill path for the heavy LLM dedup queries (round-7
   * verdict item 6; the AGGREGATE spill fallback has its own spec). The
@@ -17,7 +17,7 @@ import graft.queries.Registry
   * correctness may never depend on the working set fitting in memory.
   *
   * Spills surface in TASK metrics (diskBytesSpilled), not SQL plan
-  * metrics, so a listener accumulates them; and because the dedup
+  * metrics, so a JobTrace window sums them; and because the dedup
   * pipelines' per-key candidate groups are deliberately SMALL (that is
   * their design), a dedicated hot-key join proves the knobs + metric
   * plumbing actually force disk spills.
@@ -52,26 +52,6 @@ class SpillPathSpec extends AnyFunSuite {
     }
   }
 
-  private def collectSpill[A](body: => A): (A, Long) = {
-    val spilled = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null)
-          spilled.addAndGet(m.diskBytesSpilled + m.memoryBytesSpilled): Unit
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = body
-      // listener bus is async — wait (bounded) for task-end events
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (spilled.get() == 0 && System.nanoTime() < deadline)
-        Thread.sleep(100)
-      (out, spilled.get())
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("dedup candidate-verify queries: identical output under forced spill") {
     for (name <- Seq("q23_near_dup_minhash", "q45_ngram_jaccard",
         "q65_fuzzy_edit_dedup")) {
@@ -96,13 +76,13 @@ class SpillPathSpec extends AnyFunSuite {
     import spark.implicits._
     val streamed = Seq((1L, "probe")).toDF("k", "tag")
     val buffered = spark.range(200000).select(lit(1L).as("k"), $"id")
-    val (cnt, spilled) = collectSpill {
+    val (cnt, w) = JobTrace.once(spark) {
       withPressure(4096) {
         streamed.join(buffered, "k").count()
       }
     }
     assert(cnt === 200000L)
-    assert(spilled > 0L,
+    assert(w.spillBytes > 0L,
       "no task reported spill bytes — the pressure knobs did not engage")
   }
 }
