@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.queries.{DocCommon, IngestQueries}
+
 /** Table registry for the driver-provisioned parquet fixtures
   * (/root/testdata/sf*, schemas documented in FIXTURES.md).
   *
@@ -322,7 +324,7 @@ object Tables {
     * verdict item 2: the q110 comment "in production the corpus band/
     * signature relations are precomputed" turned into graded code).
     * Two parquet relations, derived by the SAME engine-mirrored
-    * builders q110 uses in-query (DocQueries.bandRows / verify sets,
+    * builders q110 uses in-query (IngestQueries.bandRows / verify sets,
     * so the hash contract cannot drift):
     *
     *   - bands: (doc_id, band_idx, band_val) — the LSH posting keys a
@@ -340,7 +342,8 @@ object Tables {
     * linear in the corpus and tiny next to the text it summarizes. */
   def minhashIndex(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
     indexPair(spark, "docs_minhash_" + slug(dir),
-      graft.queries.DocQueries.minhashIndexRelations(spark, dir))
+      IngestQueries.minhashIndexRelationsFor(spark, dir,
+        DocCommon.q110Mod =!= 0))
 
   /** Both relations of a MinHash index under `name` + `_bands`/`_sets`,
     * each written once. `rels` is by-name and forced at most once, so its
@@ -357,7 +360,7 @@ object Tables {
   /** Warehouse location of a q110c base-index relation (`_bands`,
     * `_sets`, or the query-written `_delta_bands`/`_delta_sets`
     * segments) — ONE slug derivation shared by the builder below and
-    * DocQueries.q110cDeltaLocs, so the delta segments cannot drift
+    * IngestQueries.q110cDeltaLocs, so the delta segments cannot drift
     * away from the base index they extend. */
   private[graft] def minhashBaseLoc(
       spark: SparkSession, dir: String, suffix: String): java.io.File =
@@ -371,8 +374,8 @@ object Tables {
     * per-ingest cost being graded, not an ingest-time layout). */
   def minhashIndexBase(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
     indexPair(spark, minhashBaseLoc(spark, dir, "").getName,
-      graft.queries.DocQueries.minhashIndexRelationsFor(spark, dir,
-        graft.queries.DocQueries.q110Mod === 2))
+      IngestQueries.minhashIndexRelationsFor(spark, dir,
+        DocCommon.q110Mod === 2))
 
   /** Write-once distinct 5-gram set of the standing corpus (the mod-2
     * carve) — the gram-granularity ingest index q117's scale note
@@ -383,7 +386,7 @@ object Tables {
   def gramIndex(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(
       writeOnce(spark, gramBaseLoc(spark, dir, "").getName) { p =>
-        graft.queries.DocQueries.corpusGramSet(spark, dir)
+        IngestQueries.corpusGramSet(spark, dir)
           .write.mode("overwrite").parquet(p)
       })
 

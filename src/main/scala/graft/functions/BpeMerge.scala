@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * three).
   *
   * Why native: the equivalent `aggregate` HOF fold (kept as
-  * DocQueries.bpeMergeFold — the two are spec-pinned identical in
+  * BpeQueries.bpeMergeFold — the two are spec-pinned identical in
   * BpeTrainerSpec, and the DuckDB oracle is a THIRD independent
   * implementation via run-parity windows) evaluates an interpreted
   * lambda per symbol and copies the accumulator array per element —

@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Algorithm (bit-for-bit the q32 composite pipeline and its DuckDB
   * oracle; equivalence is spec-asserted against
-  * `DocQueries.simhashSig`):
+  * `TextQueries.simhashSig`):
   *   tokens   = split(lower(text), ' ')            (empties kept)
   *   NULL when fewer than 3 tokens                 (matches the filter)
   *   shingles = DISTINCT 3-gram word shingles joined by ' '

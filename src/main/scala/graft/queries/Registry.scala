@@ -7,7 +7,8 @@ package graft.queries
   */
 object Registry {
   def all: Seq[QueryDef] =
-    CoreQueries.all ++ EventQueries.all ++ DocQueries.all ++
+    CoreQueries.all ++ EventQueries.all ++ TextQueries.all ++
+      BpeQueries.all ++ CurationQueries.all ++ IngestQueries.all ++
       EmbeddingQueries.all ++ MediaQueries.all ++ SurfaceQueries.all
 
   def byName: Map[String, QueryDef] = all.map(q => q.name -> q).toMap

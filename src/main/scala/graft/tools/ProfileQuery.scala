@@ -18,13 +18,6 @@ object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val spark = Sessions.local("graft-profile")
-    // A/B knob: GRAFT_PROFILE_CONF="k=v;k=v" applied to the session
-    // before the runs — measurement experiments only, never shipped.
-    sys.env.get("GRAFT_PROFILE_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k.trim, v.trim)
-      System.err.println(s"[profile] conf ${k.trim}=${v.trim}")
-    })
     def release(): Unit = {
       graft.queries.QueryCaches.releaseAll()
       graft.queries.Scratch.purge()

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.{DocQueries, Registry}
+import graft.queries.{Registry, TextQueries}
 
 /** q118 boilerplate-suppression laws. The policy under test: a chunk is
   * boilerplate iff its content recurs across ≥ 2 DISTINCT documents —
@@ -38,7 +38,7 @@ class BoilerplateSpec extends AnyFunSuite {
   private val block = (0 until 64).map(j => s"shared$j").mkString(" ")
 
   private def flagged(d: DataFrame): DataFrame =
-    DocQueries.boilerFlagged(d).select(
+    TextQueries.boilerFlagged(d).select(
       col("doc_id"), col("chunk_idx"), col("boiler"))
 
   test("a block shared by 3 docs is flagged in EVERY carrier (drop-all policy)") {
@@ -69,11 +69,11 @@ class BoilerplateSpec extends AnyFunSuite {
     // the engine's min(doc_id) != max(doc_id) trick must agree with the
     // definitional "appears in >= 2 distinct docs" computed independently
     val d = Tables.load(spark, TestSpark.sf0001, "documents")
-    val flagged = DocQueries.boilerFlagged(d)
+    val flagged = TextQueries.boilerFlagged(d)
       .filter(col("boiler"))
       .select(col("chunk_md5")).distinct()
       .collect().map(_.getString(0)).toSet
-    val naive = DocQueries.boilerFlagged(d)
+    val naive = TextQueries.boilerFlagged(d)
       .groupBy(col("chunk_md5"))
       .agg(countDistinct(col("doc_id")).as("nd"))
       .filter(col("nd") >= 2)

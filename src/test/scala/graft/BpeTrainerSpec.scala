@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.{DocQueries, Registry}
+import graft.queries.{BpeQueries, Registry}
 
 /** q89b's greedy merge semantics and the multi-round trainer contract.
   *
@@ -29,7 +29,7 @@ class BpeTrainerSpec extends AnyFunSuite {
       .select(expr("filter(split(w, ''), c -> c <> '')").as("syms"))
       .select(
         call_function("bpe_merge", col("syms"), lit(p1), lit(p2)).as("nat"),
-        DocQueries.bpeMergeFold(col("syms"), p1, p2).as("hof"))
+        BpeQueries.bpeMergeFold(col("syms"), p1, p2).as("hof"))
       .head()
     assert(r.getSeq[String](0) === r.getSeq[String](1),
       s"native bpe_merge diverges from the HOF fold on '$word'")
@@ -38,10 +38,10 @@ class BpeTrainerSpec extends AnyFunSuite {
 
   test("native bpe_merge ≡ HOF fold over the whole real corpus") {
     import spark.implicits._
-    val diverged = DocQueries.bpeWords(spark, TestSpark.sf0001)
+    val diverged = BpeQueries.bpeWords(spark, TestSpark.sf0001)
       .select(
         call_function("bpe_merge", $"syms", lit("e"), lit("r")).as("nat"),
-        DocQueries.bpeMergeFold($"syms", "e", "r").as("hof"))
+        BpeQueries.bpeMergeFold($"syms", "e", "r").as("hof"))
       .filter(not($"nat" <=> $"hof"))
       .count()
     assert(diverged === 0L)
@@ -77,7 +77,7 @@ class BpeTrainerSpec extends AnyFunSuite {
       val r = Seq(Tuple1(syms)).toDF("syms")
         .select(
           call_function("bpe_merge", col("syms"), lit(p1), lit(p2)).as("nat"),
-          DocQueries.bpeMergeFold(col("syms"), p1, p2).as("hof"))
+          BpeQueries.bpeMergeFold(col("syms"), p1, p2).as("hof"))
         .head()
       (Option(r.getSeq[String](0)), Option(r.getSeq[String](1)))
     }
@@ -121,22 +121,22 @@ class BpeTrainerSpec extends AnyFunSuite {
     def encode(): Seq[String] =
       Canon.rows(Registry.byName("q89c_bpe_encode").run(spark, dir))
     try {
-      DocQueries.bpeTrainedRules.remove(dir)
+      BpeQueries.bpeTrainedRules.remove(dir)
       val cold = encode()
-      assert(DocQueries.bpeTrainedRules.contains(dir),
+      assert(BpeQueries.bpeTrainedRules.contains(dir),
         "cold-path q89c did not publish the model it trained")
       Registry.byName("q89b_bpe_trainer").run(spark, dir).collect()
-      assert(DocQueries.bpeTrainedRules.contains(dir),
+      assert(BpeQueries.bpeTrainedRules.contains(dir),
         "q89b did not publish its merge table")
       val warm = encode()
       assert(warm === cold, "published-model path diverged from retrain")
       // poison probe: an empty model encodes identity (na == nb) —
       // output MUST change iff the cache is actually read
-      DocQueries.bpeTrainedRules(dir) = Seq.empty
+      BpeQueries.bpeTrainedRules(dir) = Seq.empty
       val poisoned = encode()
       assert(poisoned !== cold,
         "q89c output unchanged under a poisoned cache — reuse path is dead")
-    } finally DocQueries.bpeTrainedRules.remove(dir)
+    } finally BpeQueries.bpeTrainedRules.remove(dir)
   }
 
   test("q89b learns 3 distinct merges with consistent final counts") {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.DocQueries
+import graft.queries.TextQueries
 
 /** ccLabels — the connected-components core under q39/q115 (round-15
   * verdict item 5: pointer doubling as the default). The DuckDB
@@ -39,7 +39,7 @@ class DedupClusterSpec extends AnyFunSuite {
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("pointer doubling: planted 64-chain converges in <= 7 changing rounds") {
-    val (labels, rounds) = DocQueries.ccLabels(chain(64), doubling = true,
+    val (labels, rounds) = TextQueries.ccLabels(chain(64), doubling = true,
       cap = 32)
     assert(rounds <= 7, s"doubling took $rounds rounds on a 64-chain")
     val ls = labelSet(labels)
@@ -50,28 +50,28 @@ class DedupClusterSpec extends AnyFunSuite {
 
   test("one-hop twin aborts at cap=32 on the same 64-chain, loudly") {
     val e = intercept[IllegalStateException] {
-      DocQueries.ccLabels(chain(64), doubling = false, cap = 32)
+      TextQueries.ccLabels(chain(64), doubling = false, cap = 32)
     }
     assert(e.getMessage.contains("did not converge"))
   }
 
   test("both forms output-identical on a chain; doubling strictly faster") {
     val und = chain(12) // one-hop needs 11 changing rounds — under cap
-    val (fast, fr) = DocQueries.ccLabels(und, doubling = true, cap = 32)
-    val (slow, sr) = DocQueries.ccLabels(und, doubling = false, cap = 32)
+    val (fast, fr) = TextQueries.ccLabels(und, doubling = true, cap = 32)
+    val (slow, sr) = TextQueries.ccLabels(und, doubling = false, cap = 32)
     assert(labelSet(fast) === labelSet(slow))
     assert(sr === 11, s"one-hop must walk the diameter ($sr rounds)")
     assert(fr < sr, s"doubling ($fr) not faster than one-hop ($sr)")
   }
 
   test("both forms output-identical on the real near-dup graph") {
-    val pairs = DocQueries.nearDupPairs(spark, dir)
+    val pairs = TextQueries.nearDupPairs(spark, dir)
       .select(col("doc1"), col("doc2"))
     val und = pairs.select(col("doc1").as("src"), col("doc2").as("dst"))
       .unionAll(pairs.select(col("doc2").as("src"), col("doc1").as("dst")))
       .localCheckpoint()
-    val (fast, _) = DocQueries.ccLabels(und, doubling = true, cap = 32)
-    val (slow, _) = DocQueries.ccLabels(und, doubling = false, cap = 32)
+    val (fast, _) = TextQueries.ccLabels(und, doubling = true, cap = 32)
+    val (slow, _) = TextQueries.ccLabels(und, doubling = false, cap = 32)
     val ls = labelSet(fast)
     assert(ls.nonEmpty, "fixture regression: no near-dup graph to label")
     assert(ls === labelSet(slow))

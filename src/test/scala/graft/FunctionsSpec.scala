@@ -193,14 +193,14 @@ class FunctionsSpec extends AnyFunSuite {
   // ----------------------------------------------------------- simhash64
   test("simhash64 equals the composite explode+distinct+64-agg pipeline") {
     // The native per-row expression must be bit-identical to
-    // DocQueries.simhashSig (the shuffle-based formulation the DuckDB
+    // TextQueries.simhashSig (the shuffle-based formulation the DuckDB
     // oracle mirrors) over the whole fixture corpus.
     val native = Tables.load(spark, TestSpark.sf0001, "documents")
       .selectExpr("doc_id", "simhash64(text) AS chunks")
       .where("chunks IS NOT NULL")
       .selectExpr("doc_id", "posexplode(chunks) AS (chunk_idx, chunk_val)")
       .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
-    val composite = graft.queries.DocQueries.simhashSig(spark, TestSpark.sf0001)
+    val composite = graft.queries.TextQueries.simhashSig(spark, TestSpark.sf0001)
       .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
     assert(native.size === composite.size)
     assert(native === composite)

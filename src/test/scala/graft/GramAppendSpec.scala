@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.{DocQueries, Registry}
+import graft.queries.{DocCommon, IngestQueries, Registry}
 
 /** q117c — the cumulative gram-index append cycle (round-15 verdict
   * item 3). The DuckDB oracle grades both batches against pure set
@@ -40,9 +40,9 @@ class GramAppendSpec extends AnyFunSuite {
     cumulative // run the append
     val delta = spark.read
       .parquet(Tables.gramBaseLoc(spark, dir, "_delta").toString)
-    val b1 = DocQueries.shingleTable(
+    val b1 = DocCommon.shingleTable(
         Tables.load(spark, dir, "documents")
-          .filter(DocQueries.q110Mod === 0), Nil)
+          .filter(DocCommon.q110Mod === 0), Nil)
       .select(col("shingle").as("gram")).distinct()
     val expected = b1.join(Tables.gramIndex(spark, dir),
       Seq("gram"), "left_anti")
@@ -95,17 +95,19 @@ class GramAppendSpec extends AnyFunSuite {
     def tmp(t: String): String = java.nio.file.Files
       .createTempDirectory(s"graft-gad-$t").toString
     val (delta, sink, ckpt) = (tmp("delta"), tmp("sink"), tmp("ckpt"))
-    DocQueries.runStreamGramAppend(spark, dir, replay, delta, sink, ckpt)
+    IngestQueries.drainGrams(spark, replay, ckpt,
+      IngestQueries.gramRels(Tables.gramIndex(spark, dir), delta), sink)
     def snap(): (Seq[Seq[Any]], Set[Seq[Any]]) = (
-      DocQueries.streamGramTable(spark, sink).collect().map(_.toSeq).toSeq,
+      IngestQueries.streamGramTable(spark, sink).collect().map(_.toSeq).toSeq,
       spark.read.parquet(delta).select("batch", "gram").distinct()
         .collect().map(_.toSeq).toSet)
     val before = snap()
     val grams = Tables.gramIndex(spark, dir)
     val all = spark.read.parquet(replay)
     Seq(0L, 1L).foreach { id =>
-      DocQueries.streamGramBatch(spark,
-        all.filter(DocQueries.q110Mod === id), id, grams, delta, sink)
+      IngestQueries.gramBatch(spark,
+        all.filter(DocCommon.q110Mod === id), id,
+        IngestQueries.gramRels(grams, delta), sink)
     }
     assert(snap() === before,
       "redelivered batches changed the sink or the gram segments")
@@ -120,7 +122,8 @@ class GramAppendSpec extends AnyFunSuite {
       .createTempDirectory(s"graft-ganf-$t").toString
     val runDirs @ Seq(delta, sink, ckpt) =
       Seq(tmp("delta"), tmp("sink"), tmp("ckpt"))
-    DocQueries.runStreamGramAppend(spark, dir, replay, delta, sink, ckpt)
+    IngestQueries.drainGrams(spark, replay, ckpt,
+      IngestQueries.gramRels(Tables.gramIndex(spark, dir), delta), sink)
     assert(new java.io.File(s"$delta/batch=1").exists() &&
       new java.io.File(s"$sink/batch=1").exists(),
       "the run did not drain both batches")
@@ -144,12 +147,12 @@ class GramAppendSpec extends AnyFunSuite {
       assert(to.toFile.setLastModified(from.lastModified))
     }
     arrive("b0.parquet")
-    DocQueries.runStreamGramAppend(spark, dir, stage.toString, delta,
-      sink, ckpt)
+    IngestQueries.drainGrams(spark, stage.toString, ckpt,
+      IngestQueries.gramRels(Tables.gramIndex(spark, dir), delta), sink)
     arrive("b1.parquet")
-    DocQueries.runStreamGramAppend(spark, dir, stage.toString, delta,
-      sink, ckpt)
-    val resumed = DocQueries.streamGramTable(spark, sink)
+    IngestQueries.drainGrams(spark, stage.toString, ckpt,
+      IngestQueries.gramRels(Tables.gramIndex(spark, dir), delta), sink)
+    val resumed = IngestQueries.streamGramTable(spark, sink)
       .collect().map(_.toSeq).toSeq
     assert(resumed === oneShot,
       "restarted gram-append stream diverged from the one-shot run")
@@ -191,8 +194,9 @@ class GramAppendSpec extends AnyFunSuite {
     val (delta, sink, ckpt) = (tmp("delta"), tmp("sink"), tmp("ckpt"))
     val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
     val thrown = intercept[Exception] {
-      DocQueries.runStreamGramAppend(spark, dir, replay, delta, sink,
-        ckpt, crashAfterSink = id =>
+      IngestQueries.drainGrams(spark, replay, ckpt,
+        IngestQueries.gramRels(Tables.gramIndex(spark, dir), delta), sink,
+        crashAfterSink = id =>
           if (id == 1L && crashed.compareAndSet(false, true))
             throw new RuntimeException("torn-write injection"))
     }
@@ -203,8 +207,9 @@ class GramAppendSpec extends AnyFunSuite {
       "crash fired before the sink write — wrong injection point")
     assert(!new java.io.File(s"$delta/batch=1").exists(),
       "delta segment exists despite the post-sink crash")
-    DocQueries.runStreamGramAppend(spark, dir, replay, delta, sink, ckpt)
-    val recovered = DocQueries.streamGramTable(spark, sink)
+    IngestQueries.drainGrams(spark, replay, ckpt,
+      IngestQueries.gramRels(Tables.gramIndex(spark, dir), delta), sink)
+    val recovered = IngestQueries.streamGramTable(spark, sink)
       .collect().map(_.toSeq).toSeq
     assert(recovered === oneShot,
       "post-crash rerun diverged from the one-shot run")
@@ -232,8 +237,9 @@ class GramAppendSpec extends AnyFunSuite {
       .createTempDirectory(s"graft-gfc-$t").toString
     val (delta, fold, sink, ckpt) =
       (tmp("delta"), tmp("fold"), tmp("sink"), tmp("ckpt"))
-    DocQueries.runStreamGramCompact(spark, dir, replay, delta, fold,
-      sink, ckpt)
+    IngestQueries.drainGrams(spark, replay, ckpt,
+      IngestQueries.gramRels(Tables.gramIndex(spark, dir), delta, fold),
+      sink, k = Some(1))
     val plan1 = graft.streaming.StreamingJobs
       .innerPlanOf("q117e_stream_gram_compaction batch=1")
       .getOrElse(fail("batch-1 probe plan was not recorded"))
@@ -278,14 +284,14 @@ class GramAppendSpec extends AnyFunSuite {
       val (delta, fold, sink) = (tmp("delta"), tmp("fold"), tmp("sink"))
       grams.limit(0).select(col("gram"))
         .write.mode("overwrite").parquet(s"$delta/batch=-1")
-      DocQueries.streamGramCompactBatch(spark,
-        all.filter(DocQueries.q110Mod === 0), 0L, grams, delta, fold,
-        sink)
+      IngestQueries.gramBatch(spark,
+        all.filter(DocCommon.q110Mod === 0), 0L,
+        IngestQueries.gramRels(grams, delta, fold), sink, k = Some(1))
       if (gc) TestSpark.rmr(s"$delta/batch=0")
-      DocQueries.streamGramCompactBatch(spark,
-        all.filter(DocQueries.q110Mod === 1), 1L, grams, delta, fold,
-        sink)
-      (DocQueries.streamGramTable(spark, sink)
+      IngestQueries.gramBatch(spark,
+        all.filter(DocCommon.q110Mod === 1), 1L,
+        IngestQueries.gramRels(grams, delta, fold), sink, k = Some(1))
+      (IngestQueries.streamGramTable(spark, sink)
           .collect().map(_.toSeq).toSeq,
         spark.read.parquet(s"$fold/fold=1").count())
     }
@@ -299,10 +305,11 @@ class GramAppendSpec extends AnyFunSuite {
       .createTempDirectory(s"graft-gfd-$t").toString
     val (delta, fold, sink, ckpt) =
       (tmp("delta"), tmp("fold"), tmp("sink"), tmp("ckpt"))
-    DocQueries.runStreamGramCompact(spark, dir, replay, delta, fold,
-      sink, ckpt)
+    IngestQueries.drainGrams(spark, replay, ckpt,
+      IngestQueries.gramRels(Tables.gramIndex(spark, dir), delta, fold),
+      sink, k = Some(1))
     def snap(): (Seq[Seq[Any]], Set[Seq[Any]], Set[Seq[Any]]) = (
-      DocQueries.streamGramTable(spark, sink).collect().map(_.toSeq).toSeq,
+      IngestQueries.streamGramTable(spark, sink).collect().map(_.toSeq).toSeq,
       spark.read.parquet(delta).select("batch", "gram").distinct()
         .collect().map(_.toSeq).toSet,
       spark.read.parquet(fold).select("fold", "gram").distinct()
@@ -313,9 +320,9 @@ class GramAppendSpec extends AnyFunSuite {
     val grams = Tables.gramIndex(spark, dir)
     val all = spark.read.parquet(replay)
     Seq(0L, 1L).foreach { id =>
-      DocQueries.streamGramCompactBatch(spark,
-        all.filter(DocQueries.q110Mod === id), id, grams, delta, fold,
-        sink)
+      IngestQueries.gramBatch(spark,
+        all.filter(DocCommon.q110Mod === id), id,
+        IngestQueries.gramRels(grams, delta, fold), sink, k = Some(1))
     }
     assert(snap() === before,
       "redelivered batches changed the sink, a delta, or a fold")
@@ -325,13 +332,13 @@ class GramAppendSpec extends AnyFunSuite {
     // the q117b plan contract extended to the unioned read: both index
     // scans stream map-only through the broadcast semi
     cumulative
-    val bg2 = DocQueries.shingleTable(
+    val bg2 = DocCommon.shingleTable(
         Tables.load(spark, dir, "documents")
-          .filter(DocQueries.q110Mod === 1), Seq("source"))
+          .filter(DocCommon.q110Mod === 1), Seq("source"))
       .select(col("source"), col("shingle")).distinct()
     val idx = Tables.gramIndex(spark, dir).union(spark.read
       .parquet(Tables.gramBaseLoc(spark, dir, "_delta").toString))
-    val rep = DocQueries.noveltyBatchReport(bg2, idx)
+    val rep = IngestQueries.noveltyBatchReport(bg2, idx)
     val plan = rep.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftSemi"),
       s"unioned index probe is not a broadcast semi-join:\n$plan")

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.{DocQueries, Registry}
+import graft.queries.{DocCommon, IngestQueries, Registry}
 
 /** q110c — the index APPEND half of the production ingest-dedup loop
   * (round-13 verdict item 6). The DuckDB oracle grades the funnel
@@ -19,7 +19,7 @@ class IndexAppendSpec extends AnyFunSuite {
   private val dir = TestSpark.sf0001
 
   private def docsB(m: Int): DataFrame =
-    Tables.load(spark, dir, "documents").filter(DocQueries.q110Mod === m)
+    Tables.load(spark, dir, "documents").filter(DocCommon.q110Mod === m)
 
   // one registry run for the whole suite: materializes the delta
   // segment and yields the funnel the laws below read
@@ -29,8 +29,8 @@ class IndexAppendSpec extends AnyFunSuite {
 
   private def nearIds(idx: (DataFrame, DataFrame)): Set[Long] = {
     val b2 = docsB(1)
-    val sh = DocQueries.shingleTable(b2, Nil)
-    DocQueries.indexDedupStep(sh, DocQueries.bandRows(sh, Nil), None,
+    val sh = DocCommon.shingleTable(b2, Nil)
+    IngestQueries.indexDedupStep(sh, IngestQueries.bandRows(sh, Nil), None,
         idx._1, idx._2)
       .collect().map(_.getLong(0)).toSet
   }
@@ -48,7 +48,7 @@ class IndexAppendSpec extends AnyFunSuite {
 
   test("delta segment holds exactly the kept batch-1 docs' bands and sets") {
     funnelRows
-    val (dBandsLoc, dSetsLoc) = DocQueries.q110cDeltaLocs(spark, dir)
+    val (dBandsLoc, dSetsLoc) = IngestQueries.q110cDeltaLocs(spark, dir)
     val deltaBandIds = spark.read.parquet(dBandsLoc)
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
     val deltaSetIds = spark.read.parquet(dSetsLoc)
@@ -58,9 +58,9 @@ class IndexAppendSpec extends AnyFunSuite {
     // < 5 tokens, which can never carry bands/sets)
     val base = Tables.minhashIndexBase(spark, dir)
     val b1 = docsB(0)
-    val sh1 = DocQueries.shingleTable(b1, Nil)
-    val near1 = DocQueries.indexDedupStep(sh1,
-        DocQueries.bandRows(sh1, Nil), None, base._1, base._2)
+    val sh1 = DocCommon.shingleTable(b1, Nil)
+    val near1 = IngestQueries.indexDedupStep(sh1,
+        IngestQueries.bandRows(sh1, Nil), None, base._1, base._2)
       .collect().map(_.getLong(0)).toSet
     val shingled1 = sh1.select("doc_id").distinct()
       .collect().map(_.getLong(0)).toSet
@@ -72,7 +72,7 @@ class IndexAppendSpec extends AnyFunSuite {
   test("the append matters: base-only dedup of batch 2 misses cross-batch dups") {
     funnelRows // delta segment must exist
     val base = Tables.minhashIndexBase(spark, dir)
-    val (dBandsLoc, dSetsLoc) = DocQueries.q110cDeltaLocs(spark, dir)
+    val (dBandsLoc, dSetsLoc) = IngestQueries.q110cDeltaLocs(spark, dir)
     val updated = (
       base._1.select("doc_id", "band_idx", "band_val")
         .union(spark.read.parquet(dBandsLoc)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.{DocQueries, Registry}
+import graft.queries.{DocCommon, IngestQueries, Registry}
 
 /** q110e — index compaction, the LSM close-out of the q110c append
   * cycle. The DuckDB oracle (shared with q110c) grades the funnel
@@ -43,15 +43,15 @@ class IndexCompactSpec extends AnyFunSuite {
     funnelRows
     def ids(df: DataFrame): Set[Long] =
       df.select("doc_id").distinct().collect().map(_.getLong(0)).toSet
-    val (cBandsLoc, cSetsLoc) = DocQueries.q110eCompactLocs(spark, dir)
+    val (cBandsLoc, cSetsLoc) = IngestQueries.q110eCompactLocs(spark, dir)
     // independent recompute of kept1 (IndexAppendSpec's derivation):
     // batch-1 shingled ids minus the near set vs the base index
     val base = Tables.minhashIndexBase(spark, dir)
     val b1 = Tables.load(spark, dir, "documents")
-      .filter(DocQueries.q110Mod === 0)
-    val sh1 = DocQueries.shingleTable(b1, Nil)
-    val near1 = DocQueries.indexDedupStep(sh1,
-        DocQueries.bandRows(sh1, Nil), None, base._1, base._2)
+      .filter(DocCommon.q110Mod === 0)
+    val sh1 = DocCommon.shingleTable(b1, Nil)
+    val near1 = IngestQueries.indexDedupStep(sh1,
+        IngestQueries.bandRows(sh1, Nil), None, base._1, base._2)
       .collect().map(_.getLong(0)).toSet
     val expected = ids(base._1) ++ (ids(sh1) -- near1)
     assert(ids(spark.read.parquet(cBandsLoc)) === expected)

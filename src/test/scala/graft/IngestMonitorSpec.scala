@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.queries.{DocQueries, Registry}
+import graft.queries.{DocCommon, Registry}
 
 /** Laws for the two ingest monitors (q116 drift, q117 novelty) on the
   * real sf0.001 corpus — both read the q110 family's md5-range batch
@@ -43,9 +43,9 @@ class IngestMonitorSpec extends AnyFunSuite {
   }
 
   test("q117's broadcast chain equals the naive except-based novelty") {
-    val sh = DocQueries.shingleTable(
+    val sh = DocCommon.shingleTable(
       Tables.load(spark, dir, "documents")
-        .withColumn("is_batch", DocQueries.q110IsBatch),
+        .withColumn("is_batch", DocCommon.q110Mod === 0),
       Seq("is_batch", "source"))
     val naiveNovel = sh.filter(col("is_batch"))
       .select(col("source"), col("shingle")).distinct()

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.queries.{DocQueries, Registry}
+import graft.queries.{DocCommon, Registry, TextQueries}
 
 /** q115 leakage-safe split laws on the real sf0.001 corpus:
   *
@@ -24,13 +24,13 @@ class LeakSafeSplitSpec extends AnyFunSuite {
 
   // the engine's own rule — the spec grades its APPLICATION (cluster
   // key vs doc key), not a re-derivation of the rule text
-  private def splitOf(c: Column): Column = DocQueries.md5SplitOf(c)
+  private def splitOf(c: Column): Column = DocCommon.md5SplitOf(c)
 
   test("no near-dup pair straddles splits under the cluster-keyed rule") {
-    val labels = DocQueries.dupClusterLabels(spark, dir)
+    val labels = TextQueries.dupClusterLabels(spark, dir)
     val assigned = labels.select(col("doc_id"),
       splitOf(col("label")).as("split"))
-    val pairs = DocQueries.nearDupPairs(spark, dir)
+    val pairs = TextQueries.nearDupPairs(spark, dir)
       .select(col("doc1"), col("doc2"))
     val straddling = pairs
       .join(assigned.toDF("doc1", "s1"), "doc1")
@@ -41,7 +41,7 @@ class LeakSafeSplitSpec extends AnyFunSuite {
   }
 
   test("the naive doc_id rule DOES straddle pairs here, and q115 reports moves") {
-    val pairs = DocQueries.nearDupPairs(spark, dir)
+    val pairs = TextQueries.nearDupPairs(spark, dir)
       .select(col("doc1"), col("doc2"))
     val naiveStraddling = pairs
       .filter(splitOf(col("doc1")) =!= splitOf(col("doc2")))

@@ -372,7 +372,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // Audit the PRE-checkpoint signature pipeline directly: q32 itself
     // materializes it behind an eager localCheckpoint, whose plan is
     // invisible to the final query's debugCodegen.
-    val df = graft.queries.DocQueries.simhashSig(spark, dir)
+    val df = graft.queries.TextQueries.simhashSig(spark, dir)
     df.queryExecution.toRdd.count()
     val subtrees = df.queryExecution.debug.codegenToSeq()
     val agg = subtrees.filter(_._1.contains("HashAggregate"))

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.lsm.Lsm
-import graft.queries.{DocQueries, Registry}
+import graft.queries.{DocCommon, IngestQueries, Registry}
 import graft.streaming.StreamingJobs
 
 /** q122 — the streaming ingest capstone: ONE foreachBatch composing
@@ -105,8 +105,11 @@ class StreamCapstoneSpec extends AnyFunSuite {
     // (and the delta roots) after the drain — exactly what the wired-in
     // post-checkpoint GC deletes; the GC equivalence law below covers
     // the default path
-    DocQueries.runStreamCapstone(spark, dir, replay, db, ds, cb, cs,
-      gd, gf, fs, ns, ckpt, gc = false)
+    IngestQueries.drainCapstone(spark, replay, ckpt,
+      IngestQueries.minhashRels(Tables.minhashIndexBase(spark, dir),
+        db, ds, cb, cs) ++
+        IngestQueries.gramRels(Tables.gramIndex(spark, dir), gd, gf),
+      fs, ns, gc = false)
     // the fold landed at the cadence in ALL THREE relations' dirs
     for (d <- Seq(cb, cs, gf); n <- Seq(0, 1))
       assert(new java.io.File(s"$d/fold=$n", "_SUCCESS").exists(),
@@ -145,8 +148,8 @@ class StreamCapstoneSpec extends AnyFunSuite {
       .createTempDirectory(s"graft-capf-$t").toString
     val (db, ds, cb, cs, gd, gf, fs, ns) = (tmp("db"), tmp("ds"),
       tmp("cb"), tmp("cs"), tmp("gd"), tmp("gf"), tmp("fs"), tmp("ns"))
-    // seed the delta roots (the runStreamCapstone contract, inline so
-    // the batches can be driven directly)
+    // seed the delta roots (the legacy seeded layout, inline so the
+    // batches can be driven directly)
     iBands.select("doc_id", "band_idx", "band_val").limit(0)
       .write.mode("overwrite").parquet(s"$db/batch=-1")
     iSets.select("doc_id", "ss", "n").limit(0)
@@ -155,9 +158,10 @@ class StreamCapstoneSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$gd/batch=-1")
     def batch(id: Long, k: Int,
         crashMidFold: Long => Unit = _ => ()): Unit =
-      DocQueries.streamCapstoneBatch(spark,
-        all.filter(DocQueries.q110Mod === id), id, iBands, iSets,
-        db, ds, cb, cs, grams, gd, gf, fs, ns, k,
+      IngestQueries.capstoneBatch(spark,
+        all.filter(DocCommon.q110Mod === id), id,
+        IngestQueries.minhashRels((iBands, iSets), db, ds, cb, cs) ++
+          IngestQueries.gramRels(grams, gd, gf), fs, ns, k,
         crashMidFold = crashMidFold)
     val thrown = intercept[RuntimeException] {
       batch(0L, k = 1,
@@ -179,7 +183,7 @@ class StreamCapstoneSpec extends AnyFunSuite {
     for (d <- Seq(cb, cs, gf))
       assert(new java.io.File(s"$d/fold=1", "_SUCCESS").exists(),
         s"the k=2 fold at batch 1 did not commit under $d")
-    val recovered = DocQueries.capstoneTable(spark, dir, fs, ns)
+    val recovered = IngestQueries.capstoneTable(spark, dir, fs, ns)
       .collect().map(_.toSeq).toSeq
     assert(recovered === oneShot,
       "the torn fold leaked into the capstone report")
@@ -199,11 +203,14 @@ class StreamCapstoneSpec extends AnyFunSuite {
       tmp("ckpt"))
     // gc = false: the law snapshots the delta roots and BOTH folds,
     // which the wired-in post-checkpoint GC would reap
-    DocQueries.runStreamCapstone(spark, dir, replay, db, ds, cb, cs,
-      gd, gf, fs, ns, ckpt, gc = false)
+    IngestQueries.drainCapstone(spark, replay, ckpt,
+      IngestQueries.minhashRels(Tables.minhashIndexBase(spark, dir),
+        db, ds, cb, cs) ++
+        IngestQueries.gramRels(Tables.gramIndex(spark, dir), gd, gf),
+      fs, ns, gc = false)
     def snap(): (Seq[Seq[Any]], Set[Seq[Any]], Set[Seq[Any]],
         Set[Seq[Any]]) = (
-      DocQueries.capstoneTable(spark, dir, fs, ns)
+      IngestQueries.capstoneTable(spark, dir, fs, ns)
         .collect().map(_.toSeq).toSeq,
       spark.read.parquet(db).select("batch", "doc_id").distinct()
         .collect().map(_.toSeq).toSet,
@@ -234,9 +241,10 @@ class StreamCapstoneSpec extends AnyFunSuite {
     val grams = Tables.gramIndex(spark, dir)
     val all = spark.read.parquet(replay)
     Seq(0L, 1L).foreach { id =>
-      DocQueries.streamCapstoneBatch(spark,
-        all.filter(DocQueries.q110Mod === id), id, iBands, iSets,
-        db, ds, cb, cs, grams, gd, gf, fs, ns)
+      IngestQueries.capstoneBatch(spark,
+        all.filter(DocCommon.q110Mod === id), id,
+        IngestQueries.minhashRels((iBands, iSets), db, ds, cb, cs) ++
+          IngestQueries.gramRels(grams, gd, gf), fs, ns)
     }
     assert(snap() === before,
       "redelivered batches changed a sink, a segment root, or a fold")
@@ -261,12 +269,18 @@ class StreamCapstoneSpec extends AnyFunSuite {
       assert(to.toFile.setLastModified(from.lastModified))
     }
     arrive("b0.parquet")
-    DocQueries.runStreamCapstone(spark, dir, stage.toString, db, ds,
-      cb, cs, gd, gf, fs, ns, ckpt)
+    IngestQueries.drainCapstone(spark, stage.toString, ckpt,
+      IngestQueries.minhashRels(Tables.minhashIndexBase(spark, dir),
+        db, ds, cb, cs) ++
+        IngestQueries.gramRels(Tables.gramIndex(spark, dir), gd, gf),
+      fs, ns)
     arrive("b1.parquet")
-    DocQueries.runStreamCapstone(spark, dir, stage.toString, db, ds,
-      cb, cs, gd, gf, fs, ns, ckpt)
-    val resumed = DocQueries.capstoneTable(spark, dir, fs, ns)
+    IngestQueries.drainCapstone(spark, stage.toString, ckpt,
+      IngestQueries.minhashRels(Tables.minhashIndexBase(spark, dir),
+        db, ds, cb, cs) ++
+        IngestQueries.gramRels(Tables.gramIndex(spark, dir), gd, gf),
+      fs, ns)
+    val resumed = IngestQueries.capstoneTable(spark, dir, fs, ns)
       .collect().map(_.toSeq).toSeq
     assert(resumed === oneShot,
       "restarted capstone diverged from the one-shot run")
@@ -282,8 +296,11 @@ class StreamCapstoneSpec extends AnyFunSuite {
       tmp("ckpt"))
     val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
     val thrown = intercept[Exception] {
-      DocQueries.runStreamCapstone(spark, dir, replay, db, ds, cb, cs,
-        gd, gf, fs, ns, ckpt, crashBeforeSink = id =>
+      IngestQueries.drainCapstone(spark, replay, ckpt,
+        IngestQueries.minhashRels(Tables.minhashIndexBase(spark, dir),
+          db, ds, cb, cs) ++
+          IngestQueries.gramRels(Tables.gramIndex(spark, dir), gd, gf),
+        fs, ns, crashBeforeSink = id =>
           if (id == 1L && crashed.compareAndSet(false, true))
             throw new RuntimeException("torn-write injection"))
     }
@@ -297,9 +314,12 @@ class StreamCapstoneSpec extends AnyFunSuite {
     assert(!new java.io.File(s"$fs/batch=1").exists() &&
       !new java.io.File(s"$ns/batch=1").exists(),
       "a sink partition exists despite the pre-sink crash")
-    DocQueries.runStreamCapstone(spark, dir, replay, db, ds, cb, cs,
-      gd, gf, fs, ns, ckpt)
-    val recovered = DocQueries.capstoneTable(spark, dir, fs, ns)
+    IngestQueries.drainCapstone(spark, replay, ckpt,
+      IngestQueries.minhashRels(Tables.minhashIndexBase(spark, dir),
+        db, ds, cb, cs) ++
+        IngestQueries.gramRels(Tables.gramIndex(spark, dir), gd, gf),
+      fs, ns)
+    val recovered = IngestQueries.capstoneTable(spark, dir, fs, ns)
       .collect().map(_.toSeq).toSeq
     assert(recovered === oneShot,
       "post-crash rerun diverged from the one-shot run")
@@ -308,8 +328,8 @@ class StreamCapstoneSpec extends AnyFunSuite {
   test("post-checkpoint GC rides the capstone's own path: dead segments die, the report and live fold survive") {
     // round-18 verdict item 5 — the StreamIndexDedupSpec GC law
     // extended to the capstone's THREE relations, exercised where a
-    // deployment runs it: runStreamCapstone's default gc = true calls
-    // lsmGc(capstoneRels, checkpointedBatchId(ckpt)) after the drain.
+    // deployment runs it: drainCapstone's default gc = true calls
+    // lsmGc(rels, checkpointedBatchId(ckpt)) after the drain.
     // The registry fixture (`capstone`) already runs that path; here
     // a gc'd and an un-gc'd drive of the same replay must agree on
     // the report, and the gc'd tree must hold exactly the live state.
@@ -320,9 +340,12 @@ class StreamCapstoneSpec extends AnyFunSuite {
       val (db, ds, cb, cs, gd, gf, fs, ns, ckpt) = (tmp("db"), tmp("ds"),
         tmp("cb"), tmp("cs"), tmp("gd"), tmp("gf"), tmp("fs"), tmp("ns"),
         tmp("ckpt"))
-      DocQueries.runStreamCapstone(spark, dir, replay, db, ds, cb, cs,
-        gd, gf, fs, ns, ckpt, gc = gc)
-      val table = DocQueries.capstoneTable(spark, dir, fs, ns)
+      IngestQueries.drainCapstone(spark, replay, ckpt,
+        IngestQueries.minhashRels(Tables.minhashIndexBase(spark, dir),
+          db, ds, cb, cs) ++
+          IngestQueries.gramRels(Tables.gramIndex(spark, dir), gd, gf),
+        fs, ns, gc = gc)
+      val table = IngestQueries.capstoneTable(spark, dir, fs, ns)
         .collect().map(_.toSeq).toSeq
       (table, Seq(db, ds, cb, cs, gd, gf), ckpt)
     }
@@ -375,9 +398,10 @@ class StreamCapstoneSpec extends AnyFunSuite {
     // and the GC'd tree still reads exactly the live fold: a NEW
     // batch 2 folds fold=2 from fold=1 ∪ its own delta alone
     val all = spark.read.parquet(replay)
-    DocQueries.streamCapstoneBatch(spark,
-      all.filter(DocQueries.q110Mod === 1L), 2L, iBands, iSets,
-      db, ds, cb, cs, grams, gd, gf,
+    IngestQueries.capstoneBatch(spark,
+      all.filter(DocCommon.q110Mod === 1L), 2L,
+      IngestQueries.minhashRels((iBands, iSets), db, ds, cb, cs) ++
+        IngestQueries.gramRels(grams, gd, gf),
       tmp("fs2"), tmp("ns2"))
     assert(new java.io.File(s"$cb/fold=2", "_SUCCESS").exists(),
       "batch 2 on the GC'd tree failed to fold")
@@ -397,8 +421,11 @@ class StreamCapstoneSpec extends AnyFunSuite {
     val (db, ds, cb, cs, gd, gf, fs, ns, ckpt) = (tmp("db"), tmp("ds"),
       tmp("cb"), tmp("cs"), tmp("gd"), tmp("gf"), tmp("fs"), tmp("ns"),
       tmp("ckpt"))
-    DocQueries.runStreamCapstone(spark, dir, replay, db, ds, cb, cs,
-      gd, gf, fs, ns, ckpt, gc = false)
+    IngestQueries.drainCapstone(spark, replay, ckpt,
+      IngestQueries.minhashRels(Tables.minhashIndexBase(spark, dir),
+        db, ds, cb, cs) ++
+        IngestQueries.gramRels(Tables.gramIndex(spark, dir), gd, gf),
+      fs, ns, gc = false)
     def names(d: String, n: Long): Set[String] =
       Option(new java.io.File(s"$d/fold=$n").list())
         .map(_.toSet).getOrElse(Set.empty)
@@ -415,9 +442,10 @@ class StreamCapstoneSpec extends AnyFunSuite {
     val (iBands, iSets) = (graft.Tables.minhashIndexBase(spark, dir))
     val grams = graft.Tables.gramIndex(spark, dir)
     val all = spark.read.parquet(replay)
-    DocQueries.streamCapstoneBatch(spark,
-      all.filter(DocQueries.q110Mod === 1L), 1L, iBands, iSets,
-      db, ds, cb, cs, grams, gd, gf, fs, ns)
+    IngestQueries.capstoneBatch(spark,
+      all.filter(DocCommon.q110Mod === 1L), 1L,
+      IngestQueries.minhashRels((iBands, iSets), db, ds, cb, cs) ++
+        IngestQueries.gramRels(grams, gd, gf), fs, ns)
     assert(names(cb, 1L) === cbBefore && names(gf, 1L) === gfBefore,
       "a committed sibling fold was rewritten while healing the torn one")
     assert(new java.io.File(s"$cs/fold=1", "_SUCCESS").exists(),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.lsm.Lsm
-import graft.queries.{DocQueries, Registry}
+import graft.queries.{DocCommon, IngestQueries, Registry}
 import graft.streaming.StreamingJobs
 
 /** q110d — the streaming twin of the q110c ingest-dedup loop. The
@@ -39,7 +39,7 @@ class StreamIndexDedupSpec extends AnyFunSuite {
     assert(files(0).lastModified < files(1).lastModified)
     // each file is exactly one md5-carve class
     val mods = files.map { f =>
-      spark.read.parquet(f.toString).select(DocQueries.q110Mod.as("m"))
+      spark.read.parquet(f.toString).select(DocCommon.q110Mod.as("m"))
         .distinct().collect().map(_.getLong(0)).toSet
     }
     assert(mods(0) === Set(0L) && mods(1) === Set(1L))
@@ -61,7 +61,9 @@ class StreamIndexDedupSpec extends AnyFunSuite {
       .createTempDirectory(s"graft-side-$t").toString
     val (db, ds, sink, ckpt) =
       (tmp("dbands"), tmp("dsets"), tmp("sink"), tmp("ckpt"))
-    DocQueries.runStreamIndexDedup(spark, dir, replay, db, ds, sink, ckpt)
+    IngestQueries.drainDedup(spark, replay, ckpt,
+      IngestQueries.minhashRels(Tables.minhashIndexBase(spark, dir), db, ds),
+      sink)
     assert(!new java.io.File(s"$db/batch=-1").exists() &&
       !new java.io.File(s"$ds/batch=-1").exists(),
       "runner still writes batch=-1 schema seeds")
@@ -88,14 +90,14 @@ class StreamIndexDedupSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$ds2/batch=-1")
     val all = spark.read.parquet(replay)
     Seq(0L, 1L).foreach { id =>
-      DocQueries.streamDedupBatch(spark,
-        all.filter(DocQueries.q110Mod === id), id, iBands, iSets,
-        db2, ds2, sink2)
+      IngestQueries.dedupBatch(spark,
+        all.filter(DocCommon.q110Mod === id), id,
+        IngestQueries.minhashRels((iBands, iSets), db2, ds2), sink2)
     }
     assert(
-      DocQueries.streamDedupTable(spark, sink2)
+      IngestQueries.streamDedupTable(spark, sink2)
         .collect().map(_.toSeq).toSeq ===
-      DocQueries.streamDedupTable(spark, sink)
+      IngestQueries.streamDedupTable(spark, sink)
         .collect().map(_.toSeq).toSeq,
       "a seeded tree and an unseeded tree disagree")
   }
@@ -109,7 +111,9 @@ class StreamIndexDedupSpec extends AnyFunSuite {
       .createTempDirectory(s"graft-sinf-$t").toString
     val runDirs @ Seq(db, ds, sink, ckpt) =
       Seq(tmp("dbands"), tmp("dsets"), tmp("sink"), tmp("ckpt"))
-    DocQueries.runStreamIndexDedup(spark, dir, replay, db, ds, sink, ckpt)
+    IngestQueries.drainDedup(spark, replay, ckpt,
+      IngestQueries.minhashRels(Tables.minhashIndexBase(spark, dir), db, ds),
+      sink)
     assert(new java.io.File(s"$db/batch=1").exists() &&
       new java.io.File(s"$sink/batch=1").exists(),
       "the run did not drain both batches")
@@ -123,9 +127,11 @@ class StreamIndexDedupSpec extends AnyFunSuite {
       .createTempDirectory(s"graft-sids-$t").toString
     val (db, ds, sink, ckpt) =
       (tmp("dbands"), tmp("dsets"), tmp("sink"), tmp("ckpt"))
-    DocQueries.runStreamIndexDedup(spark, dir, replay, db, ds, sink, ckpt)
+    IngestQueries.drainDedup(spark, replay, ckpt,
+      IngestQueries.minhashRels(Tables.minhashIndexBase(spark, dir), db, ds),
+      sink)
     def snap(): (Seq[Seq[Any]], Set[Seq[Any]], Set[Seq[Any]]) = (
-      DocQueries.streamDedupTable(spark, sink)
+      IngestQueries.streamDedupTable(spark, sink)
         .collect().map(_.toSeq).toSeq,
       spark.read.parquet(db).select("batch", "doc_id").distinct()
         .collect().map(_.toSeq).toSet,
@@ -139,9 +145,9 @@ class StreamIndexDedupSpec extends AnyFunSuite {
     val (iBands, iSets) = Tables.minhashIndexBase(spark, dir)
     val all = spark.read.parquet(replay)
     Seq(0L, 1L).foreach { id =>
-      DocQueries.streamDedupBatch(spark,
-        all.filter(DocQueries.q110Mod === id), id,
-        iBands, iSets, db, ds, sink)
+      IngestQueries.dedupBatch(spark,
+        all.filter(DocCommon.q110Mod === id), id,
+        IngestQueries.minhashRels((iBands, iSets), db, ds), sink)
     }
     assert(snap() === before,
       "redelivered batches changed the sink or the index segments")
@@ -163,8 +169,9 @@ class StreamIndexDedupSpec extends AnyFunSuite {
       (tmp("dbands"), tmp("dsets"), tmp("sink"), tmp("ckpt"))
     val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
     val thrown = intercept[Exception] {
-      DocQueries.runStreamIndexDedup(spark, dir, replay, db, ds, sink,
-        ckpt, crashBeforeSink = id =>
+      IngestQueries.drainDedup(spark, replay, ckpt,
+        IngestQueries.minhashRels(Tables.minhashIndexBase(spark, dir), db, ds),
+        sink, crashBeforeSink = id =>
           if (id == 1L && crashed.compareAndSet(false, true))
             throw new RuntimeException("torn-write injection"))
     }
@@ -177,8 +184,10 @@ class StreamIndexDedupSpec extends AnyFunSuite {
       "sink partition exists despite the pre-sink crash")
     // restart from the same checkpoint with no injection: batch 1
     // re-runs, overwrites its torn segment, writes its sink
-    DocQueries.runStreamIndexDedup(spark, dir, replay, db, ds, sink, ckpt)
-    val recovered = DocQueries.streamDedupTable(spark, sink)
+    IngestQueries.drainDedup(spark, replay, ckpt,
+      IngestQueries.minhashRels(Tables.minhashIndexBase(spark, dir), db, ds),
+      sink)
+    val recovered = IngestQueries.streamDedupTable(spark, sink)
       .collect().map(_.toSeq).toSeq
     assert(recovered === streamed.map(_.toSeq).toSeq,
       "post-crash rerun diverged from the one-shot run")
@@ -208,14 +217,16 @@ class StreamIndexDedupSpec extends AnyFunSuite {
     }
     // leg 1: only b0 has arrived; the stream drains it and "dies"
     arrive("b0.parquet")
-    DocQueries.runStreamIndexDedup(spark, dir, stage.toString,
-      db, ds, sink, ckpt)
+    IngestQueries.drainDedup(spark, stage.toString, ckpt,
+      IngestQueries.minhashRels(Tables.minhashIndexBase(spark, dir), db, ds),
+      sink)
     // leg 2: b1 arrives; a fresh execution resumes from the SAME
     // checkpoint against the same sink/delta dirs
     arrive("b1.parquet")
-    DocQueries.runStreamIndexDedup(spark, dir, stage.toString,
-      db, ds, sink, ckpt)
-    val resumed = DocQueries.streamDedupTable(spark, sink)
+    IngestQueries.drainDedup(spark, stage.toString, ckpt,
+      IngestQueries.minhashRels(Tables.minhashIndexBase(spark, dir), db, ds),
+      sink)
+    val resumed = IngestQueries.streamDedupTable(spark, sink)
       .collect().map(_.toSeq).toSeq
     assert(resumed === streamed.map(_.toSeq).toSeq,
       "restarted stream diverged from the one-shot run")
@@ -246,8 +257,9 @@ class StreamIndexDedupSpec extends AnyFunSuite {
       .createTempDirectory(s"graft-sifc-$t").toString
     val (db, ds, cb, cs, sink, ckpt) = (tmp("db"), tmp("ds"), tmp("cb"),
       tmp("cs"), tmp("sink"), tmp("ckpt"))
-    DocQueries.runStreamCompactDedup(spark, dir, replay, db, ds, cb, cs,
-      sink, ckpt)
+    IngestQueries.drainDedup(spark, replay, ckpt,
+      IngestQueries.minhashRels(Tables.minhashIndexBase(spark, dir),
+        db, ds, cb, cs), sink, k = Some(1))
     val plan = StreamingJobs
       .innerPlanOf("q110f_stream_compaction batch=1")
       .getOrElse(fail("batch-1 inner plan was not recorded"))
@@ -292,17 +304,19 @@ class StreamIndexDedupSpec extends AnyFunSuite {
       assert(to.toFile.setLastModified(from.lastModified))
     }
     arrive("b0.parquet")
-    DocQueries.runStreamCompactDedup(spark, dir, stage.toString,
-      db, ds, cb, cs, sink, ckpt)
+    IngestQueries.drainDedup(spark, stage.toString, ckpt,
+      IngestQueries.minhashRels(Tables.minhashIndexBase(spark, dir),
+        db, ds, cb, cs), sink, k = Some(1))
     // the fold committed before the "death": the immutable fold=0
     // segment is already on disk when the resumed execution starts
     assert(new java.io.File(s"$cb/fold=0", "_SUCCESS").exists() &&
       new java.io.File(s"$cs/fold=0", "_SUCCESS").exists(),
       "compaction did not land with batch 0")
     arrive("b1.parquet")
-    DocQueries.runStreamCompactDedup(spark, dir, stage.toString,
-      db, ds, cb, cs, sink, ckpt)
-    val resumed = DocQueries.streamDedupTable(spark, sink)
+    IngestQueries.drainDedup(spark, stage.toString, ckpt,
+      IngestQueries.minhashRels(Tables.minhashIndexBase(spark, dir),
+        db, ds, cb, cs), sink, k = Some(1))
+    val resumed = IngestQueries.streamDedupTable(spark, sink)
       .collect().map(_.toSeq).toSeq
     assert(resumed === oneShot,
       "restart across the compaction boundary diverged from one-shot")
@@ -320,7 +334,7 @@ class StreamIndexDedupSpec extends AnyFunSuite {
     val docsAll = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("source"), col("text"))
     for (m <- Seq(0, 1); p <- Seq(0, 1))
-      yield docsAll.filter(DocQueries.q110Mod === m)
+      yield docsAll.filter(DocCommon.q110Mod === m)
         .filter(col("doc_id") % 2 === p)
   }
 
@@ -336,7 +350,7 @@ class StreamIndexDedupSpec extends AnyFunSuite {
   }
 
   private def funnel(sink: String): Seq[Seq[Any]] =
-    DocQueries.streamDedupTable(spark, sink).collect().map(_.toSeq).toSeq
+    IngestQueries.streamDedupTable(spark, sink).collect().map(_.toSeq).toSeq
 
   /** q110d's uncompacted kernel over the four-batch fixture — the
     * reference funnel every cadence law compares against. */
@@ -346,8 +360,8 @@ class StreamIndexDedupSpec extends AnyFunSuite {
       (cadenceTmp("db1"), cadenceTmp("ds1"), cadenceTmp("sink1"))
     seedDeltas(db, ds)
     fourBatches.zipWithIndex.foreach { case (b, id) =>
-      DocQueries.streamDedupBatch(spark, b, id.toLong, iBands, iSets,
-        db, ds, sink)
+      IngestQueries.dedupBatch(spark, b, id.toLong,
+        IngestQueries.minhashRels((iBands, iSets), db, ds), sink)
     }
     funnel(sink)
   }
@@ -367,8 +381,9 @@ class StreamIndexDedupSpec extends AnyFunSuite {
       cadenceTmp("cb"), cadenceTmp("cs"), cadenceTmp("sink2"))
     seedDeltas(db2, ds2)
     fourBatches.zipWithIndex.foreach { case (b, id) =>
-      DocQueries.streamCompactBatch(spark, b, id.toLong, iBands, iSets,
-        db2, ds2, cb, cs, sink2, k = 2)
+      IngestQueries.dedupBatch(spark, b, id.toLong,
+        IngestQueries.minhashRels((iBands, iSets), db2, ds2, cb, cs), sink2,
+        k = Some(2))
     }
     val f2 = funnel(sink2)
     assert(uncompactedFourBatch === f2,
@@ -420,8 +435,9 @@ class StreamIndexDedupSpec extends AnyFunSuite {
       cadenceTmp("cb"), cadenceTmp("cs"), cadenceTmp("sink2"))
     seedDeltas(db2, ds2)
     fourBatches.zipWithIndex.foreach { case (b, id) =>
-      DocQueries.streamCompactBatch(spark, b, id.toLong, iBands, iSets,
-        db2, ds2, cb, cs, sink2, k = if (id < 3) 3 else 2)
+      IngestQueries.dedupBatch(spark, b, id.toLong,
+        IngestQueries.minhashRels((iBands, iSets), db2, ds2, cb, cs), sink2,
+        k = Some(if (id < 3) 3 else 2))
     }
     // fold=2 fired under k=3 (batches 0-2); batch 3 then folds again
     // under its own k=2 ((3+1) % 2 == 0) — both and nothing else
@@ -454,12 +470,13 @@ class StreamIndexDedupSpec extends AnyFunSuite {
     val (db, ds, cb, cs, sink) = (cadenceTmp("db3"), cadenceTmp("ds3"),
       cadenceTmp("cb3"), cadenceTmp("cs3"), cadenceTmp("sink3"))
     seedDeltas(db, ds)
-    DocQueries.streamCompactBatch(spark, fourBatches(0), 0L,
-      iBands, iSets, db, ds, cb, cs, sink, k = 2)
+    IngestQueries.dedupBatch(spark, fourBatches(0), 0L,
+      IngestQueries.minhashRels((iBands, iSets), db, ds, cb, cs), sink,
+      k = Some(2))
     val thrown = intercept[RuntimeException] {
-      DocQueries.streamCompactBatch(spark, fourBatches(1), 1L,
-        iBands, iSets, db, ds, cb, cs, sink, k = 2,
-        crashMidFold =
+      IngestQueries.dedupBatch(spark, fourBatches(1), 1L,
+        IngestQueries.minhashRels((iBands, iSets), db, ds, cb, cs), sink,
+        k = Some(2), crashMidFold =
           _ => throw new RuntimeException("torn-fold injection"))
     }
     assert(thrown.getMessage === "torn-fold injection")
@@ -473,8 +490,9 @@ class StreamIndexDedupSpec extends AnyFunSuite {
     // overwrites are idempotent) and does NOT re-fire the fold;
     // batch 2 folds under the new cadence ((2+1) % 3 == 0)
     (1 to 3).foreach { id =>
-      DocQueries.streamCompactBatch(spark, fourBatches(id), id.toLong,
-        iBands, iSets, db, ds, cb, cs, sink, k = 3)
+      IngestQueries.dedupBatch(spark, fourBatches(id), id.toLong,
+        IngestQueries.minhashRels((iBands, iSets), db, ds, cb, cs), sink,
+        k = Some(3))
     }
     assert(!new java.io.File(s"$cs/fold=1").exists(),
       "the retuned re-run resurrected the torn fold")
@@ -513,16 +531,18 @@ class StreamIndexDedupSpec extends AnyFunSuite {
       val (db, ds, cb, cs, sink) =
         (tmp("db"), tmp("ds"), tmp("cb"), tmp("cs"), tmp("sink"))
       seedDeltas(db, ds)
-      DocQueries.streamCompactBatch(spark,
-        all.filter(DocQueries.q110Mod === 0), 0L, iBands, iSets,
-        db, ds, cb, cs, sink)
+      IngestQueries.dedupBatch(spark,
+        all.filter(DocCommon.q110Mod === 0), 0L,
+        IngestQueries.minhashRels((iBands, iSets), db, ds, cb, cs), sink,
+        k = Some(1))
       if (gc) {
         TestSpark.rmr(s"$db/batch=0"); TestSpark.rmr(s"$ds/batch=0")
       }
-      DocQueries.streamCompactBatch(spark,
-        all.filter(DocQueries.q110Mod === 1), 1L, iBands, iSets,
-        db, ds, cb, cs, sink)
-      (DocQueries.streamDedupTable(spark, sink)
+      IngestQueries.dedupBatch(spark,
+        all.filter(DocCommon.q110Mod === 1), 1L,
+        IngestQueries.minhashRels((iBands, iSets), db, ds, cb, cs), sink,
+        k = Some(1))
+      (IngestQueries.streamDedupTable(spark, sink)
           .collect().map(_.toSeq).toSeq,
         spark.read.parquet(s"$cb/fold=1").select("doc_id").distinct()
           .collect().map(_.getLong(0)).toSet)
@@ -554,8 +574,9 @@ class StreamIndexDedupSpec extends AnyFunSuite {
         Lsm.LsmRelation(iSets.select("doc_id", "ss", "n"), ds,
           Seq("doc_id", "ss", "n"), cs))
       def batch(id: Long): Unit =
-        DocQueries.streamCompactBatch(spark, fourBatches(id.toInt), id,
-          iBands, iSets, db, ds, cb, cs, sink)
+        IngestQueries.dedupBatch(spark, fourBatches(id.toInt), id,
+          IngestQueries.minhashRels((iBands, iSets), db, ds, cb, cs), sink,
+          k = Some(1))
       batch(0L); batch(1L) // k=1: fold=0 and fold=1 both commit
       if (gc) {
         // batch 1 committed its fold but "has not checkpointed yet"
@@ -601,10 +622,11 @@ class StreamIndexDedupSpec extends AnyFunSuite {
       .createTempDirectory(s"graft-sifd-$t").toString
     val (db, ds, cb, cs, sink, ckpt) = (tmp("db"), tmp("ds"), tmp("cb"),
       tmp("cs"), tmp("sink"), tmp("ckpt"))
-    DocQueries.runStreamCompactDedup(spark, dir, replay, db, ds, cb, cs,
-      sink, ckpt)
+    IngestQueries.drainDedup(spark, replay, ckpt,
+      IngestQueries.minhashRels(Tables.minhashIndexBase(spark, dir),
+        db, ds, cb, cs), sink, k = Some(1))
     def snap(): (Seq[Seq[Any]], Set[Seq[Any]], Set[Seq[Any]]) = (
-      DocQueries.streamDedupTable(spark, sink)
+      IngestQueries.streamDedupTable(spark, sink)
         .collect().map(_.toSeq).toSeq,
       spark.read.parquet(db).select("batch", "doc_id").distinct()
         .collect().map(_.toSeq).toSet,
@@ -624,9 +646,10 @@ class StreamIndexDedupSpec extends AnyFunSuite {
     val (iBands, iSets) = Tables.minhashIndexBase(spark, dir)
     val all = spark.read.parquet(replay)
     Seq(0L, 1L).foreach { id =>
-      DocQueries.streamCompactBatch(spark,
-        all.filter(DocQueries.q110Mod === id), id,
-        iBands, iSets, db, ds, cb, cs, sink)
+      IngestQueries.dedupBatch(spark,
+        all.filter(DocCommon.q110Mod === id), id,
+        IngestQueries.minhashRels((iBands, iSets), db, ds, cb, cs), sink,
+        k = Some(1))
     }
     assert(snap() === before,
       "redelivered batches changed the sink, a delta, or the compacted segment")

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.{DocQueries, Registry}
+import graft.queries.{DocCommon, IngestQueries, Registry}
 
 /** q117b — the streaming n-gram novelty monitor over the write-once
   * gram index. The DuckDB oracle grades both batches against the mod-2
@@ -25,7 +25,7 @@ class StreamNoveltySpec extends AnyFunSuite {
 
   test("gram index holds exactly the mod-2 corpus distinct gram set") {
     val idx = Tables.gramIndex(spark, dir)
-    val ref = DocQueries.corpusGramSet(spark, dir)
+    val ref = IngestQueries.corpusGramSet(spark, dir)
     assert(idx.join(ref, Seq("gram"), "left_anti").count() === 0L,
       "index carries grams the corpus lacks")
     assert(ref.join(idx, Seq("gram"), "left_anti").count() === 0L,
@@ -38,8 +38,8 @@ class StreamNoveltySpec extends AnyFunSuite {
     val idx = Tables.gramIndex(spark, dir)
     val docs = Tables.load(spark, dir, "documents")
     val expected = Seq(0, 1).flatMap { m =>
-      val bg = DocQueries
-        .shingleTable(docs.filter(DocQueries.q110Mod === m),
+      val bg = DocCommon
+        .shingleTable(docs.filter(DocCommon.q110Mod === m),
           Seq("source"))
         .select(col("source"), col("shingle")).distinct()
       bg.join(idx.select(col("gram").as("shingle"))
@@ -65,12 +65,12 @@ class StreamNoveltySpec extends AnyFunSuite {
     // by the batch grams) — a regression to a sort-merge/shuffled-hash
     // join would shuffle the full index per micro-batch while keeping
     // every value-level test green
-    val bg = DocQueries
+    val bg = DocCommon
       .shingleTable(Tables.load(spark, dir, "documents")
-          .filter(DocQueries.q110Mod === 0),
+          .filter(DocCommon.q110Mod === 0),
         Seq("source"))
       .select(col("source"), col("shingle")).distinct()
-    val rep = DocQueries.noveltyBatchReport(bg, Tables.gramIndex(spark, dir))
+    val rep = IngestQueries.noveltyBatchReport(bg, Tables.gramIndex(spark, dir))
     val plan = rep.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftSemi"),
       s"index probe is not a broadcast semi-join:\n$plan")

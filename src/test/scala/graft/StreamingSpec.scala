@@ -1,6 +1,8 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -408,5 +410,35 @@ class StreamingSpec extends AnyFunSuite {
     StreamingJobs.runForeachBatchCounts(spark, replay,
       Files.createTempDirectory("graft-s13-ck2").toString, out)
     assert(canon(StreamingJobs.foreachBatchTable(spark, out)) === first)
+  }
+
+  test("replay dirs are written once per sfDir: a repeat call returns the same path and rewrites no file") {
+    // the WriteOnceLayoutSpec law for the four replay directories: a
+    // second call for the same sfDir returns the first call's path and
+    // leaves every file in it as it was (same names, same mtimes)
+    def snapshot(dir: String): Map[String, Long] = {
+      val walk = Files.walk(Paths.get(dir))
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => p.toString -> Files.getLastModifiedTime(p)
+          .to(java.util.concurrent.TimeUnit.NANOSECONDS))
+        .toMap
+      finally walk.close()
+    }
+    val sf = TestSpark.sf0001
+    val replays: Seq[(String, () => String)] = Seq(
+      "replayDirFor" -> (() => replayDirFor(spark, sf)),
+      "replayDirMulti" -> (() => replayDirMulti(spark, sf)),
+      "replayDirDup" -> (() => replayDirDup(spark, sf)),
+      "docsReplayDir" -> (() => docsReplayDir(spark, sf)))
+    val dirs = replays.map { case (name, replay) =>
+      val d = replay()
+      val before = snapshot(d)
+      assert(before.nonEmpty, s"$name wrote no file")
+      assert(replay() === d, s"$name returned a new path for the same sfDir")
+      assert(snapshot(d) === before, s"$name rewrote its replay directory")
+      d
+    }
+    assert(dirs.distinct.size === dirs.size,
+      "two replay kinds share one directory")
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.DocQueries
+import graft.queries.TextQueries
 
 /** q112 exact-substring dedup laws (round-12/13 ADVICE items): a
   * planted-span recall law on a synthetic corpus, and the differential
@@ -77,7 +77,7 @@ class SubstrDedupSpec extends AnyFunSuite {
       10L -> s"${filler(10, 40)} $span ${filler(10, 8, "g")}",
       20L -> s"${filler(20, 5)} $span ${filler(20, 50, "g")}",
       30L -> filler(30, 80))
-    assert(dupIds(DocQueries.substrDupDocs(d, K)) === Set(20L))
+    assert(dupIds(TextQueries.substrDupDocs(d, K)) === Set(20L))
   }
 
   test("a 31-token shared run is below threshold; 32 binds exactly") {
@@ -85,19 +85,19 @@ class SubstrDedupSpec extends AnyFunSuite {
     val d = frame(
       1L -> s"${filler(1, 40)} $short ${filler(1, 8, "g")}",
       2L -> s"${filler(2, 40)} $short ${filler(2, 8, "g")}")
-    assert(dupIds(DocQueries.substrDupDocs(d, K)) === Set.empty[Long])
+    assert(dupIds(TextQueries.substrDupDocs(d, K)) === Set.empty[Long])
     // same corpus with one more shared token crosses the threshold
     val d2 = frame(
       1L -> s"${filler(1, 40)} $span ${filler(1, 8, "g")}",
       2L -> s"${filler(2, 40)} $span ${filler(2, 8, "g")}")
-    assert(dupIds(DocQueries.substrDupDocs(d2, K)) === Set(2L))
+    assert(dupIds(TextQueries.substrDupDocs(d2, K)) === Set(2L))
   }
 
   test("within-doc repeat of a span does not self-flag") {
     val d = frame(
       1L -> s"$span ${filler(1, 10)} $span",
       2L -> filler(2, 80))
-    assert(dupIds(DocQueries.substrDupDocs(d, K)) === Set.empty[Long])
+    assert(dupIds(TextQueries.substrDupDocs(d, K)) === Set.empty[Long])
   }
 
   test("hot bucket: span shared by m docs flags all but the min holder") {
@@ -106,7 +106,7 @@ class SubstrDedupSpec extends AnyFunSuite {
     val ids = Seq(5L, 11L, 17L, 23L, 41L)
     val d = frame(ids.map(id =>
       id -> s"${filler(id, 10 + id.toInt)} $span ${filler(id, 6, "g")}"): _*)
-    val got = dupIds(DocQueries.substrDupDocs(d, K))
+    val got = dupIds(TextQueries.substrDupDocs(d, K))
     assert(got === ids.drop(1).toSet)
   }
 
@@ -121,7 +121,7 @@ class SubstrDedupSpec extends AnyFunSuite {
       9L -> s"${filler(9, 20)} $span ${filler(9, 5, "g")} $spanB",
       13L -> s"$spanB ${filler(13, 33)}",
       21L -> filler(21, 90))
-    val fast = dupIds(DocQueries.substrDupDocs(d, K))
+    val fast = dupIds(TextQueries.substrDupDocs(d, K))
     val ref = dupIds(allPairsDups(d, K))
     assert(fast === ref)
     assert(fast === Set(7L, 9L, 13L))
@@ -140,17 +140,17 @@ class SubstrDedupSpec extends AnyFunSuite {
     val d = frame(1L -> span, 2L -> spanY, 3L -> spanY)
     val weak: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
       _ => lit("BUCKET")
-    assert(dupIds(DocQueries.substrDupDocs(d, K, weak)) === Set(3L))
+    assert(dupIds(TextQueries.substrDupDocs(d, K, weak)) === Set(3L))
     // the same corpus under the production md5 hash: X and Y occupy
     // different buckets, doc 3 still dups doc 2 — same answer, which
     // is exactly the collision-independence the fallback guarantees
-    assert(dupIds(DocQueries.substrDupDocs(d, K)) === Set(3L))
+    assert(dupIds(TextQueries.substrDupDocs(d, K)) === Set(3L))
   }
 
   test("differential on the real sf0.001 corpus (665 shared spans bind)") {
     val d = Tables.load(spark, TestSpark.sf0001, "documents")
       .select(col("doc_id"), col("text"))
-    val fast = dupIds(DocQueries.substrDupDocs(d, K))
+    val fast = dupIds(TextQueries.substrDupDocs(d, K))
     val ref = dupIds(allPairsDups(d, K))
     assert(fast === ref)
     assert(fast.nonEmpty, "fixture regression: no shared spans bound")
@@ -165,8 +165,8 @@ class SubstrDedupSpec extends AnyFunSuite {
     // which forces the old construction) on the real sf0.001 corpus.
     val d = Tables.load(spark, TestSpark.sf0001, "documents")
       .select(col("doc_id"), col("text"))
-    val rolling = dupIds(DocQueries.substrDupDocs(d, K))
-    val md5Form = dupIds(DocQueries.substrDupDocs(d, K,
+    val rolling = dupIds(TextQueries.substrDupDocs(d, K))
+    val md5Form = dupIds(TextQueries.substrDupDocs(d, K,
       c => org.apache.spark.sql.functions.md5(c.cast(
         org.apache.spark.sql.types.BinaryType))))
     assert(rolling === md5Form)
