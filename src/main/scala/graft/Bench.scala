@@ -1,81 +1,57 @@
 package graft
-/** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line. Failed queries are reported by name under
-  * "failed" and excluded from timings/total (a -1 s "timing" would
-  * corrupt the total — round-1 verdict item 6).
+/** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR
+  * and renders ONE artifact, the full JSON (`fullJson`).
   *
-  * Steal-resistance (round-3 verdict item 1, round-4 ADVICE items 1+3):
-  * the shared box's co-tenant CPU steal produces 6-100x spikes lasting
-  * tens of seconds (round-4 artifact: q22 spread 0.37-41.7 s on
-  * unchanged code). Three defenses:
-  *   1. ROUND-ROBIN passes, not back-to-back reps: the corpus runs end
-  *      to end PASSES (3) times, so one steal burst inflates a single
-  *      pass of many queries instead of every rep of one query (round 4
-  *      timed q03b's 3 back-to-back reps inside one burst: all 23-29 s).
-  *      This is the same procedure BASELINE.md §3's medians were
-  *      recorded with (3 full runs) — the two sides of the 2x gate are
-  *      measured identically. Reported per-query time = MEDIAN of
-  *      successful passes; min/max go out under "spread".
-  *   2. Per-pass failure isolation: one throwing pass no longer discards
-  *      the other passes' valid timings; a query is "failed" only when
-  *      EVERY pass failed. "reps_ok" records how many passes succeeded.
-  *   3. The one-time bucketed-table ingest q03b depends on runs UNTIMED
-  *      before the passes, and its outcome is recorded IN the JSON
-  *      ("ingest_ok", "ingest_secs") so a failed/ineffective prewarm is
-  *      visible to the gate, not just on stderr.
+  * Output contract:
+  *   - after every completed pass and adaptive round (and once before
+  *     pass 1, with the ingest results and before-probes), the full
+  *     JSON is rewritten in place to `bench_out.json` in the working
+  *     directory; "passes_done"/"adaptive_done" say how much of the
+  *     plan it reflects, so a run killed mid-flight still leaves its
+  *     newest complete state on disk;
+  *   - at exit, the same string is printed as the LAST stdout line: one
+  *     parseable JSON object carrying "metric", "value", "unit",
+  *     "queries", "failed", "ingest_ok" and "sf" (build.sbt routes the
+  *     forked stdout past sbt's logger).
+  *
+  * Measurement:
+  *   - the corpus runs end to end PASSES (3) times round-robin, so one
+  *     co-tenant steal burst inflates a single pass of many queries
+  *     instead of every rep of one query; per-query time = MEDIAN of
+  *     the successful passes, min/max under "spread";
+  *   - a query is "failed" only when EVERY pass threw; failed queries
+  *     are excluded from the timings and the total;
+  *   - queries whose median/min exceeds 2 get adaptive round-robin reps,
+  *     up to MaxReps ATTEMPTS each;
+  *   - write-once ingest artifacts (bucketed, partitioned and clustered
+  *     layouts, replay dirs, indexes) are built and the layout readers
+  *     warmed UNTIMED before the passes, each in its own try; the
+  *     outcome rides under "ingest"/"ingest_ok"/"ingest_secs".
   *
   * "value" = sum of per-query medians (comparable to BASELINE.md §3);
   * "value_min" = sum of per-query mins — the steal-floor statistic (a
-  * co-tenant can only ADD time, so the min is the cleanest observed
-  * steady state on a noisy box).
+  * co-tenant can only ADD time). "steal_pct"/"steal_pct_pass" are the
+  * /proc/stat field-8 deltas (whole run / per pass): divide ratios by
+  * 1/(1−steal/100) before calling a regression (BASELINE §3's reading
+  * rule); in-guest probes are blind to hypervisor steal.
   *
   * GRAFT_BENCH_ONLY=q01_...,q23_... restricts the corpus (local
-  * iteration); the driver sets only SPARK_GRAFT_SF_DIR.
-  *
-  * Output: the ONE stdout line is the COMPACT JSON (fits the driver's
-  * 2000-char stdout-tail capture); the FULL JSON with per-query
-  * spread/reps_ok diagnostics goes to bench_out.json,
-  * /tmp/graft-bench.json and a GRAFT_BENCH_JSON-prefixed stderr line —
-  * REWRITTEN after every completed pass and adaptive round, so a run
-  * killed mid-flight (BENCH_r17: driver rc 124 at pass 3/3 → "parsed":
-  * null, two complete passes destroyed) still leaves the newest
-  * complete state on disk; "passes_done"/"adaptive_done"/"shed" say
-  * how much of the plan the artifact reflects.
-  *
-  * SELF-BUDGET, ON BY DEFAULT (round-18 verdict item 1): elapsed +
-  * a projected next pass/adaptive round crossing the budget sheds the
-  * remaining work and finalizes with what exists. Default 2800 s
-  * (effectiveBudget) — the driver allots ~3600 s, parses only the
-  * final stdout line, and never set the opt-in env, so BENCH_r17 AND
-  * r18 both ended rc-124/"parsed": null with complete state stranded
-  * in bench_out.json. SPARK_GRAFT_BENCH_BUDGET_SECS overrides; <= 0
-  * disables. A SIGTERM shutdown hook additionally prints the newest
-  * compact line so even a killed run ends stdout parseably.
-  *
-  * STEAL COUNTER (round-18 verdict item 2): /proc/stat field-8 deltas
-  * → "steal_pct" (whole-run) + "steal_pct_pass" (per pass/adaptive
-  * round) in the full JSON and "steal" in the compact line. The judge
-  * measured 46.8% hypervisor steal while BOTH CPU probes read nominal
-  * — the kernel counter is the authoritative normalizer (divide
-  * ratios by 1/(1−steal/100); BASELINE §3's reading rule), and
-  * in-guest probes/load/pressure are all blind to it.
+  * iteration); GRAFT_BENCH_REPS overrides the pass count.
   */
 object Bench {
   private val Passes =
     sys.env.get("GRAFT_BENCH_REPS").map(_.toInt).getOrElse(3)
 
   /** Ceiling on TOTAL reps for a spread-flagged query: the 3 main
-    * passes + up to 4 escalation reps (round-11 verdict item 1 — one
-    * adaptive rep was not always enough to pull a steal-inflated
-    * median under the 2× gate; with 7 samples the median is the 4th
-    * smallest, so up to THREE burst-hit reps are shrugged off). */
-  private val MaxReps =
-    sys.env.get("GRAFT_BENCH_MAX_REPS").map(_.toInt).getOrElse(7)
+    * passes + up to 4 escalation reps (one adaptive rep was not always
+    * enough to pull a steal-inflated median under the 2× gate; with 7
+    * samples the median is the 4th smallest, so up to THREE burst-hit
+    * reps are shrugged off). */
+  private val MaxReps = 7
 
   /** Locale-pinned numeric rendering for EVERY number in the JSON
-    * outputs: the f-interpolator formats via the JVM default locale,
-    * which on a comma-decimal locale would emit invalid JSON
-    * (round-11 ADVICE item 1 — previously only qsAt was pinned). */
+    * artifact: the f-interpolator formats via the JVM default locale,
+    * which on a comma-decimal locale would emit invalid JSON. */
   def num(v: Double, dec: Int = 3): String =
     s"%.${dec}f".formatLocal(java.util.Locale.ROOT, v)
 
@@ -234,187 +210,6 @@ object Bench {
     if (failed.get) -1.0 else (System.nanoTime() - t0) / 1e9
   }
 
-  /** name -> compact stdout key. Short keys are qNN tokens (+initials
-    * where the token repeats). Collisions are disambiguated PER
-    * COLLIDING GROUP with a numeric suffix (round-7 ADVICE item 2: the
-    * old whole-registry full-name fallback re-created the ~2.6 KB line
-    * that overflows the driver's 2000-char stdout tail — the exact
-    * failure the short keys exist to prevent). Only if suffixing itself
-    * still collides (pathological names) does the full-name fallback
-    * remain as the last resort: a longer-but-parseable line beats
-    * silently duplicate JSON keys. */
-  def shortKeys(names: Seq[String]): Map[String, String] = {
-    val tokenCounts =
-      names.groupBy(_.split("_")(0)).map { case (t, ns) => t -> ns.size }
-    def sk(n: String): String = {
-      val parts = n.split("_")
-      if (tokenCounts.getOrElse(parts(0), 0) <= 1) parts(0)
-      else parts(0) + "_" + parts.drop(1).map(_.head).mkString
-    }
-    val base = names.map(n => n -> sk(n))
-    val resolved = base.groupBy(_._2).toSeq.flatMap {
-      case (_, Seq((name, key))) => Seq(name -> key)
-      case (key, clashing) =>
-        System.err.println(
-          s"[bench] short-key collision on '$key' — numeric suffixes for " +
-            clashing.map(_._1).mkString(", "))
-        clashing.map(_._1).sorted.zipWithIndex.map {
-          case (name, i) => name -> s"${key}_$i"
-        }
-    }.toMap
-    if (resolved.values.toSeq.distinct.size == names.distinct.size) resolved
-    else {
-      System.err.println(
-        "[bench] WARNING short-key collision unresolvable — using full names")
-      names.map(n => n -> n).toMap
-    }
-  }
-
-  /** The single compact stdout line (short keys, 2-decimal medians, no
-    * spread/qps diagnostics). Pulled out of main() so BenchAggSpec can
-    * pin the length headroom against the driver's 2000-char stdout-tail
-    * window at the CURRENT registry size (round-7 verdict item 7).
-    *
-    * FLOOR REPORTING (round-11 verdict item 1): a query whose
-    * median/min still exceeds 2 AFTER the escalation reps renders as
-    * "key":[median,min] instead of a bare median, so the driver
-    * artifact itself carries the steal floor — a co-tenant burst can
-    * inflate a median but never a minimum, and the gate can read the
-    * clean steady state without opening bench_out.json. Unflagged
-    * queries (the overwhelming norm) stay scalar, so the line grows
-    * only ~14 chars per flagged query.
-    *
-    * GRACEFUL DEGRADATION (round 11 — the 123-query registry's
-    * worst-case 4-digit-median rendering crossed the 1900-char pin):
-    * a ladder of renderings, first fit wins — (2-dec medians, full
-    * failed list) → (1-dec, full failed) → (2-dec, failed count +
-    * 5-name sample) → (1-dec, short failed) → (no queries map, short
-    * failed). A parseable line with less detail beats a truncated one
-    * with none; the full 3-decimal map and complete failed list always
-    * ride in bench_out.json + the stderr line, so degradation costs
-    * stdout precision only. At realistic medians (< 100 s) and zero
-    * failures the 2-decimal form fits to ~150 queries and no
-    * degradation occurs — behaviors pinned in BenchAggSpec. */
-  def compactLine(
-      good: Seq[(String, Double, Double, Double, Int)],
-      total: Double, failed: Seq[String],
-      ingestOk: Boolean, sfDir: String,
-      stealPct: Double = -1.0,
-      shed: Boolean = false, passes: Int = -1): String = {
-    val shortKey = shortKeys(good.map(_._1))
-    // COMPACT-TAIL SHAVE (round-15 verdict item 1: the 144-query
-    // worst-realistic 2-dec form sat EXACTLY at the 1950 budget, so
-    // entry #145 would have silently degraded medians to 1-dec):
-    // reps_min (derivable from the full JSON's per-query reps_ok) and
-    // ingest_secs (present verbatim in the full JSON, plus per artifact
-    // in its "ingest" array) left the compact line,
-    // and the sf path collapses to its basename — 49 chars back, which
-    // buys 2-dec headroom past 150 entries at realistic (< 10 s)
-    // medians. Round 17 (round-16 verdict item 6) also shaved "reps"
-    // (a constant 3, verbatim in the full JSON's tail and derivable
-    // per query from reps_ok) ahead of entry #151; BenchAggSpec
-    // re-pins 2-dec headroom at a 155-entry registry. Every field the
-    // driver gate reads (metric/value/unit/queries/failed/ingest_ok/
-    // sf) keeps its key.
-    val sfBase = new java.io.File(sfDir).getName
-    // "steal": whole-run hypervisor steal as % of demanded cycles
-    // (round-18 verdict item 2) — 1 decimal, ~13 chars, so the 2x
-    // gate can steal-normalize (divide ratios by 1/(1−steal/100))
-    // WITHOUT opening bench_out.json; −1.0 = counter unavailable.
-    // "shed"/"passes" (round-19 verdict item 1): BENCH_r19's compact
-    // line published a SINGLE budget-shed pass's storm numbers with no
-    // marker — anyone normalizing its 2429 s by the line's own
-    // whole-run steal read an 11.9x false regression. ~30 chars make
-    // the driver artifact self-describing: shed:true or passes < 3
-    // says "these are not 3-pass medians, open bench_out.json before
-    // judging". passes = completed round-robin passes (-1 = unknown).
-    def tail(failedJson: String): String =
-      s""""failed":$failedJson,"steal":${num(stealPct, 1)},"shed":$shed,"passes":$passes,"ingest_ok":$ingestOk,"sf":"$sfBase""""
-    val failedFull = failed.map("\"" + jesc(_) + "\"").mkString("[", ",", "]")
-    def render(qs2: String, failedJson: String): String =
-      s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs2,${tail(failedJson)}}"""
-    def qsAt(dec: Int): String = good.map { case (k, med, mn, _, _) =>
-      val v =
-        if (mn > 0 && med / mn > 2.0)
-          "[" + num(med, dec) + "," + num(mn, dec) + "]"
-        else num(med, dec)
-      "\"" + shortKey(k) + "\":" + v
-    }.mkString("{", ",", "}")
-    // the failed-list rung MUST come last-but-one: a systemic breakage
-    // (half the registry failing) puts ~25 chars per full query name
-    // into the tail, which no queries-map shrinkage can compensate —
-    // the round-5 truncated-JSON failure mode, in exactly the disaster
-    // run where the artifact matters most (review-round finding). The
-    // count + first-5 sample keeps the line diagnostic; full names
-    // always ride in bench_out.json / the stderr line.
-    val failedShort =
-      s"""{"failed_count":${failed.size},"failed_sample":${failed.take(5).map("\"" + jesc(_) + "\"").mkString("[", ",", "]")}}"""
-    val ladder = Iterator(
-      render(qsAt(2), failedFull),
-      render(qsAt(1), failedFull),
-      render(qsAt(2), failedShort),
-      render(qsAt(1), failedShort),
-      render("{}", failedShort))
-    // 1950 budget: the driver tails the LAST 2000 stdout chars and the
-    // line rides behind the 17-char "GRAFT_BENCH_JSON " prefix, so
-    // 1950 + 17 + newline still leaves real headroom. Raised from 1900
-    // at the 143-query registry (round 15): the realistic-width 2-dec
-    // form reached 1936, and degrading it to 1-dec would quantize the
-    // driver's per-query 2x gate on sub-second queries — precision the
-    // gate actually reads beats 50 chars of extra slack. Round 16
-    // shaved the tail instead of raising the budget again (see the
-    // tail comment above); BenchAggSpec pins 2-dec headroom for a
-    // 150-entry registry at sub-10 s medians.
-    ladder.find(_.length <= 1950).getOrElse(render("{}", failedShort))
-  }
-
-  /** Budget-shed decision (SPARK_GRAFT_BENCH_BUDGET_SECS, round-17
-    * verdict item 1): shed the next unit of work when the time already
-    * elapsed plus the projected unit cost would cross the budget —
-    * finalizing with the passes that exist beats a driver timeout
-    * (rc 124) that destroys them all (pass-1 medians of 149 queries
-    * beat `parsed: null` every time). No budget → never shed. */
-  def shouldShed(budget: Option[Double], elapsed: Double,
-      projected: Double): Boolean =
-    budget.exists(b => elapsed + projected > b)
-
-  /** The built-in self-budget (round-18 verdict item 1): the driver
-    * allots ~1 h wall (BENCH_r17/r18 both rc 124; CORRECTNESS_r18
-    * written 15:05:50, the kill at 16:05:52) and parses ONLY the final
-    * stdout line, which main() prints at normal exit — so the bench
-    * must FINISH, shedding work if it has to, strictly inside that
-    * window under any steal regime. 2800 s leaves ~13 min of margin
-    * for JVM shutdown + the after-probes below the observed kill. */
-  val DefaultBudgetSecs = 2800.0
-
-  /** Resolve SPARK_GRAFT_BENCH_BUDGET_SECS to the effective budget.
-    * Round-18 flipped the default: TWO consecutive driver artifacts
-    * parsed null because the driver never sets the env and the shed
-    * machinery never fired. Unset → DefaultBudgetSecs. A positive
-    * value overrides. Zero/negative explicitly DISABLES shedding
-    * (the local-iteration escape hatch). Malformed degrades to the
-    * default — the protective behavior — with a warning, not to
-    * no-budget (pre-round-19 behavior) and not to a crash. */
-  def effectiveBudget(raw: Option[String]): Option[Double] = raw match {
-    case None => Some(DefaultBudgetSecs)
-    case Some(v) => scala.util.Try(v.trim.toDouble).toOption match {
-      // d must be FINITE (round-19 ADVICE item 3): "Infinity" parses,
-      // passes d > 0, and yields a budget that reports as enabled
-      // while shedding can never fire — behaviorally disabled without
-      // the explicit opt-out log line. Non-finite degrades to the
-      // protective default like any other malformed input.
-      case Some(d) if d > 0 && !d.isInfinite => Some(d)
-      case Some(d) if d <= 0 => None // explicit opt-out
-      case _ => // unparseable OR a parsed NaN (fails both guards above):
-        // malformed degrades to the PROTECTIVE default, never to
-        // no-budget (review finding: "NaN".toDouble parses)
-        System.err.println(
-          s"[bench] WARNING malformed SPARK_GRAFT_BENCH_BUDGET_SECS='$v'" +
-            f" — using the built-in default $DefaultBudgetSecs%.0f s")
-        Some(DefaultBudgetSecs)
-    }
-  }
-
   /** Parse the aggregate `cpu` line of /proc/stat into (busy, steal)
     * tick counters, where busy = user+nice+system+irq+softirq — the
     * cycles this guest DEMANDED — and steal is field 8, the cycles the
@@ -460,19 +255,15 @@ object Bench {
   }
 
   /** The FULL-JSON artifact rendered from the aggregation state as it
-    * stands after `passesDone` completed passes. Pure so BenchAggSpec
-    * can pin the timeout-survivability law (round-17 verdict item 1:
-    * BENCH_r17 died at pass 3/3 holding two COMPLETE passes of
-    * per-query data that the old emit-at-the-end-only main() lost —
-    * rc 124, `parsed: null`). main() writes this artifact after EVERY
-    * completed pass and adaptive round (overwrite-in-place), so a run
-    * killed at any point leaves the newest complete state on disk;
-    * "passes_done"/"adaptive_done" say how much of the plan it
-    * reflects. Probe arrays carry whatever has been measured so far
-    * (before-values during the passes, before+after at the end) — the
-    * reference emits its metrics line every frame, not at shutdown
-    * (/root/reference/src/DoublePsramBuffer480x480.cpp:209-214), and
-    * this is that design value applied to the artifact. */
+    * stands after `passesDone` completed passes — Bench's only
+    * rendering. Pure so BenchAggSpec can pin that the state written
+    * after any pass parses and carries what a post-mortem needs. main()
+    * rewrites it to bench_out.json after EVERY completed pass and
+    * adaptive round, as the reference writes its metrics line every
+    * frame rather than at shutdown (DoublePsramBuffer480x480.cpp:
+    * 209-214), and prints it as the last stdout line at exit. Probe
+    * arrays carry whatever has been measured so far (before-values
+    * during the passes, before+after at the end). */
   def fullJson(
       names: Seq[String],
       times: scala.collection.Map[String, Vector[Double]],
@@ -480,7 +271,7 @@ object Bench {
       ingestResults: Seq[(String, Boolean, Double, Option[String])],
       ingestSecs: Double,
       probes: Seq[Double], probesPar: Seq[Double],
-      passesDone: Int, adaptiveDone: Int, shed: Boolean,
+      passesDone: Int, adaptiveDone: Int,
       sfDir: String,
       stealPct: Double = -1.0,
       stealPass: Seq[Double] = Nil,
@@ -489,9 +280,6 @@ object Bench {
     val good = summarize(names, times)
     val qs = good.map { case (k, med, _, _, _) => "\"" + k + "\":" + num(med) }
       .mkString("{", ",", "}")
-    val shortKey = shortKeys(good.map(_._1))
-    val keymap = good.map { case (k, _, _, _, _) =>
-      "\"" + shortKey(k) + "\":\"" + k + "\"" }.mkString("{", ",", "}")
     val spread = good.map { case (k, _, mn, mx, _) =>
       "\"" + k + "\":[" + num(mn) + "," + num(mx) + "]"
     }.mkString("{", ",", "}")
@@ -512,39 +300,49 @@ object Bench {
       s"""{"name":"$n","ok":$ok,"secs":${num(secs)}$e}"""
     }.mkString("[", ",", "]")
     def arr(vs: Seq[Double]): String = vs.map(num(_)).mkString("[", ",", "]")
-    // per-query JOB-COUNT telemetry (round-20 verdict item 7): the
-    // overhead-bound families' cost is Spark jobs, not data — "jobs"
-    // (min job count across passes; -1 = not measured) and "gap_secs"
-    // (min summed inter-job driver gap) put ProfileQuery's numbers in
-    // the artifact so a job-count optimization is checkable from
-    // bench_out.json alone. FULL JSON only — the compact line's
-    // 1950-char ladder budget is untouched.
+    // per-query JOB-COUNT telemetry: the overhead-bound families' cost
+    // is Spark jobs, not data — "jobs" (min job count across passes;
+    // -1 = not measured) and "gap_secs" (min summed inter-job driver
+    // gap) put ProfileQuery's numbers in the artifact so a job-count
+    // optimization is checkable from bench_out.json alone.
     val jobsBlock = good.map { case (k, _, _, _, _) =>
       "\"" + k + "\":" + jobCounts.getOrElse(k, -1L)
     }.mkString("{", ",", "}")
     val gapsBlock = good.map { case (k, _, _, _, _) =>
       "\"" + k + "\":" + num(gapSecs.getOrElse(k, -1.0))
     }.mkString("{", ",", "}")
-    s"""{"metric":"total","value":${num(total)},"unit":"sec","value_min":${num(totalMin)},"qps":${num(qps)},"queries":$qs,"spread":$spread,"floor_ratio":$floorRatio,"scan":$scanBlock,"reps_ok":$repsOk,"jobs":$jobsBlock,"gap_secs":$gapsBlock,"keymap":$keymap,"ingest":$ingestJson,"probe_secs":${arr(probes)},"probe_par_secs":${arr(probesPar)},"steal_pct":${num(stealPct, 1)},"steal_pct_pass":${arr(stealPass)},"passes_done":$passesDone,"adaptive_done":$adaptiveDone,"shed":$shed,"reps":$Passes,"failed":$failed,"ingest_ok":$ingestOk,"ingest_secs":${num(ingestSecs)},"sf":"$sfDir"}"""
+    s"""{"metric":"total","value":${num(total)},"unit":"sec","value_min":${num(totalMin)},"qps":${num(qps)},"queries":$qs,"spread":$spread,"floor_ratio":$floorRatio,"scan":$scanBlock,"reps_ok":$repsOk,"jobs":$jobsBlock,"gap_secs":$gapsBlock,"ingest":$ingestJson,"probe_secs":${arr(probes)},"probe_par_secs":${arr(probesPar)},"steal_pct":${num(stealPct, 1)},"steal_pct_pass":${arr(stealPass)},"passes_done":$passesDone,"adaptive_done":$adaptiveDone,"reps":$Passes,"failed":$failed,"ingest_ok":$ingestOk,"ingest_secs":${num(ingestSecs)},"sf":"$sfDir"}"""
   }
+
+  /** The layout and index readers that get one UNTIMED warm-up run
+    * each (ingest artifacts `<qNN>_warm`). Their inputs — the bucketed
+    * lineitem/orders (q03b), the hive-date-partitioned orders
+    * (q55/q56), the Morton-clustered orders (q95), the standing daily
+    * MV (q94) and the MinHash/gram indexes (q110b/q110c/q117b) — live
+    * under the warehouse dir, which persists across JVMs. When a prior
+    * run already wrote them, the idempotent builders skip the write
+    * and this process never touches those bytes before the first TIMED
+    * pass, so these queries alone would pay a cold disk read while
+    * everything else scans page-cache-warm. The per-query "scan" block
+    * stays in the artifact so a cold box is diagnosed from it alone. */
+  private[graft] val WarmReaders: Seq[String] = Seq(
+    "q03b_bucketed_revenue", "q55_pruned_year_revenue",
+    "q56_dpp_era_revenue", "q95_zorder_box", "q94_incremental_mv",
+    "q110b_indexed_dedup", "q110c_index_append_cycle",
+    "q117b_stream_novelty")
 
   /** One untimed throwaway execution of a registry query's own plan
     * (toRdd, like the timed passes) — the warm-up primitive for the
-    * warehouse-layout readers. Unknown names are a silent no-op so a
-    * renamed query degrades to "cold again" rather than a bench abort
-    * (the artifact's timings then show the regression). */
+    * warehouse-layout readers. An unknown name throws, so a renamed
+    * reader fails its ingest artifact (ok:false, ingest_ok:false)
+    * instead of being timed cold without a word. */
   private def warmQuery(spark: org.apache.spark.sql.SparkSession,
       sfDir: String, name: String): Unit =
-    SparkEntry.queries.get(name)
-      .foreach(fn => fn(spark, sfDir).queryExecution.toRdd.count())
+    SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
 
   def main(args: Array[String]): Unit = {
-    // budget clock anchors at main entry so warm-up + ingest count
-    // against SPARK_GRAFT_BENCH_BUDGET_SECS exactly like they count
-    // against the driver's external timeout
-    val benchT0 = System.nanoTime()
     // whole-run steal baseline: sampled at entry so warm-up + ingest
-    // steal is visible too (round-18 verdict item 2)
+    // steal is visible too
     val cpuRun0 = readProcCpu()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local("graft-bench")
@@ -615,22 +413,8 @@ object Bench {
       // the two-file documents replay q110d/q116b drain — same lazy-
       // build-in-first-timed-pass hazard as the event replay dirs
       "docs_replay" -> (() => graft.streaming.StreamingJobs.docsReplayDir(spark, sfDir)),
-      // UNTIMED WARM-UP of every warehouse-layout reader (round-9
-      // verdict item 1 for q03b; extended to its siblings per round-10
-      // verdict item 6): the warehouse-dir copies — bucketed lineitem/
-      // orders (q03b), the hive-date-partitioned orders (q55/q56), the
-      // Morton-clustered orders (q95) and the standing daily MV (q94)
-      // — live at /tmp/graft-warehouse, which persists across JVMs.
-      // When a prior run already wrote them, the idempotent ingest
-      // builders above skip the write and this process never touches
-      // those bytes before the query's first TIMED pass, so the layout
-      // queries alone pay a cold disk read while everything else scans
-      // /root/testdata page-cache-warm. One throwaway execution per
-      // reader makes the comparison like-for-like; the per-query
-      // "scan" block (input bytes/rows) stays in the output so a
-      // future cold box is diagnosed from the artifact alone.
-      // the corpus MinHash index q110b reads (round-12: write-once
-      // ingest artifact, same contract as the layouts above)
+      // the corpus MinHash index q110b reads (write-once ingest
+      // artifact, same contract as the layouts above)
       "docs_minhash" -> (() => Tables.minhashIndex(spark, sfDir)),
       // q110c's standing-corpus base index — same write-once contract;
       // the delta segment is NOT here: writing it is the per-ingest
@@ -638,18 +422,9 @@ object Bench {
       "docs_minhash_base" -> (() => Tables.minhashIndexBase(spark, sfDir)),
       // the corpus gram set q117b probes — write-once ingest artifact,
       // same contract as the MinHash indexes
-      "docs_grams" -> (() => Tables.gramIndex(spark, sfDir)),
-      "q03b_warm" -> (() => warmQuery(spark, sfDir, "q03b_bucketed_revenue")),
-      "q55_warm" -> (() => warmQuery(spark, sfDir, "q55_pruned_year_revenue")),
-      "q56_warm" -> (() => warmQuery(spark, sfDir, "q56_dpp_era_revenue")),
-      "q95_warm" -> (() => warmQuery(spark, sfDir, "q95_zorder_box")),
-      "q94_warm" -> (() => warmQuery(spark, sfDir, "q94_incremental_mv")),
-      "q110b_warm" -> (() => warmQuery(spark, sfDir, "q110b_indexed_dedup")),
-      // q110c reads the base index parquet (and re-writes its delta
-      // segment each run) — warm like the other warehouse readers
-      "q110c_warm" -> (() => warmQuery(spark, sfDir, "q110c_index_append_cycle")),
-      // q117b reads the gram index parquet — same cold-read fairness
-      "q117b_warm" -> (() => warmQuery(spark, sfDir, "q117b_stream_novelty")))
+      "docs_grams" -> (() => Tables.gramIndex(spark, sfDir))) ++
+      WarmReaders.map(q => (q.takeWhile(_ != '_') + "_warm") ->
+        (() => warmQuery(spark, sfDir, q)))
     val ingestT0 = System.nanoTime()
     val ingestResults: Seq[(String, Boolean, Double, Option[String])] =
       ingestArtifacts.map { case (name, thunk) =>
@@ -665,7 +440,6 @@ object Bench {
           (name, false, (System.nanoTime() - t0) / 1e9, Some(msg))
         }
       }
-    val ingestOk = ingestResults.forall(_._2)
     val ingestSecs = (System.nanoTime() - ingestT0) / 1e9
     val only = sys.env.get("GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
@@ -732,89 +506,32 @@ object Bench {
         queries.Scratch.purge()
       }
     }
-    // INCREMENTAL ARTIFACT EMISSION (round-17 verdict item 1): write
-    // the full JSON to bench_out.json + /tmp/graft-bench.json and the
-    // GRAFT_BENCH_JSON stderr line after EVERY completed pass and every
-    // adaptive round, overwriting in place with "passes_done"/
-    // "adaptive_done" recording how much of the plan the artifact
-    // reflects. BENCH_r17 died at pass 3/3 (driver rc 124) holding two
-    // COMPLETE passes that the old emit-at-the-end-only flow destroyed
-    // ("parsed": null); the reference emits its metrics line every
-    // frame, not at shutdown (DoublePsramBuffer480x480.cpp:209-214).
-    // The driver greps the LAST GRAFT_BENCH_JSON line / reads the file
-    // as overwritten — both always carry the newest complete state.
+    // INCREMENTAL ARTIFACT EMISSION: rewrite bench_out.json after EVERY
+    // completed pass and adaptive round, "passes_done"/"adaptive_done"
+    // recording how much of the plan it reflects, so a run killed
+    // mid-flight keeps its newest complete state on disk.
     var probes = Vector.empty[Double]
     var probesPar = Vector.empty[Double]
     var stealPass = Vector.empty[Double]
     var passesDone = 0
     var adaptiveDone = 0
-    var shed = false
-    // the newest compact line, refreshed on every emit — what the
-    // SIGTERM shutdown hook below prints if main never reaches its
-    // own stdout println (round-18 verdict item 1, belt-and-braces)
-    @volatile var lastCompact = ""
-    val printedCompact = new java.util.concurrent.atomic.AtomicBoolean(false)
     def emit(): String = {
-      val stealNow = stealPctOf(cpuRun0, readProcCpu())
       val json = fullJson(names, times, scan, ingestResults, ingestSecs,
-        probes, probesPar, passesDone, adaptiveDone, shed, sfDir,
-        stealNow, stealPass, jobCounts, gapSecs)
-      // arm the hook's line only once per-query data EXISTS: a
-      // zero-pass compact line reads "value":0.0 with an empty
-      // queries map — shaped like an implausibly fast successful run,
-      // strictly worse for the gate than no final line (review
-      // finding). Until pass 1 completes the kill story is the full
-      // artifact on disk, not stdout.
-      val goodNow = summarize(names, times)
-      if (goodNow.nonEmpty)
-        lastCompact = compactLine(goodNow, goodNow.map(_._2).sum,
-          names.filter(times.getOrElse(_, Vector.empty).isEmpty),
-          ingestOk, sfDir, stealNow, shed, passesDone)
-      System.err.println("GRAFT_BENCH_JSON " + json)
-      for (p <- Seq("bench_out.json", "/tmp/graft-bench.json")) {
-        try {
-          java.nio.file.Files.write(java.nio.file.Paths.get(p),
-            (json + "\n").getBytes("UTF-8"))
-        } catch { case _: Throwable => () }
+        probes, probesPar, passesDone, adaptiveDone, sfDir,
+        stealPctOf(cpuRun0, readProcCpu()), stealPass, jobCounts, gapSecs)
+      try {
+        java.nio.file.Files.write(java.nio.file.Paths.get("bench_out.json"),
+          (json + "\n").getBytes("UTF-8"))
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] WARNING bench_out.json not written: $e")
       }
       json
     }
-    // SIGTERM insurance: the driver's kill (timeout → SIGTERM, rc 124)
-    // runs JVM shutdown hooks, so a run that never reached the normal
-    // exit still ends its stdout with the newest parseable compact
-    // line. The flag keeps normal exits single-printed; the hook is
-    // best-effort (SIGKILL skips all hooks — the default budget above
-    // exists so it never comes to that).
-    java.lang.Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      if (printedCompact.compareAndSet(false, true) && lastCompact.nonEmpty) {
-        println(lastCompact)
-        System.out.flush()
-      }
-    }, "graft-bench-final-line"))
-    // Wall-clock self-budget: when elapsed + a projected next unit
-    // would cross it, shed the remaining passes/adaptive rounds and
-    // finalize with what exists — a self-shortened run with pass-1
-    // medians beats the driver's rc-124 kill that parses as null.
-    // Elapsed counts from main entry (warm-up + ingest included),
-    // matching what the driver's timeout actually covers. ON BY
-    // DEFAULT since round 19 (effectiveBudget): the driver never sets
-    // the env, allots ~3600 s, and parses only the final stdout line —
-    // BENCH_r17 AND r18 both died rc-124/parsed-null waiting for an
-    // opt-in budget nobody opted into. Zero/negative disables.
-    val budget = effectiveBudget(sys.env.get("SPARK_GRAFT_BENCH_BUDGET_SECS"))
-    budget match {
-      case Some(b) => System.err.println(f"[bench] self-budget $b%.0f s" +
-        f" (default ${DefaultBudgetSecs}%.0f s unless SPARK_GRAFT_BENCH_BUDGET_SECS overrides)")
-      case None => System.err.println(
-        "[bench] self-budget DISABLED by SPARK_GRAFT_BENCH_BUDGET_SECS <= 0")
-    }
-    def elapsed: Double = (System.nanoTime() - benchT0) / 1e9
-    // box-speed probes bracket the timed region (full JSON only); one
-    // discarded call per loop body first so all samples run the
-    // C2-compiled code (a cold first call reads ~1.5x slow — JIT,
-    // not steal; the parallel warm-up runs single-width). Each reading
-    // prints to stderr THE MOMENT it is measured — a killed run keeps
-    // its probe evidence (round-17 verdict item 1).
+    // box-speed probes bracket the timed region; one discarded call per
+    // loop body first so all samples run the C2-compiled code (a cold
+    // first call reads ~1.5x slow — JIT, not steal; the parallel
+    // warm-up runs single-width). Each reading prints to stderr THE
+    // MOMENT it is measured, so a killed run keeps its probe evidence.
     cpuProbe(); cpuProbePar(1)
     probes :+= cpuProbe()
     System.err.println(f"[bench] cpu probe serial before=${probes.last}%.3f s")
@@ -822,120 +539,59 @@ object Bench {
     System.err.println(
       f"[bench] cpu probe parallel before=${probesPar.last}%.3f s " +
         s"(width=$probeParWidth)")
-    // First artifact BEFORE pass 1 (round-18 ADVICE item 1): warm-up +
-    // ingest + pass 1 is the longest otherwise-un-emitted stretch of
-    // the run — a kill during pass 1 must still find the ingest
-    // results and before-probes on disk, not an empty bench_out.json.
+    // First artifact BEFORE pass 1: warm-up + ingest + pass 1 is the
+    // longest otherwise-un-emitted stretch of the run — a kill during
+    // pass 1 must still find the ingest results and before-probes on
+    // disk, not an empty bench_out.json.
     emit()
-    // Round-18 ADVICE item 2: when warm-up + ingest alone already blew
-    // the budget (severe steal), say so NOW — pass 1 still runs (an
-    // artifact with no per-query data helps nobody), but the condition
-    // is visible in stderr rather than silently proceeding into the
-    // external-timeout window the budget exists to avoid.
-    if (budget.exists(elapsed > _)) System.err.println(
-      f"[bench] WARNING budget ${budget.get}%.0f s already exceeded " +
-        f"(elapsed $elapsed%.0f s) before pass 1 — running pass 1 only")
-    var lastPassSecs = 0.0
-    var pass = 1
-    while (pass <= Passes && !shed) {
-      if (pass > 1 && shouldShed(budget, elapsed, lastPassSecs)) {
-        shed = true
-        System.err.println(
-          f"[bench] budget ${budget.get}%.0f s: elapsed $elapsed%.0f s + " +
-            f"projected pass $lastPassSecs%.0f s — shedding passes $pass..$Passes")
-        emit() // the artifact must say shed:true even if the
-               // after-probes below never complete (review finding)
-      } else {
-        val t0 = System.nanoTime()
-        val cpu0 = readProcCpu()
-        names.foreach(runOne(pass.toString, _))
-        val passSteal = stealPctOf(cpu0, readProcCpu())
-        stealPass :+= passSteal
-        lastPassSecs = (System.nanoTime() - t0) / 1e9
-        System.err.println(
-          f"[bench] pass $pass steal=$passSteal%.1f%% of demanded cycles")
-        passesDone = pass
-        pass += 1
-        emit()
-      }
+    for (pass <- 1 to Passes) {
+      val cpu0 = readProcCpu()
+      names.foreach(runOne(pass.toString, _))
+      val passSteal = stealPctOf(cpu0, readProcCpu())
+      stealPass :+= passSteal
+      System.err.println(
+        f"[bench] pass $pass steal=$passSteal%.1f%% of demanded cycles")
+      passesDone = pass
+      emit()
     }
     // ADAPTIVE EXTRA REPS for spread-flagged queries (median/min > 2):
     // co-tenant steal inflates medians, not floors — more samples pull
-    // the median toward the floor. ESCALATION (round-11 verdict item
-    // 1): keep adding round-robin adaptive passes while any query's
-    // median/min still exceeds 2, up to MaxReps total reps per query
-    // (7 samples → median = 4th smallest, immune to three burst-hit
-    // reps). Round-robin so one burst can't hit every flagged query's
-    // extra rep at once; a query leaves the flagged set as soon as its
-    // ratio clears, so the escalation cost is bursts-only.
-    // TERMINATION: the eligibility filter counts ATTEMPTS, so
-    // every iteration strictly advances each flagged query toward the
-    // MaxReps ceiling even when its reps fail (round-12 ADVICE item 1).
-    // Budget: an adaptive round's projected cost is the flagged set's
-    // current median sum (what re-running them should take on a clean
-    // window — an underestimate under steal, but shedding is best-
-    // effort and the artifact is already on disk either way).
+    // the median toward the floor. Keep adding round-robin adaptive
+    // passes while any query's median/min still exceeds 2, up to
+    // MaxReps total reps per query (7 samples → median = 4th smallest,
+    // immune to three burst-hit reps). Round-robin so one burst can't
+    // hit every flagged query's extra rep at once; a query leaves the
+    // flagged set as soon as its ratio clears, so the escalation cost
+    // is bursts-only. TERMINATION: the eligibility filter counts
+    // ATTEMPTS, so every iteration strictly advances each flagged query
+    // toward the MaxReps ceiling even when its reps fail.
     var flagged = adaptiveEligible(summarize(names, times), attempts, MaxReps)
-    while (flagged.nonEmpty && !shed) {
-      val projected = {
-        val med = summarize(names, times).map(t => t._1 -> t._2).toMap
-        flagged.flatMap(med.get).sum
-      }
-      if (shouldShed(budget, elapsed, projected)) {
-        shed = true
-        System.err.println(
-          f"[bench] budget ${budget.get}%.0f s: elapsed $elapsed%.0f s + " +
-            f"projected adaptive $projected%.0f s — shedding escalation")
-        emit() // see the pass-shed emit above
-      } else {
-        adaptiveDone += 1
-        System.err.println(
-          s"[bench] adaptive pass $adaptiveDone for ${flagged.size} " +
-            s"spread-flagged: " + flagged.mkString(", "))
-        val cpu0 = readProcCpu()
-        flagged.foreach(runOne(s"adaptive$adaptiveDone", _))
-        stealPass :+= stealPctOf(cpu0, readProcCpu())
-        emit()
-        flagged = adaptiveEligible(summarize(names, times), attempts, MaxReps)
-      }
+    while (flagged.nonEmpty) {
+      adaptiveDone += 1
+      System.err.println(
+        s"[bench] adaptive pass $adaptiveDone for ${flagged.size} " +
+          s"spread-flagged: " + flagged.mkString(", "))
+      val cpu0 = readProcCpu()
+      flagged.foreach(runOne(s"adaptive$adaptiveDone", _))
+      stealPass :+= stealPctOf(cpu0, readProcCpu())
+      emit()
+      flagged = adaptiveEligible(summarize(names, times), attempts, MaxReps)
     }
     probes :+= cpuProbe()
     System.err.println(f"[bench] cpu probe serial after=${probes.last}%.3f s")
     probesPar :+= cpuProbePar()
     System.err.println(
       f"[bench] cpu probe parallel after=${probesPar.last}%.3f s")
-    val good = summarize(names, times)
-    val failedNames = names.filter(times(_).isEmpty)
-    val total = good.map(_._2).sum
-    // Two renderings of the same measurement:
-    //  - FULL (spread + reps_ok diagnostics, probe readings, keymap)
-    //    → bench_out.json, /tmp/graft-bench.json and a greppable
-    //    stderr line — re-emitted here with the after-probes;
-    //  - COMPACT (short keys, 2-decimal medians — no spread/reps_ok/
-    //    probes) → the single stdout line. The driver stores only the
-    //    last 2000 chars of stdout and round-5's 3.4 KB full line
-    //    overflowed that window, leaving "parsed": null — the compact
-    //    line stays under the 1950 ladder budget at 150+ queries.
-    emit()
+    // the final artifact, re-emitted with the after-probes
+    val json = emit()
     val stealRun = stealPctOf(cpuRun0, readProcCpu())
     System.err.println(
       f"[bench] whole-run steal=$stealRun%.1f%% of demanded cycles" +
         " (BASELINE re-records require < 5)")
-    val compact = compactLine(good, total, failedNames,
-      ingestOk, sfDir, stealRun, shed, passesDone)
-    if (compact.length > 1950) System.err.println(
-      s"[bench] WARNING compact stdout line is ${compact.length} chars — nearing the driver's 2000-char tail window")
-    // The bare stdout line goes LAST: if the driver merges streams and
-    // parses the final line, that line must be the naked JSON
-    // (build.sbt routes forked stdout past sbt's [info] logger and
-    // suppresses the [success] trailer). The flag retires the SIGTERM
-    // hook AFTER the println: a kill landing between them then at
-    // worst duplicates the line (last-line parsers are fine with
-    // that), whereas flag-first left a window with the hook disarmed
-    // and the println never reached — zero final lines, the exact
-    // failure the hook exists to prevent (review finding).
+    // The bare stdout line goes LAST, so a reader that parses the final
+    // line gets the naked JSON (build.sbt routes forked stdout past
+    // sbt's [info] logger and suppresses the [success] trailer).
     spark.stop()
-    println(compact)
-    printedCompact.set(true)
+    println(json)
   }
 }

@@ -970,6 +970,48 @@ object EmbeddingQueries {
     base.unionAll(copies)
   }
 
+  /** The shared dedup tail of q102 and q105: score each candidate pair
+    * (id1 < id2; e1/n1 and e2/n2b embeddings and squared norms; label
+    * of id2) by cosine, keep pairs at or above `dupThreshold`, and apply
+    * keep-lowest-id — the larger id of each duplicate pair is dropped,
+    * attributed to its SMALLEST surviving partner (deterministic when
+    * one vector duplicates several others). */
+  private def keepLowestDups(pairs: DataFrame): DataFrame = {
+    val edges = pairs
+      .withColumn("cosine",
+        dotQ("e1", "e2").cast(DoubleType) /
+          (sqrt(col("n1").cast(DoubleType)) * sqrt(col("n2b").cast(DoubleType))))
+      .filter(col("cosine") >= dupThreshold)
+    val w = Window.partitionBy(col("id2")).orderBy(col("id1"))
+    edges
+      .select(col("label"), col("id2").as("dropped_id"),
+        col("id1").as("kept_id"), col("cosine"),
+        row_number().over(w).as("rk"))
+      .filter(col("rk") === 1)
+      .select(col("label"), col("dropped_id"), col("kept_id"), col("cosine"))
+      .orderBy(col("label"), col("dropped_id"))
+  }
+
+  /** DuckDB twin of [[keepLowestDups]] (edges/ranked CTEs and the final
+    * SELECT) — ends both the q102 and q105 oracles, after their `cand`
+    * (id1 < id2 pairs) and `norms` (vec_id, embedding, label, n2) CTEs. */
+  private def oracleKeepLowestDups: String =
+    s"""edges AS (
+        SELECT e2.label, cd.id2 AS dropped_id, cd.id1 AS kept_id,
+          CAST(${oDot("e1.embedding", "e2.embedding")} AS DOUBLE)
+            / (sqrt(CAST(e1.n2 AS DOUBLE)) * sqrt(CAST(e2.n2 AS DOUBLE)))
+            AS cosine
+        FROM cand cd
+        JOIN norms e1 ON e1.vec_id = cd.id1
+        JOIN norms e2 ON e2.vec_id = cd.id2),
+      ranked AS (
+        SELECT label, dropped_id, kept_id, cosine,
+          ROW_NUMBER() OVER (PARTITION BY dropped_id ORDER BY kept_id)
+            AS rk
+        FROM edges WHERE cosine >= $dupThreshold)
+      SELECT label, dropped_id, kept_id, cosine
+      FROM ranked WHERE rk = 1 ORDER BY label, dropped_id"""
+
   private val q102 = QueryDef(
     "q102_semantic_dedup",
     (s, dir) => {
@@ -996,25 +1038,11 @@ object EmbeddingQueries {
           Seq("table_idx", "sig"))
         .filter($"id1" < $"id2")
         .select($"id1", $"id2").distinct()
-      val edges = cand
+      keepLowestDups(cand
         .join(withN2.select($"vec_id".as("id1"), $"embedding".as("e1"),
           $"n2".as("n1")), Seq("id1"))
         .join(withN2.select($"vec_id".as("id2"), $"embedding".as("e2"),
-          $"n2".as("n2b"), $"label"), Seq("id2"))
-        .withColumn("cosine",
-          dotQ("e1", "e2").cast(DoubleType) /
-            (sqrt($"n1".cast(DoubleType)) * sqrt($"n2b".cast(DoubleType))))
-        .filter($"cosine" >= dupThreshold)
-      // keep-lowest-id: the larger id of each duplicate pair is dropped,
-      // attributed to its SMALLEST surviving partner (deterministic when
-      // one vector duplicates several others)
-      val w = Window.partitionBy($"id2").orderBy($"id1")
-      edges
-        .select($"label", $"id2".as("dropped_id"), $"id1".as("kept_id"),
-          $"cosine", row_number().over(w).as("rk"))
-        .filter($"rk" === 1)
-        .select($"label", $"dropped_id", $"kept_id", $"cosine")
-        .orderBy($"label", $"dropped_id")
+          $"n2".as("n2b"), $"label"), Seq("id2")))
     },
     // Relational rebuild, q24b-style: identical planted corpus (same
     // IEEE double·1.001 → REAL re-round), same pre-quantized int64
@@ -1038,21 +1066,7 @@ object EmbeddingQueries {
         SELECT vec_id, embedding, label,
           ${oDot("embedding", "embedding")} AS n2
         FROM corpus),
-      edges AS (
-        SELECT e2.label, cd.id2 AS dropped_id, cd.id1 AS kept_id,
-          CAST(${oDot("e1.embedding", "e2.embedding")} AS DOUBLE)
-            / (sqrt(CAST(e1.n2 AS DOUBLE)) * sqrt(CAST(e2.n2 AS DOUBLE)))
-            AS cosine
-        FROM cand cd
-        JOIN norms e1 ON e1.vec_id = cd.id1
-        JOIN norms e2 ON e2.vec_id = cd.id2),
-      ranked AS (
-        SELECT label, dropped_id, kept_id, cosine,
-          ROW_NUMBER() OVER (PARTITION BY dropped_id ORDER BY kept_id)
-            AS rk
-        FROM edges WHERE cosine >= $dupThreshold)
-      SELECT label, dropped_id, kept_id, cosine
-      FROM ranked WHERE rk = 1 ORDER BY label, dropped_id"""))
+      $oracleKeepLowestDups"""))
 
   // --------------------------------------------------------------- Q103
   // K-MEANS CLUSTERING (deterministic quantized Lloyd's) — the curation
@@ -1300,18 +1314,7 @@ object EmbeddingQueries {
         $"embedding".as("e1"), $"n2".as("n1"))
       val r = side.select($"vec_id".as("id2"), $"cid",
         $"embedding".as("e2"), $"n2".as("n2b"), $"label")
-      val edges = l.join(r, Seq("cid")).filter($"id1" < $"id2")
-        .withColumn("cosine",
-          dotQ("e1", "e2").cast(DoubleType) /
-            (sqrt($"n1".cast(DoubleType)) * sqrt($"n2b".cast(DoubleType))))
-        .filter($"cosine" >= dupThreshold)
-      val w = Window.partitionBy($"id2").orderBy($"id1")
-      edges
-        .select($"label", $"id2".as("dropped_id"), $"id1".as("kept_id"),
-          $"cosine", row_number().over(w).as("rk"))
-        .filter($"rk" === 1)
-        .select($"label", $"dropped_id", $"kept_id", $"cosine")
-        .orderBy($"label", $"dropped_id")
+      keepLowestDups(l.join(r, Seq("cid")).filter($"id1" < $"id2"))
     },
     // q102's planted corpus + q103's Lloyd CTEs + q102's edge/keep CTEs,
     // stitched: the blocking key is the round-2 cluster id.
@@ -1377,21 +1380,7 @@ object EmbeddingQueries {
         SELECT a.vec_id AS id1, b.vec_id AS id2
         FROM a2 a JOIN a2 b
           ON a.cid = b.cid AND a.vec_id < b.vec_id),
-      edges AS (
-        SELECT e2.label, cd.id2 AS dropped_id, cd.id1 AS kept_id,
-          CAST(${oDot("e1.embedding", "e2.embedding")} AS DOUBLE)
-            / (sqrt(CAST(e1.n2 AS DOUBLE)) * sqrt(CAST(e2.n2 AS DOUBLE)))
-            AS cosine
-        FROM cand cd
-        JOIN norms e1 ON e1.vec_id = cd.id1
-        JOIN norms e2 ON e2.vec_id = cd.id2),
-      ranked AS (
-        SELECT label, dropped_id, kept_id, cosine,
-          ROW_NUMBER() OVER (PARTITION BY dropped_id ORDER BY kept_id)
-            AS rk
-        FROM edges WHERE cosine >= $dupThreshold)
-      SELECT label, dropped_id, kept_id, cosine
-      FROM ranked WHERE rk = 1 ORDER BY label, dropped_id"""))
+      $oracleKeepLowestDups"""))
 
   // --------------------------------------------------------------- Q114
   // SEMANTIC DECONTAMINATION: flag corpus vectors whose embedding is
