@@ -440,8 +440,6 @@ object Policy {
   import org.apache.spark.sql.Column
 
   val Dec4: DecimalType = DecimalType(18, 4)
-  /** Quantization for float32 embedding elements before exact arithmetic. */
-  val Dec6: DecimalType = DecimalType(18, 6)
 
   def dec(c: Column): Column = c.cast(Dec4)
   def dbl(c: Column): Column = c.cast(DoubleType)

@@ -34,15 +34,6 @@ import org.apache.spark.sql.types._
   */
 object MultimodalOps {
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType),
-    StructField("kind", StringType),
-    StructField("bytes", BinaryType),
-    StructField("meta", StructType(Seq(
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("sample_rate", IntegerType))))))
-
   /** Synthesize a media table from `documents` (UTF-8 bytes of the text
     * as the opaque payload): the deterministic stand-in for an ingest of
     * real image/audio blobs. kind cycles by doc_id; meta is derived. */

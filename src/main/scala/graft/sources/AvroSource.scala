@@ -37,12 +37,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *     schema resolution skips the unused fields during decode, so
   *     pruning happens inside the Avro decoder, not as a Spark-side
   *     projection (AvroSourceSpec asserts the scan's readSchema).
-  *   - WRITES: full DSv2 two-phase commit (the MemSink protocol against
-  *     a real filesystem): each task writes `part-*.avro.tmp` and only
-  *     the driver-side `commit(messages)` renames the one winning
-  *     attempt per partition into place + drops `_SUCCESS` — retries
-  *     and speculative attempts stay invisible. On HDFS/S3 the rename
-  *     step is the cloud committer's job; locally rename is atomic.
+  *   - WRITES: full DSv2 two-phase commit against a real filesystem:
+  *     each task writes `part-*.avro.tmp` and only the driver-side
+  *     `commit(messages)` renames the one winning attempt per partition
+  *     into place + drops `_SUCCESS` — retries and speculative attempts
+  *     stay invisible. On HDFS/S3 the rename step is the cloud
+  *     committer's job; locally rename is atomic.
   *
   * Types: the exact-round-trip subset the codec-parity story needs
   * (long/int/double/float/boolean/string/binary, nullable via

@@ -7,21 +7,16 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, CountStar, Max, Min, Sum}
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, IsNotNull, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Custom DataSource V2 exemplar: a deterministic integer-range generator
-  * (`spark.read.format("graftrange")`), the §7.3 source tier alongside the
-  * expression/aggregate/plan tiers already built.
-  *
-  * Reference basis: A20 synthetic datagen + A29/A30 scan-with-seek
-  * (`/root/reference/src/DoublePsramBuffer480x480.cpp:111-127`,
-  * `/root/reference/src/fileio.cpp:25-44`) — the generator plays the role
-  * of a table whose "storage layout" is the dense id range.
+  * (`spark.read.format("graftrange")`, read by q70), the §7.3 source tier
+  * alongside the expression/aggregate/plan tiers already built. It is a
+  * batch-only source: a streaming read fails with Spark's
+  * missing-capability error.
   *
   * What it demonstrates, scale-first:
   *   - COLUMN PRUNING (`SupportsPushDownRequiredColumns`): the reader
@@ -38,10 +33,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   - SPLIT PLANNING: the [start,end) layout is cut into `slices`
   *     contiguous partitions (one reader each, no shuffle), so a
   *     1000-executor cluster scales by raising `slices`.
+  *   - COLUMNAR READS: every partition is served as 4096-row Long
+  *     vectors (`RangeColumnarReader`).
   *
   * Options: `start` (inclusive, default 0), `end` (exclusive, required),
-  * `slices` (default 32). Schema: `id BIGINT NOT NULL, squared BIGINT NOT
-  * NULL` with `squared = id*id` computed in the reader.
+  * `slices` (default 32, must be positive). Schema: `id BIGINT NOT NULL,
+  * squared BIGINT NOT NULL` with `squared = id*id` computed in the reader.
   */
 class RangeSource extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
@@ -57,8 +54,10 @@ class RangeSource extends TableProvider
     val opts = new CaseInsensitiveStringMap(properties)
     val start = opts.getLong("start", 0L)
     val end = opts.getLong("end", -1L)
+    val slices = opts.getInt("slices", 32)
     require(end >= start, s"graftrange needs end >= start, got [$start,$end)")
-    new RangeTable(start, end, opts.getInt("slices", 32))
+    require(slices > 0, s"graftrange needs slices > 0, got $slices")
+    new RangeTable(start, end, slices)
   }
 }
 
@@ -73,19 +72,15 @@ final class RangeTable(start: Long, end: Long, slices: Int)
   override def name(): String = s"graftrange[$start,$end)x$slices"
   override def schema(): StructType = RangeSource.Schema
   override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(
-      TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
+    util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new RangeScanBuilder(start, end, slices,
-      options.getLong("rowsPerBatch", 0L))
+    new RangeScanBuilder(start, end, slices)
 }
 
-final class RangeScanBuilder(
-    start: Long, end: Long, slices: Int, rowsPerBatch: Long = 0L)
+final class RangeScanBuilder(start: Long, end: Long, slices: Int)
     extends ScanBuilder
     with SupportsPushDownFilters
-    with SupportsPushDownRequiredColumns
-    with SupportsPushDownAggregates {
+    with SupportsPushDownRequiredColumns {
   // Bounds narrowed by pushed predicates; readers emit exactly [lo, hi).
   private var lo: Long = start
   private var hi: Long = end
@@ -130,101 +125,15 @@ final class RangeScanBuilder(
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  // ---- aggregate pushdown: COUNT(*)/MIN(id)/MAX(id)/SUM(id) have
-  // CLOSED FORMS on a dense pruned range [lo,hi) — the scan answers
-  // them from metadata alone, reading ZERO rows (the DSv2 analogue of
-  // parquet answering count(*) from row-group statistics). Pushdown
-  // runs after filter pushdown, so the bounds are the pruned ones.
-  private var pushedAgg: Option[Seq[AggregateFunc]] = None
-
-  private def isId(f: AggregateFunc): Boolean = f match {
-    case m: Min => m.column.describe == "id"
-    case m: Max => m.column.describe == "id"
-    case s: Sum => !s.isDistinct && s.column.describe == "id"
-    case _ => false
-  }
-
-  private def handled(agg: Aggregation): Boolean =
-    agg.groupByExpressions.isEmpty &&
-      agg.aggregateExpressions.nonEmpty &&
-      agg.aggregateExpressions.forall {
-        case _: CountStar => true
-        case f => isId(f) &&
-          // sum must stay in Long range to be exact — check BOTH bounds
-          // with the true closed form (a negative-start range can
-          // underflow Long.MinValue just as a positive one overflows)
-          (!f.isInstanceOf[Sum] || hi <= lo || {
-            val sum = (BigInt(lo) + BigInt(hi) - 1) *
-              (BigInt(hi) - BigInt(lo)) / 2
-            sum >= BigInt(Long.MinValue) && sum <= BigInt(Long.MaxValue)
-          })
-      }
-
-  override def supportCompletePushDown(agg: Aggregation): Boolean =
-    handled(agg)
-
-  override def pushAggregation(agg: Aggregation): Boolean =
-    if (handled(agg)) {
-      pushedAgg = Some(agg.aggregateExpressions.toSeq); true
-    } else false
-
-  override def build(): Scan = pushedAgg match {
-    case Some(aggs) => new RangeAggScan(lo, hi, aggs)
-    case None =>
-      new RangeScan(start, end, slices, lo, hi, required, rowsPerBatch)
-  }
-}
-
-/** One metadata-only row answering the completely-pushed aggregate. */
-final class RangeAggScan(lo: Long, hi: Long, aggs: Seq[AggregateFunc])
-    extends Scan with Batch {
-  private val empty = hi <= lo
-  override def readSchema(): StructType = StructType(aggs.zipWithIndex.map {
-    case (_: CountStar, i) => StructField(s"agg_$i", LongType, nullable = false)
-    case (_, i) => StructField(s"agg_$i", LongType, nullable = true)
-  })
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"GraftRange AGG-pushdown [$lo,$hi) ${aggs.mkString(", ")}"
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(RangePartition(0, 1)) // one row, computed on the driver-side forms
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val values: Seq[Any] = aggs.map {
-      case _: CountStar => math.max(0L, hi - lo)
-      case _: Min => if (empty) null else lo
-      case _: Max => if (empty) null else hi - 1
-      case _: Sum =>
-        // BigInt intermediate: (lo+hi-1)*(hi-lo) can overflow Long even
-        // when the final sum fits (handled() guards the result range)
-        if (empty) null
-        else ((BigInt(lo) + hi - 1) * (hi - lo) / 2).toLong
-      case other => throw new IllegalStateException(s"unhandled $other")
-    }
-    new SingleRowReaderFactory(values)
-  }
-}
-
-final class SingleRowReaderFactory(values: Seq[Any])
-    extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new PartitionReader[InternalRow] {
-      private var emitted = false
-      override def next(): Boolean = { val f = !emitted; emitted = true; f }
-      override def get(): InternalRow = InternalRow.fromSeq(values)
-      override def close(): Unit = {}
-    }
+  override def build(): Scan =
+    new RangeScan(start, end, slices, lo, hi, required)
 }
 
 final class RangeScan(
     start: Long, end: Long, slices: Int,
-    lo: Long, hi: Long, required: StructType,
-    rowsPerBatch: Long = 0L) extends Scan with Batch {
+    lo: Long, hi: Long, required: StructType) extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new RangeMicroBatchStream(lo, hi,
-      if (rowsPerBatch > 0) rowsPerBatch else math.max(1L, (hi - lo) / 4),
-      required.fieldNames)
   override def description(): String =
     s"GraftRange layout=[$start,$end)x$slices pruned=[$lo,$hi) " +
       s"cols=${required.fieldNames.mkString(",")}"
@@ -245,25 +154,22 @@ final class RangeScan(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new RangeReaderFactory(required.fieldNames, columnar = true)
+    new RangeReaderFactory(required.fieldNames)
 }
 
 final case class RangePartition(lo: Long, hi: Long) extends InputPartition
 
-final class RangeReaderFactory(fields: Array[String], columnar: Boolean = false)
+/** Serves COLUMNAR batches only (`Batched: true` in the scan,
+  * ColumnarToRow above it — the same vectorized shape as the parquet
+  * reader): 4096-row Long vectors filled in a tight loop, amortizing
+  * per-row iterator overhead exactly like a columnar file format would.
+  * Spark never asks for a row reader when every partition is columnar. */
+final class RangeReaderFactory(fields: Array[String])
     extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val rp = p.asInstanceOf[RangePartition]
-    new RangeReader(rp.lo, rp.hi, fields)
-  }
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("graftrange serves columnar batches only")
 
-  /** Batch scans serve COLUMNAR batches (`Batched: true` in the scan,
-    * ColumnarToRow above it — the same vectorized shape as the parquet
-    * reader): 4096-row Long vectors filled in a tight loop, amortizing
-    * per-row iterator overhead exactly like a columnar file format
-    * would. The streaming path keeps the row reader (opt-in flag) —
-    * micro-batches here are small by construction. */
-  override def supportColumnarReads(p: InputPartition): Boolean = columnar
+  override def supportColumnarReads(p: InputPartition): Boolean = true
 
   override def createColumnarReader(p: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val rp = p.asInstanceOf[RangePartition]
@@ -271,6 +177,8 @@ final class RangeReaderFactory(fields: Array[String], columnar: Boolean = false)
   }
 }
 
+/** Emits only the pruned fields: an `id`-only projection never computes
+  * `squared` (column pruning reaches the value generator itself). */
 final class RangeColumnarReader(lo: Long, hi: Long, fields: Array[String])
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
@@ -306,68 +214,4 @@ final class RangeColumnarReader(lo: Long, hi: Long, fields: Array[String])
 
   override def get(): ColumnarBatch = batch
   override def close(): Unit = vectors.foreach(_.close())
-}
-
-/** The streaming half of the source (S12): the same id range replayed
-  * as a deterministic micro-batch stream — `latestOffset` advances by
-  * `rowsPerBatch` ids per batch, each batch plans one partition over
-  * its [startOffset, endOffset) sub-range, and the REPLAY CONTRACT
-  * (same offset pair → identical rows, the property checkpoint recovery
-  * depends on) holds by construction because rows are a pure function
-  * of the id. The pushed bounds from the batch ScanBuilder carry over:
-  * a bounded streaming read replays only the pruned range. */
-final case class RangeOffset(id: Long) extends Offset {
-  override def json(): String = id.toString
-}
-
-final class RangeMicroBatchStream(
-    lo: Long, hi: Long, rowsPerBatch: Long, fields: Array[String])
-    extends MicroBatchStream with SupportsTriggerAvailableNow {
-  override def initialOffset(): Offset = RangeOffset(lo)
-  override def deserializeOffset(json: String): Offset =
-    RangeOffset(json.trim.toLong)
-  override def commit(end: Offset): Unit = {}
-  override def stop(): Unit = {}
-
-  // Admission control: each micro-batch admits at most rowsPerBatch ids,
-  // so AvailableNow replays the range as ceil((hi-lo)/rowsPerBatch)
-  // batches — real incremental execution, not one batch wearing a
-  // streaming trigger (RangeSourceSpec asserts the batch count).
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.maxRows(rowsPerBatch)
-  override def prepareForTriggerAvailableNow(): Unit = {}
-  override def reportLatestOffset(): Offset = RangeOffset(hi)
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "rate-limited source: use latestOffset(start, limit)")
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset =
-    RangeOffset(
-      math.min(hi, start.asInstanceOf[RangeOffset].id + rowsPerBatch))
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[RangeOffset].id
-    val e = end.asInstanceOf[RangeOffset].id
-    // one partition per rowsPerBatch chunk, so executor parallelism
-    // inside a batch matches the batch-side slicing policy
-    if (e <= s) Array.empty
-    else Iterator.iterate(s)(_ + rowsPerBatch).takeWhile(_ < e)
-      .map(b => RangePartition(b, math.min(b + rowsPerBatch, e)))
-      .toArray[InputPartition]
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new RangeReaderFactory(fields)
-}
-
-/** Emits only the pruned fields: an `id`-only projection never computes
-  * `squared` (column pruning reaches the value generator itself). */
-final class RangeReader(lo: Long, hi: Long, fields: Array[String])
-    extends PartitionReader[InternalRow] {
-  private var cur = lo - 1
-  override def next(): Boolean = { cur += 1; cur < hi }
-  override def get(): InternalRow =
-    InternalRow.fromSeq(fields.toSeq.map {
-      case "id" => cur
-      case "squared" => cur * cur
-    })
-  override def close(): Unit = {}
 }

@@ -25,6 +25,32 @@ class RangeSourceSpec extends AnyFunSuite {
   test("short name registers via DataSourceRegister service file") {
     // format("graftrange") resolving at all proves META-INF/services wiring
     assert(src(10).count() === 10)
+    // a stale service line (a class that no longer exists) makes the
+    // ServiceLoader throw, breaking every format lookup, parquet included
+    import scala.jdk.CollectionConverters._
+    val graftNames = java.util.ServiceLoader
+      .load(classOf[org.apache.spark.sql.sources.DataSourceRegister])
+      .asScala.filter(_.getClass.getName.startsWith("graft."))
+      .map(_.shortName()).toSet
+    assert(graftNames === Set("graftavro", "graftrange"))
+  }
+
+  test("slices must be positive: 0 and -1 throw instead of reading nothing") {
+    for (n <- Seq(0, -1)) {
+      val e = intercept[IllegalArgumentException](src(500000, n).count())
+      assert(e.getMessage.contains("slices > 0"), e.getMessage)
+    }
+  }
+
+  test("the source is batch-only: a streaming read fails loudly") {
+    val e = intercept[UnsupportedOperationException] {
+      spark.readStream.format("graftrange")
+        .option("start", 0L).option("end", 1000L).load()
+        .writeStream.format("memory").queryName("range_stream")
+        .start()
+    }
+    assert(e.getMessage.contains(
+      "graftrange does not support streamed reading"), e.getMessage)
   }
 
   test("equivalence with spark.range over the full schema") {
@@ -62,28 +88,6 @@ class RangeSourceSpec extends AnyFunSuite {
       scan.schema.treeString)
   }
 
-  test("S12: micro-batch replay equals the batch read, in >1 batch") {
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-range-stream").toString
-    val q = spark.readStream.format("graftrange")
-      .option("start", 0L).option("end", 1000L)
-      .option("slices", 4).option("rowsPerBatch", 300L)
-      .load()
-      .writeStream.format("memory").queryName("range_stream")
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val got = spark.table("range_stream")
-      .agg(count(lit(1)), sum($"id"), sum($"squared"))
-      .as[(Long, Long, Long)].head()
-    val ids = 0L until 1000L
-    assert(got === ((1000L, ids.sum, ids.map(i => i * i).sum)))
-    // 1000 rows at 300/batch → 4 admission-controlled micro-batches
-    val batches = q.recentProgress.filter(_.numInputRows > 0)
-    assert(batches.length === 4, batches.map(_.numInputRows).toSeq)
-  }
-
   test("batch scans are columnar (vectorized); values match the fold") {
     val df = src(100000).filter($"id" < 50000L)
     assert(scanOf(df).supportsColumnar,
@@ -94,23 +98,21 @@ class RangeSourceSpec extends AnyFunSuite {
       (0L until 50000L).map(i => i * i).sum)
   }
 
-  test("count/min/max/sum push down completely: zero rows scanned") {
+  test("count/min/max/sum over pushed bounds equal the closed forms") {
     val df = src(1000000)
       .filter($"id" >= 100L && $"id" < 900000L)
       .agg(count(lit(1)).as("n"), min($"id").as("mn"),
         max($"id").as("mx"), sum($"id").as("s"))
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("AGG-pushdown"), plan)
     val r = df.as[(Long, Long, Long, Long)].head()
     val (lo, hi) = (100L, 900000L)
     assert(r === ((hi - lo, lo, hi - 1, (lo + hi - 1) * (hi - lo) / 2)))
   }
 
   test("aggregates the source cannot answer fall back to a real scan") {
-    // sum(squared) has no closed form here → normal columnar scan path
+    // the source answers no aggregate itself → the normal columnar scan
     val df = src(10000).agg(sum($"squared").as("s2"))
     val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("AGG-pushdown"), plan)
+    assert(plan.contains("GraftRange layout=[0,10000)x32"), plan)
     assert(df.as[Long].head() === (0L until 10000L).map(i => i * i).sum)
   }
 
